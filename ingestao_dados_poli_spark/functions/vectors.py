@@ -48,11 +48,6 @@ def l2_distance(a: Column | str, b: Column | str) -> Column:
     return F.sqrt(F.aggregate(diffs, F.lit(0.0), lambda acc, v: acc + v))
 
 
-def l2_normalize(a: Column | str) -> Column:
-    n = norm(a)
-    return F.transform(_c(a), lambda v: v / n)
-
-
 def quantize_int8(a: Column | str) -> Column:
     """Symmetric per-vector int8 quantization: scale = max|x|/127,
     q_i = floor(x_i/scale + 0.5) (round-half-up via floor — the form

@@ -33,7 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ingestao_dados_poli_spark.functions.text import normalize_text, shingles
+from ingestao_dados_poli_spark.functions.text import normalize_text
 from ingestao_dados_poli_spark.partitioning import fan_out
 
 
@@ -158,6 +158,7 @@ def _bucket_pairs_capped(docs_col: Column, max_bucket_size: int) -> Column:
 
 
 _BPC_CACHE: dict[tuple[str, int], Column] = {}
+_bpc_gateway = None  # the py4j gateway the cached Columns belong to
 
 
 def _bucket_pairs_capped_by_name(col_name: str, max_bucket_size: int) -> Column:
@@ -165,9 +166,17 @@ def _bucket_pairs_capped_by_name(col_name: str, max_bucket_size: int) -> Column:
     assembles a few hundred py4j Column objects (~0.5 s of driver build
     time per call, measured r08 cProfile on q124), and the resulting
     tree is a pure function of (column name, cap) — an immutable
-    unresolved expression that every plan can share. The py4j gateway
-    JVM outlives SparkSession restarts in-process, so cached exprs stay
-    valid across sessions."""
+    unresolved expression that every plan can share. The cached Column
+    holds py4j references into ONE gateway JVM; clearing
+    ``SparkContext._gateway`` (a full session restart) launches a new
+    JVM where those references are dead, so the cache is tied to the
+    gateway's identity: a new gateway empties it."""
+    global _bpc_gateway
+    from pyspark import SparkContext
+
+    if SparkContext._gateway is not _bpc_gateway:
+        _BPC_CACHE.clear()
+        _bpc_gateway = SparkContext._gateway
     key = (col_name, max_bucket_size)
     c = _BPC_CACHE.get(key)
     if c is None:
@@ -387,46 +396,18 @@ def shingle_hashes_udf(k: int):
 
 # -------------------------------------------------------------- MinHash
 
-def _minhash_from_hashes_udf(num_hashes: int):
-    """Arrow-batched MinHash kernel over pre-hashed shingles.
+def _minhash_from_token_hashes_udf(num_hashes: int, k: int):
+    """Fused MinHash kernel: token hashes → rolling k-gram hashes →
+    permutation mins, one Arrow pass (a separate shingle-hash UDF would
+    cross Python twice per row).
 
     The num_hashes 'hash functions' are universal-hash permutations of
-    ONE base xxhash64 per shingle: h_i(x) = a_i*h(x) + b_i (mod 2^64) —
-    the standard datasketch-style construction. The JVM hashes each
-    shingle ONCE; numpy derives all permutations and takes mins in a
-    vectorized pass. (The per-function `array_min(transform(...))` fold
-    is interpreted per element — measured ~60 µs per fold, which at
-    num_hashes folds per row dominates the job.)
-    Coefficients are fixed odd/arbitrary constants from a seeded PRNG →
-    stable across processes.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    rng = np.random.RandomState(0x5EED)
-    a = (rng.randint(0, 2**62, size=num_hashes).astype(np.uint64) * 2 + 1)  # odd
-    b = rng.randint(0, 2**62, size=num_hashes).astype(np.uint64)
-
-    @pandas_udf("array<long>")
-    def sig(hs: pd.Series) -> pd.Series:
-        out = []
-        sentinel = np.full(num_hashes, np.iinfo(np.int64).max)
-        with np.errstate(over="ignore"):
-            for h in hs:
-                if h is None or len(h) == 0:  # null/empty doc → max-sentinel sig
-                    out.append(sentinel)
-                    continue
-                hv = np.asarray(h, dtype=np.int64).view(np.uint64)  # (T,)
-                perms = hv[:, None] * a[None, :] + b[None, :]  # (T, num_hashes) mod 2^64
-                out.append(perms.min(axis=0).view(np.int64))
-        return pd.Series(out)
-
-    return sig
-
-
-def _minhash_from_token_hashes_udf(num_hashes: int, k: int):
-    """Fused kernel: token hashes → rolling k-gram hashes → permutation
-    mins, one Arrow pass (chaining shingle_hashes_udf into
-    _minhash_from_hashes_udf would cross Python twice per row)."""
+    ONE base hash per shingle: h_i(x) = a_i*h(x) + b_i (mod 2^64) —
+    the standard datasketch-style construction; numpy derives all
+    permutations and takes mins in a vectorized pass (a per-function
+    `array_min(transform(...))` fold is interpreted per element,
+    measured ~60 µs per fold). Coefficients come from a seeded PRNG →
+    stable across processes."""
     from pyspark.sql.functions import pandas_udf
 
     coefs = _shingle_coefs(k)
@@ -465,25 +446,6 @@ def _minhash_from_token_hashes_udf(num_hashes: int, k: int):
         return pd.Series(list(out))
 
     return sig
-
-
-def minhash_signature(
-    text_col: Column | str, num_hashes: int = 64, k: int = 5, pre_shingled: bool = False
-) -> Column:
-    """array<bigint> MinHash signature over word k-shingles.
-
-    Shingles are hashed once with JVM xxhash64 during the scan; the
-    num_hashes universal-hash permutations and mins run in an
-    Arrow-batched numpy kernel (see _minhash_from_hashes_udf for why
-    not higher-order column functions). Pass ``pre_shingled=True`` when
-    ``text_col`` is already an array of shingles.
-    """
-    if pre_shingled:
-        sh = F.col(text_col) if isinstance(text_col, str) else text_col
-    else:
-        sh = shingles(text_col, k=k)
-    base = F.transform(sh, lambda s: F.xxhash64(s))
-    return _minhash_from_hashes_udf(num_hashes)(base).alias("minhash")
 
 
 def minhash_bands(sig_col: Column | str, num_bands: int, rows_per_band: int) -> Column:

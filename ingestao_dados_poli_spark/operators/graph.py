@@ -562,8 +562,10 @@ def label_propagation(
 
     Per round: one join of the symmetrized edge list against current
     labels (hash-uniform on node id), one map-side-combined
-    (node, label) count, one per-node window rank to pick the
-    winner, and a left join back so ISOLATED nodes keep their label.
+    (node, label) count, one map-side-combined per-node
+    ``min(struct(-count, label))`` hash aggregation to pick the winner
+    (the argmax with the smallest-label tie-break, no sort), and a left
+    join back so ISOLATED nodes keep their label.
     ``localCheckpoint`` cuts lineage each round like the other
     iterative operators. Rounds is a cap, not a convergence test —
     LPA on adversarial graphs can oscillate under synchronous update,

@@ -28,13 +28,6 @@ from pyspark.sql import functions as F
 _CNT = "state_cnt"
 
 
-def _state_cols(measures: Sequence[str]) -> list[str]:
-    cols = [_CNT]
-    for m in measures:
-        cols += [f"{m}_sum", f"{m}_min", f"{m}_max"]
-    return cols
-
-
 def partial_aggregate(
     df: DataFrame, keys: Sequence[str], measures: Sequence[str]
 ) -> DataFrame:

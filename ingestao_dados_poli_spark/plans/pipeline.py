@@ -93,7 +93,3 @@ class Pipeline:
         if self.suite is not None:
             df.unpersist()
         return report
-
-
-def run_all(spark: SparkSession, pipelines: list[Pipeline]) -> list[dict[str, Any]]:
-    return [p.run(spark) for p in pipelines]

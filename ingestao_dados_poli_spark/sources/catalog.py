@@ -50,13 +50,5 @@ class Catalog:
             self.load(spark, name).createOrReplaceTempView(name)
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names=TPCH_TABLES
-) -> dict[str, DataFrame]:
-    """Load the driver's synthetic star schema from one sf directory."""
-    cat = Catalog(root=sf_dir)
-    return {name: cat.load(spark, name) for name in names}
-
-
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")

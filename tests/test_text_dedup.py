@@ -329,3 +329,17 @@ def test_bucket_pairs_capped_properties(spark):
         assert len({find(m) for m in members}) == 1, (size, cap)
         if size <= cap:
             assert got == exhaustive, (size, cap)
+
+
+def test_bucket_pairs_cache_follows_gateway(spark, monkeypatch):
+    """Cached Columns hold py4j refs into one gateway JVM; a new gateway
+    (a full session restart clears SparkContext._gateway) must get a
+    freshly built Column, not the dead refs of the old JVM."""
+    from pyspark import SparkContext
+
+    first = DD._bucket_pairs_capped_by_name("_docs", 7)
+    assert DD._bucket_pairs_capped_by_name("_docs", 7) is first
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    fresh = DD._bucket_pairs_capped_by_name("_docs", 7)
+    assert fresh is not first
+    assert DD._bucket_pairs_capped_by_name("_docs", 7) is fresh
