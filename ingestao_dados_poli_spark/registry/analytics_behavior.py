@@ -8,6 +8,7 @@ verbatim. Registration happens via the shared `q` decorator from
 `._base`, so importing this module populates QUERIES/ORACLES.
 """
 
+from ingestao_dados_poli_spark.operators.quantiles import exact_percentiles
 from ingestao_dados_poli_spark.registry._base import *  # noqa: F401,F403
 
 # ------------- 107. EXISTS-gated priority count (TPC-H Q4 shape)
@@ -1411,23 +1412,21 @@ def q217_kll_quantile_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial→combine shape a 1000-executor tree aggregation runs), so
     price-distribution quantiles come from one pass and KB-sized
     state. Self-assert (q129 pattern): each sketch quantile's EXACT
-    rank — recomputed against the data in a second scalar agg, not the
+    rank — counted against the data in the percentiles' bucket pass, not the
     sketch's own claim — must sit within 3% normalized rank of the
     target (k=200 guarantees ~1.65% at 99% confidence); violation
     raises. Output pins exact interpolated percentiles over integer
     cents (midpoints are binary-exact — the q187/q215 trick), which is
-    what the DuckDB oracle pins too. Driver traffic: two scalar
-    rows."""
+    what the DuckDB oracle pins too. Driver traffic: bucket-sized
+    histograms."""
     li = _t(spark, sf_dir, "lineitem").select(
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
         F.pmod(F.col("l_orderkey"), F.lit(8)).alias("slice"),
     )
-    # cached: the 2-column projection is read by exactly two jobs
-    # (sketch build, then combined percentile+rank audit) — one disk
-    # scan instead of three, the rest served from memory. fan_out
-    # FIRST (r07): the cache inherits the scan's partitioning, and a
-    # one-row-group source would pin both the KLL build and the exact
-    # percentile's value-buffer sort to a single core (§2.5).
+    ps = [0.25, 0.5, 0.75, 0.95]
+    # cached: every pass below reads it. fan_out FIRST (r07): the cache
+    # inherits the scan's partitioning, and a one-row-group source
+    # would pin every pass to a single core (§2.5).
     li = fan_out(li).persist()
     try:
         srow = (
@@ -1441,126 +1440,29 @@ def q217_kll_quantile_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("merged")
             )
             .select(
-                *[
-                    F.expr(
-                        f"kll_sketch_get_quantile_bigint(merged, {qq}d)"
-                    ).alias(f"v{tag}")
-                    for qq, tag in [
-                        (0.25, 25), (0.5, 50), (0.75, 75), (0.95, 95),
-                    ]
-                ],
+                *[F.expr(f"kll_sketch_get_quantile_bigint(merged, {p}d)") for p in ps]
             )
             .collect()[0]
         )
-        # Exact percentiles by BUCKETED SELECTION (r08), not a global
-        # percentile() agg: the agg's final single-task merge folded 32
-        # per-partition value->count maps and sorted ~583k distinct
-        # values on ONE core (drill: a 1.26 s job = 40% of the query;
-        # at 100 TB that serial buffer is an OOM, not just a straggler).
-        # Selection plan — everything parallel, driver traffic bounded:
-        #  1. one map-side-combined groupBy over ~2.7k fixed-width value
-        #     buckets (cents div 4096) collects (bucket, count) plus the
-        #     4 exact rank counts for the sketch audit;
-        #  2. the cumulative bucket walk (driver, 2.7k rows) locates the
-        #     <=2 buckets bracketing each interpolation index;
-        #  3. one filtered pass over the cached projection fetches ONLY
-        #     those buckets' value histograms (~200 rows/bucket) and the
-        #     order statistics come off the sorted slice.
-        # Interpolation replicates Spark's percentile() formula —
-        # pos = p*(n-1); (hi-pos)*v[lo] + (pos-lo)*v[hi]; lo==hi ->
-        # v[lo] — verified bit-exact against F.percentile at sf0.001
-        # and sf0.01 (and the DuckDB oracle hash pins it at all SFs).
-        targets = [(0.25, 25), (0.5, 50), (0.75, 75), (0.95, 95)]
-        B = 4096
-        bh = (
-            li.groupBy(F.expr(f"cents div {B}").alias("b"))
-            .agg(
-                F.count(F.lit(1)).alias("cnt"),
-                *[
-                    F.sum(
-                        F.when(
-                            F.col("cents") <= F.lit(int(srow[f"v{tag}"])), 1
-                        ).otherwise(0)
-                    ).alias(f"s{tag}")
-                    for _, tag in targets
-                ],
-            )
-            .collect()
-        )
-        bh.sort(key=lambda r: r["b"])
-        n = sum(r["cnt"] for r in bh)
-        ranks = {tag: sum(r[f"s{tag}"] for r in bh) / n for _, tag in targets}
-        # bracketing order-statistic indices (0-based), then the bucket
-        # holding each one via the cumulative walk
-        idxs = set()
-        import math as _math
-
-        positions = {}
-        for qq, tag in targets:
-            pos = qq * (n - 1)
-            positions[tag] = pos
-            idxs.add(_math.floor(pos))
-            idxs.add(_math.ceil(pos))
-        need_buckets = set()
-        by_idx = {}
-        cum = 0
-        it = iter(bh)
-        r = next(it)
-        for k in sorted(idxs):
-            while cum + r["cnt"] <= k:
-                cum += r["cnt"]
-                r = next(it)
-            by_idx[k] = (r["b"], k - cum)  # (bucket, local rank)
-            need_buckets.add(r["b"])
-        slice_hist = (
-            li.filter(
-                F.expr(f"cents div {B}").isin(*[int(b) for b in need_buckets])
-            )
-            .groupBy("cents")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        )
+        # bucketed selection, not a percentile() agg sorting ~583k values
+        # on ONE core; the exact ranks are counted in its bucket pass
+        audit = {
+            f"s{i}": F.count_if(F.col("cents") <= int(v)) for i, v in enumerate(srow)
+        }
+        pct, sums = exact_percentiles(
+            li, [], "cents", ps, 4096, extra={"n": F.count(F.lit(1)), **audit}
+        )[()]
     finally:
         li.unpersist()
-    # order statistics within the fetched buckets: walk each bucket's
-    # value histogram in cents order
-    per_bucket: dict[int, list] = {}
-    for row_ in sorted(slice_hist, key=lambda r: r["cents"]):
-        per_bucket.setdefault(row_["cents"] // B, []).append(row_)
-    val_at: dict[int, int] = {}
-    for k, (b, local) in by_idx.items():
-        c = 0
-        for row_ in per_bucket[b]:
-            c += row_["cnt"]
-            if c > local:
-                val_at[k] = row_["cents"]
-                break
-    pct = {}
-    for qq, tag in targets:
-        pos = positions[tag]
-        lo, hi = _math.floor(pos), _math.ceil(pos)
-        if lo == hi:
-            pct[tag] = float(val_at[lo])
-        else:
-            pct[tag] = (hi - pos) * val_at[lo] + (pos - lo) * val_at[hi]
-    for qq, tag in targets:
-        r = ranks[tag]
-        if abs(r - qq) > 0.03:
-            raise AssertionError(f"kll quantile q{tag} has exact rank {r}")
+    n = sums["n"]
+    for i, p in enumerate(ps):
+        if abs(sums[f"s{i}"] / n - p) > 0.03:
+            raise AssertionError(f"kll quantile p{p} has exact rank {sums[f's{i}']/n}")
     return _lit_df(
         spark,
         "n_lines long, p25_cents double, p50_cents double, p75_cents double,"
         " p95_cents double, sketch_rank_within_3pct boolean",
-        [
-            (
-                int(n),
-                pct[25],
-                pct[50],
-                pct[75],
-                pct[95],
-                True,
-            )
-        ],
+        [(int(n), *pct, True)],
     )
 
 

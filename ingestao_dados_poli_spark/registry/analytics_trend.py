@@ -8,6 +8,7 @@ verbatim. Registration happens via the shared `q` decorator from
 `._base`, so importing this module populates QUERIES/ORACLES.
 """
 
+from ingestao_dados_poli_spark.operators.quantiles import weighted_median
 from ingestao_dados_poli_spark.registry._base import *  # noqa: F401,F403
 
 # --------------------- 135. bigram next-event model: train/eval
@@ -863,81 +864,19 @@ def q264_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact WEIGHTED median per group (quantity-weighted price): the
     smallest value whose cumulative weight reaches half the group
     total — the robust center percentile_approx can only approximate
-    and plain median ignores weights for. Runs on the DISTINCT-VALUE
-    histogram (one map-side-combined groupBy collapses the fact table
-    to (group, value, weight) cells), so the cumulative window scans
-    value-cardinality rows, never raw rows — the q248 derivation
-    specialized to the 50% crossing point. Pure integer comparison
-    (2*cumw >= total), no interpolation, no floats."""
+    and plain median ignores weights for. Bucketed selection over cents
+    div 4096 (`quantiles.weighted_median`): no per-group sort, pure
+    integer comparison (2*cumw >= total), no floats."""
     li = _t(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("flag"),
-        F.round(F.col("l_extendedprice") * 100)
-        .cast("long")
-        .alias("cents"),
+        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
         F.col("l_quantity").cast("long").alias("w"),
     )
-    # Exact weighted median by BUCKETED SELECTION (r08, the q217
-    # discipline): the old form exchanged the full (flag, cents)
-    # distinct-value histogram (~580k cells) and ran the cumulative
-    # window as ONE sorted scan per flag — 3 tasks each sorting ~190k
-    # cells serially, and at 100 TB that per-group sort is a straggler
-    # by construction. Selection plan, everything map-side-combined and
-    # parallel, driver traffic bounded by bucket counts, not rows:
-    #  1. one groupBy over (flag, cents div 4096) — per-flag weight
-    #     mass per fixed-width value bucket (collect bounded by
-    #     #flags x value_range/4096, ~7.5k rows here);
-    #  2. driver walk per flag finds the single bucket where the
-    #     cumulative weight crosses half the total (pure integer
-    #     comparison, same 2*cum >= total rule);
-    #  3. one filtered pass fetches ONLY the crossing buckets' exact
-    #     (cents, weight) cells (<= 4096 cents values per flag) and the
-    #     driver walks them in cents order to the crossing cell.
-    # Same integers, same tie semantics (smallest cents whose 2*cumw
-    # reaches the total); the oracle hash pins it at every SF.
-    B = 4096
-    bh = (
-        li.groupBy("flag", F.expr(f"cents div {B}").alias("b"))
-        .agg(F.sum("w").alias("bw"))
-        .collect()
-    )
-    per_flag: dict[str, list] = {}
-    for r in bh:
-        per_flag.setdefault(r["flag"], []).append((r["b"], r["bw"]))
-    crossing: dict[str, tuple[int, int]] = {}
-    totals: dict[str, int] = {}
-    for flag, cells in per_flag.items():
-        cells.sort()
-        tw = sum(bw for _, bw in cells)
-        totals[flag] = tw
-        cum = 0
-        for b, bw in cells:
-            if 2 * (cum + bw) >= tw:
-                crossing[flag] = (b, cum)
-                break
-            cum += bw
-    conds = [
-        f"(flag = '{flag}' AND cents div {B} = {b})"
-        for flag, (b, _) in sorted(crossing.items())
-    ]
-    cells_rows = (
-        li.filter(F.expr(" OR ".join(conds)))
-        .groupBy("flag", "cents")
-        .agg(F.sum("w").alias("w"))
-        .collect()
-    )
-    by_flag: dict[str, list] = {}
-    for r in cells_rows:
-        by_flag.setdefault(r["flag"], []).append((r["cents"], r["w"]))
-    out: list[tuple] = []
-    for flag in sorted(totals):
-        cum = crossing[flag][1]
-        for cents, w in sorted(by_flag[flag]):
-            cum += w
-            if 2 * cum >= totals[flag]:
-                out.append((flag, cents, totals[flag]))
-                break
+    med = weighted_median(li, ["flag"], "cents", "w", 4096)
     return _lit_df(
-        spark, "flag string, wmedian_cents bigint, total_weight bigint", out
+        spark,
+        "flag string, wmedian_cents bigint, total_weight bigint",
+        [(g[0], m, total) for g, (m, total) in med.items()],
     )
 
 
@@ -1185,7 +1124,7 @@ def q285_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     outlier. Exactness: slopes truncate to integer micro BEFORE the
     median (both engines rank identical integers; the lower median —
     k = (m+1) div 2 — is picked by a cumulative-count crossing on the
-    distinct-value histogram, q264's weighted-median machinery, no
+    distinct-value histogram (the cumulative-weight rule of q264), no
     percentile interpolation); the intercept is the same exact median
     over per-week residuals against the chosen slope. Scale shape:
     the O(n²) pair join runs on the WEEKLY aggregate — a few hundred
@@ -1517,7 +1456,7 @@ def q292_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     funnels (q108) and transition matrices (q188) don't give. Exact
     order statistics use the ceil-rank convention k_q = ceil(q·m)
     picked off a cumulative-count walk over the DISTINCT-latency
-    histogram (q264's machinery): integer seconds in, integer seconds
+    histogram (q264's crossing rule): integer seconds in, integer seconds
     out, no percentile interpolation for engines to disagree on.
     Scale shape: first-touch collapse is one map-side-combined
     groupBy per event type, the join runs at user grain, and the

@@ -7,6 +7,7 @@ block is verbatim; registration happens via the shared `q` decorator
 from `._base`, so importing this module populates QUERIES/ORACLES.
 """
 
+from ingestao_dados_poli_spark.operators.quantiles import exact_percentiles
 from ingestao_dados_poli_spark.registry._base import *  # noqa: F401,F403
 
 
@@ -628,132 +629,14 @@ def q42_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles (Spark `percentile` == DuckDB
     `quantile_cont`). The approx_percentile variant is the 100 TB path;
     exact is used here because it is oracle-checkable."""
-    # Exact percentiles by BUCKETED SELECTION (r08, the q217/q264
-    # discipline): F.percentile's partial aggregate buffers EVERY value
-    # of its partition and the final merge per group sorts them on one
-    # core — a per-group straggler by construction at scale. Selection
-    # plan, all map-side-combined:
-    #  1. l_quantity takes ~50 distinct values — its per-flag value
-    #     histogram IS driver-sized (collect bounded by
-    #     #flags x #distinct_qty, ~150 rows), so the median's order
-    #     statistics come straight off the histogram walk;
-    #  2. l_extendedprice (~580k distinct) buckets by price div 64
-    #     (collect bounded by #flags x range/64, ~5k rows); the driver
-    #     walk finds the <=2 buckets bracketing the p90 interpolation
-    #     indices, one filtered fetch pulls only those buckets' exact
-    #     per-value counts;
-    #  3. interpolation replicates Spark's percentile() formula —
-    #     pos = p*(n-1); (hi-pos)*v[lo] + (pos-lo)*v[hi] — on the raw
-    #     doubles (verified bit-exact against F.percentile at
-    #     sf0.01/sf0.1; multiplication commutes bit-exactly in IEEE, so
-    #     the term order matches Percentile.scala), and F.round applies
-    #     to the _lit_df literal exactly as it did to the agg output.
-    import math as _math
-
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_returnflag", "l_quantity", "l_extendedprice"
-    )
-
-    def _order_stats(hist, idxs):
-        """hist: sorted (value, count); idxs: 0-based ranks -> value."""
-        out, cum = {}, 0
-        it = iter(hist)
-        v, c = next(it)
-        for k in sorted(idxs):
-            while cum + c <= k:
-                cum += c
-                v, c = next(it)
-            out[k] = v
-        return out
-
-    def _interp(val_at, pos):
-        lo, hi = _math.floor(pos), _math.ceil(pos)
-        if lo == hi:
-            return float(val_at[lo])
-        return (hi - pos) * val_at[lo] + (pos - lo) * val_at[hi]
-
-    qh = (
-        li.filter(F.col("l_quantity").isNotNull())
-        .groupBy("l_returnflag", "l_quantity")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    )
-    qty_hist: dict[str, list] = {}
-    for r in qh:
-        qty_hist.setdefault(r["l_returnflag"], []).append(
-            (r["l_quantity"], r["cnt"])
-        )
-    medians: dict[str, float] = {}
-    for flag, hist in qty_hist.items():
-        hist.sort()
-        n = sum(c for _, c in hist)
-        pos = 0.5 * (n - 1)
-        stats = _order_stats(hist, {_math.floor(pos), _math.ceil(pos)})
-        medians[flag] = _interp(stats, pos)
-
-    B = 64
-    bh = (
-        li.filter(F.col("l_extendedprice").isNotNull())
-        .groupBy(
-            "l_returnflag",
-            F.floor(F.col("l_extendedprice") / B).alias("b"),
-        )
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    )
-    buckets: dict[str, list] = {}
-    for r in bh:
-        buckets.setdefault(r["l_returnflag"], []).append((r["b"], r["cnt"]))
-    need: dict[str, tuple] = {}  # flag -> (pos, {idx: (bucket, local)})
-    need_pairs = set()
-    for flag, cells in buckets.items():
-        cells.sort()
-        n = sum(c for _, c in cells)
-        pos = 0.9 * (n - 1)
-        by_idx, cum = {}, 0
-        it = iter(cells)
-        b, c = next(it)
-        for k in sorted({_math.floor(pos), _math.ceil(pos)}):
-            while cum + c <= k:
-                cum += c
-                b, c = next(it)
-            by_idx[k] = (b, k - cum)
-            need_pairs.add((flag, b))
-        need[flag] = (pos, by_idx)
-    conds = " OR ".join(
-        f"(l_returnflag = '{flag}' AND floor(l_extendedprice / {B}) = {b})"
-        for flag, b in sorted(need_pairs)
-    )
-    cells_rows = (
-        li.filter(F.expr(conds))
-        .groupBy("l_returnflag", "l_extendedprice")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    )
-    per_bucket: dict[tuple, list] = {}
-    for r in cells_rows:
-        per_bucket.setdefault(
-            (r["l_returnflag"], _math.floor(r["l_extendedprice"] / B)), []
-        ).append((r["l_extendedprice"], r["cnt"]))
-    p90s: dict[str, float] = {}
-    for flag, (pos, by_idx) in need.items():
-        val_at = {}
-        for k, (b, local) in by_idx.items():
-            cum = 0
-            for v, c in sorted(per_bucket[(flag, b)]):
-                cum += c
-                if cum > local:
-                    val_at[k] = v
-                    break
-        p90s[flag] = _interp(val_at, pos)
-
-    out = [
-        (flag, medians[flag], p90s[flag]) for flag in sorted(medians)
-    ]
+    li = _t(spark, sf_dir, "lineitem")
+    # l_quantity has ~50 distinct values: an exact histogram, one job
+    qty = exact_percentiles(li, ["l_returnflag"], "l_quantity", [0.5], None)
+    price = exact_percentiles(li, ["l_returnflag"], "l_extendedprice", [0.9], 64)
     return _lit_df(
         spark,
         "l_returnflag string, median_qty double, p90_price double",
-        out,
+        [(g[0], qty[g].values[0], price[g].values[0]) for g in qty],
     ).select(
         "l_returnflag",
         F.round(F.col("median_qty"), 4).alias("median_qty"),

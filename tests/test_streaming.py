@@ -85,8 +85,11 @@ def test_sessionize_stateful(spark, event_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM sessions").collect()
+    try:
+        q.awaitTermination(120)
+        rows = spark.sql("SELECT * FROM sessions").collect()
+    finally:
+        q.stop()
     # availableNow processes all input in one batch; sessions still open
     # at end-of-stream stay in state, so we assert on the CLOSED one:
     closed = [r for r in rows if r.user_id == 1]
@@ -114,8 +117,11 @@ def test_sessionize_custom_column_names(spark, event_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM sessions_renamed").collect()
+    try:
+        q.awaitTermination(120)
+        rows = spark.sql("SELECT * FROM sessions_renamed").collect()
+    finally:
+        q.stop()
     closed = [r for r in rows if r.user_id == 1]
     assert len(closed) >= 1
     first = min(closed, key=lambda r: r.session_start)
