@@ -1,11 +1,17 @@
 """Every reference citation in repo docstrings/comments must resolve.
 
-SURVEY.md's contract is that each ``file:line`` citation into
-``/root/reference`` points at a real file and a real line. Round-2
+SURVEY.md's contract is that each ``file:line`` citation into the six
+reference notebooks points at a real file and a real line. Round-2
 verdict found one fabricated citation; this test makes that class of
 defect impossible to reintroduce: it extracts every citation-shaped
 token from the package source (and README.md / SURVEY.md) and asserts
-the file exists and every cited line number is within the file.
+the file is one of the six and every cited line number is within it.
+
+The file names and line counts come from the SURVEY.md §0 table (the
+manifest), which PAPER.md repeats, so the check runs on every host.
+Where the live checkout exists at ``/root/reference``, the manifest is
+also checked against it: every notebook present, with the table's line
+count.
 
 Abbreviations follow SURVEY.md §0: ``0a``/``0b`` are the two
 ``gerenciando-dados-externos`` notebooks, ``1``–``4`` the four ``etl``
@@ -18,11 +24,11 @@ from __future__ import annotations
 import re
 from pathlib import Path
 
-import pytest
-
 REFERENCE = Path("/root/reference")
 REPO = Path(__file__).resolve().parent.parent
 PKG = REPO / "ingestao_dados_poli_spark"
+SURVEY = REPO / "SURVEY.md"
+PAPER = REPO / "PAPER.md"
 
 # abbrev -> real reference file
 ABBREV = {
@@ -48,19 +54,39 @@ CITE_RE = re.compile(
 )
 
 
-def _resolve(stem: str, suffix: str | None) -> Path | None:
-    rel = ABBREV[stem]
-    path = REFERENCE / rel
-    if suffix:  # full-filename form must match the real file exactly
-        if Path(rel).name != stem + suffix:
-            return None
-    return path
+# The §0 manifest: "Total surface: N files, M lines." and one table row
+# per notebook, "| `<file>` | <LoC> | <role> |".
+TOTAL_RE = re.compile(r"^Total surface: (\d+) files, (\d+) lines\.$", re.M)
+ROW_RE = re.compile(r"^\| `([^`]+\.py)` \| (\d+) \|", re.M)
+
+
+def _manifest(doc: Path) -> tuple[list[tuple[str, int]], tuple[int, int]]:
+    """The §0 table of *doc*: its (file, LoC) rows and stated (files, lines)."""
+    text = doc.read_text()
+    start = text.index("## 0. What the reference IS")
+    section = text[start : text.index("\n## 1.", start)]
+    total = TOTAL_RE.search(section)
+    assert total, f"{doc.name} §0 has no 'Total surface' line"
+    rows = [(f, int(n)) for f, n in ROW_RE.findall(section)]
+    return rows, (int(total.group(1)), int(total.group(2)))
 
 
 def _line_counts() -> dict[str, int]:
-    return {
-        k: len((REFERENCE / v).read_text().splitlines()) for k, v in ABBREV.items()
-    }
+    """Abbreviation -> line count, as the SURVEY.md §0 table states it."""
+    by_file = dict(_manifest(SURVEY)[0])
+    return {k: by_file[v] for k, v in ABBREV.items()}
+
+
+def _checkout_mismatches(root: Path, counts: dict[str, int]) -> list[str]:
+    """Where the checkout at *root* disagrees with the manifest *counts*."""
+    bad = []
+    for stem, rel in ABBREV.items():
+        path = root / rel
+        if not path.is_file():
+            bad.append(f"{rel}: missing")
+        elif (n := len(path.read_text().splitlines())) != counts[stem]:
+            bad.append(f"{rel}: {n} lines, manifest says {counts[stem]}")
+    return bad
 
 
 def _citation_sources() -> list[Path]:
@@ -69,15 +95,36 @@ def _citation_sources() -> list[Path]:
     return [f for f in files if f.exists()]
 
 
-def test_reference_exists() -> None:
-    assert REFERENCE.is_dir(), "reference checkout missing"
-    for rel in ABBREV.values():
-        assert (REFERENCE / rel).is_file(), rel
+def test_reference_exists(tmp_path: Path) -> None:
+    rows, (n_files, n_lines) = _manifest(SURVEY)
+    files = [f for f, _ in rows]
+    assert sorted(files) == sorted(ABBREV.values()), files
+    assert len(rows) == n_files, f"{len(rows)} rows, §0 states {n_files} files"
+    total = sum(n for _, n in rows)
+    assert total == n_lines, f"rows sum to {total}, §0 states {n_lines} lines"
+    assert _manifest(PAPER) == _manifest(SURVEY), "PAPER.md §0 differs from SURVEY.md"
+
+    # The checkout-agreement check, on a synthetic checkout built from
+    # the manifest: exact counts pass, one line short or a missing
+    # notebook fails.
+    counts = _line_counts()
+    for stem, rel in ABBREV.items():
+        (tmp_path / rel).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / rel).write_text("x\n" * counts[stem])
+    assert _checkout_mismatches(tmp_path, counts) == []
+    short = tmp_path / ABBREV["1"]
+    short.write_text("x\n" * (counts["1"] - 1))
+    assert _checkout_mismatches(tmp_path, counts) == [
+        f"{ABBREV['1']}: {counts['1'] - 1} lines, manifest says {counts['1']}"
+    ]
+    short.unlink()
+    assert _checkout_mismatches(tmp_path, counts) == [f"{ABBREV['1']}: missing"]
+
+    if REFERENCE.is_dir():
+        assert _checkout_mismatches(REFERENCE, counts) == []
 
 
 def test_every_citation_resolves() -> None:
-    if not REFERENCE.is_dir():
-        pytest.skip("reference checkout not present")
     counts = _line_counts()
     bad: list[str] = []
     n_checked = 0
@@ -86,13 +133,14 @@ def test_every_citation_resolves() -> None:
         for m in CITE_RE.finditer(text):
             stem, suffix, lines = m.group(1), m.group(2), m.group(3)
             where = f"{src.relative_to(REPO)}: '{m.group(0)}'"
-            if _resolve(stem, suffix) is None:
+            # the full-filename form must match the real file exactly
+            if suffix and Path(ABBREV[stem]).name != stem + suffix:
                 bad.append(f"{where} — filename does not match reference file")
                 continue
             n_checked += 1
             for part in lines.split(","):
                 lo, _, hi = part.partition("-")
-                for ln in (int(lo), int(hi) if hi else int(lo)):
+                for ln in map(int, (lo, hi) if hi else (lo,)):
                     if not (1 <= ln <= counts[stem]):
                         bad.append(
                             f"{where} — line {ln} out of range "
