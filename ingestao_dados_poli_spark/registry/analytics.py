@@ -104,10 +104,10 @@ def q103_arrow_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q104_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization through Spark's BUILT-IN session_window (dynamic-
     gap merging windows, one shuffle on the group key, streaming-ready
-    with a watermark) — the third sessionize implementation next to
-    q20's lag+running-sum SQL twin and q46/stream_ops' custom stateful
-    applyInPandasWithState, all three oracle-checked against the same
-    gap semantics. Built-in session_window splits when the inter-event
+    with a watermark) — the batch twin of q152's streaming
+    `stream_ops.session_window_counts`, next to q20's lag+running-sum
+    SQL twin; all three are oracle-checked against the same gap
+    semantics. Built-in session_window splits when the inter-event
     gap is >= the 30-minute gap (window end = last event + gap), which
     the oracle mirrors with an exact-timestamp interval comparison (not
     floored epoch seconds — micro-precision ties matter here)."""

@@ -472,7 +472,8 @@ def q19_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q20_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch sessionization (30-min idle gap) via lag + running sum —
-    the SQL-expressible twin of streaming sessionize()."""
+    the SQL-expressible twin of the built-in session_window path (q104
+    batch, q152 streaming via `stream_ops.session_window_counts`)."""
     ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)

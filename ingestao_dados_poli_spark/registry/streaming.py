@@ -2,13 +2,83 @@
 operators — windows, dedup, upsert, interval/as-of joins, MV
 maintenance (all oracled against batch equivalents).
 
-Split out of the former monolithic queries.py (round 5) — every
-block is verbatim; registration happens via the shared `q` decorator
-from `._base`, so importing this module populates QUERIES/ORACLES.
+Split out of the former monolithic queries.py (round 5); registration
+happens via the shared `q` decorator from `._base`, so importing this
+module populates QUERIES/ORACLES. Every stream here runs through
+`stream_ops.drain`; the helpers below hold the events source, the
+memory sink, the 2-file shard stream and the MV fold the queries share.
 """
 
+import uuid
+
+from pyspark.sql.streaming import StreamingQuery
+
+from ingestao_dados_poli_spark.operators import incremental as IC
 from ingestao_dados_poli_spark.registry._base import *  # noqa: F401,F403
 from ingestao_dados_poli_spark.registry._base import _scratch  # round-7: hoisted to _base
+from ingestao_dados_poli_spark.streaming import stream_ops as SO
+
+
+def _events_streams(
+    spark: SparkSession, sf_dir: str, n: int = 1
+) -> list[DataFrame]:
+    """``n`` independent file streams over the events table, sharing one
+    schema read. FileStreamSource wants a DIRECTORY, so each
+    glob-filters ``sf_dir`` to the one table. Call inside
+    ``events_compat``: a no-op on micro-precision data, it keeps the
+    legacy reader flag for the whole stream run (micro-batches re-read
+    the files) when the footer carries TIMESTAMP(NANOS)."""
+    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    return [
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
+        .transform(_events_ts)
+        for _ in range(n)
+    ]
+
+
+def _drain_to_memory(df: DataFrame, mode: str) -> StreamingQuery:
+    """Drain ``df`` over 2 state shards into a uniquely named memory
+    sink; read it back with ``spark.table(query.name)``."""
+    name = f"sink_{uuid.uuid4().hex[:8]}"
+    with SO.state_partitions(df.sparkSession, 2):
+        return SO.drain(
+            df.writeStream.format("memory").queryName(name).outputMode(mode)
+        )
+
+
+def _shard_stream(df: DataFrame, work: str) -> DataFrame:
+    """Write ``df`` as 2 files under ``work`` and stream them one file
+    per trigger: 2 REAL micro-batches over a finite changelog."""
+    path = f"{work}/shards"
+    df.repartition(2).write.mode("overwrite").parquet(path)
+    return SO.read_file_stream(
+        df.sparkSession, path, df.schema, max_files_per_trigger=1
+    )
+
+
+def _mv_fold(work: str):
+    """foreachBatch body of the streaming MV (q154, q190, q191): fold
+    each batch's partial count/sum/min/max of ``value`` per
+    ``event_type`` into versioned state parquet under ``work``
+    (`operators/incremental.py`). Returns ``(fold, state)``;
+    ``state[-1]`` is the latest state."""
+    keys, measures = ["event_type"], ["value"]
+    state: list[DataFrame] = []
+
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
+        delta = IC.partial_aggregate(batch_df, keys, measures)
+        merged = (
+            IC.merge_aggregates(state[-1], delta, keys, measures)
+            if state
+            else delta
+        )
+        out = f"{work}/state_v{batch_id}"
+        merged.write.mode("overwrite").parquet(out)
+        state.append(batch_df.sparkSession.read.parquet(out))
+
+    return fold, state
 
 
 # --------------------------------------------- 19. streaming end-to-end
@@ -25,8 +95,8 @@ from ingestao_dados_poli_spark.registry._base import _scratch  # round-7: hoiste
 )
 def q46_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The watermarked tumbling-window plan run through the ACTUAL
-    Structured Streaming engine (readStream → availableNow → memory
-    sink), oracle-checked against plain batch SQL.
+    Structured Streaming engine (readStream → drain → memory sink),
+    oracle-checked against plain batch SQL.
 
     Sound because the bounded single-file source forms one micro-batch,
     so the watermark never drops rows — the streaming result must equal
@@ -34,40 +104,11 @@ def q46_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     tumbling_counts() is the same code streaming/stream_ops.py ships for
     unbounded sources.
     """
-    import tempfile
-    import uuid
-
-    from ingestao_dados_poli_spark.streaming.stream_ops import (
-        state_partitions,
-        tumbling_counts,
-    )
-
-    # events_compat: no-op on micro-precision data; applies the scoped
-    # legacy reader flag for the whole stream run (micro-batches re-read
-    # the files) only when the footer carries TIMESTAMP(NANOS).
     with events_compat(spark, sf_dir):
-        path = f"{sf_dir}/events.parquet"
-        raw_schema = spark.read.parquet(path).schema
-        # FileStreamSource wants a DIRECTORY; glob-filter to the one table.
-        src = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-            .transform(_events_ts)
-        )
-        agg = tumbling_counts(src, window_len="1 hour", watermark="10 minutes")
-        name = f"q46_sink_{uuid.uuid4().hex[:8]}"
-        with state_partitions(spark, 2):
-            query = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .option("checkpointLocation", _scratch("q46_ck_"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination(300)
-        return spark.table(name).select(
+        [src] = _events_streams(spark, sf_dir)
+        agg = SO.tumbling_counts(src, window_len="1 hour", watermark="10 minutes")
+        sink = _drain_to_memory(agg, "complete")
+        return spark.table(sink.name).select(
             F.col("window_start").cast("string").alias("window_start"),
             "event_type",
             "n_events",
@@ -97,49 +138,21 @@ def q46_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q75_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window (1 h window / 30 min slide) aggregate through the
-    REAL Structured Streaming engine (readStream → availableNow →
-    memory sink), like q46 but overlapping windows: each event lands in
+    REAL Structured Streaming engine (readStream → drain → memory
+    sink), like q46 but overlapping windows: each event lands in
     exactly 2 windows. The oracle expands each row into its two window
     starts and re-aggregates — semantically identical to Spark's
     sliding window expansion. Compares count+sum, not avg: the data's
     values have 2-decimal resolution, so sums never sit on the 2-dp
     round boundary while averages (sum/count) routinely do — engine
     summation-order ulps flipped ~2.5% of rounded avgs."""
-    import tempfile
-    import uuid
-
-    from ingestao_dados_poli_spark.streaming.stream_ops import (
-        sliding_avg,
-        state_partitions,
-    )
-
-    # events_compat: no-op on micro-precision data; applies the scoped
-    # legacy reader flag for the whole stream run (micro-batches re-read
-    # the files) only when the footer carries TIMESTAMP(NANOS).
     with events_compat(spark, sf_dir):
-        path = f"{sf_dir}/events.parquet"
-        raw_schema = spark.read.parquet(path).schema
-        src = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-            .transform(_events_ts)
-        )
-        agg = sliding_avg(
+        [src] = _events_streams(spark, sf_dir)
+        agg = SO.sliding_avg(
             src, window_len="1 hour", slide="30 minutes", watermark="10 minutes"
         )
-        name = f"q75_sink_{uuid.uuid4().hex[:8]}"
-        with state_partitions(spark, 2):
-            query = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .option("checkpointLocation", _scratch("q75_ck_"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination(300)
-        return spark.table(name).select(
+        sink = _drain_to_memory(agg, "complete")
+        return spark.table(sink.name).select(
             F.col("window_start").cast("string").alias("window_start"),
             "event_type",
             "n_events",
@@ -166,43 +179,12 @@ def q78_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate back to exactly the single-copy batch numbers. State
     eviction for unbounded streams (dropDuplicatesWithinWatermark) is
     exercised in test_streaming."""
-    import tempfile
-    import uuid
-
-    from ingestao_dados_poli_spark.streaming.stream_ops import (
-        dedup_stream,
-        state_partitions,
-    )
-
-    # events_compat: no-op on micro-precision data; applies the scoped
-    # legacy reader flag for the whole stream run (micro-batches re-read
-    # the files) only when the footer carries TIMESTAMP(NANOS).
     with events_compat(spark, sf_dir):
-        raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-
-        def src():
-            return (
-                spark.readStream.schema(raw_schema)
-                .option("pathGlobFilter", "events.parquet")
-                .parquet(sf_dir)
-                .transform(_events_ts)
-            )
-
-        doubled = src().unionByName(src())
-        deduped = dedup_stream(doubled, ["event_id"])
-        name = f"q78_sink_{uuid.uuid4().hex[:8]}"
-        with state_partitions(spark, 2):
-            query = (
-                deduped.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .option("checkpointLocation", _scratch("q78_ck_"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination(300)
+        first, second = _events_streams(spark, sf_dir, 2)
+        deduped = SO.dedup_stream(first.unionByName(second), ["event_id"])
+        sink = _drain_to_memory(deduped, "append")
         return (
-            spark.table(name)
+            spark.table(sink.name)
             .groupBy("event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
@@ -230,28 +212,13 @@ def q78_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q89_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static enrichment: readStream(events) ⋈ broadcast static
     customer dim → watermarked 6 h tumbling aggregate, through the
-    REAL Structured Streaming engine (availableNow → memory sink).
+    REAL Structured Streaming engine (drained into a memory sink).
     The static side re-broadcasts per micro-batch (Spark's documented
     stream-static join model); at 100 TB/day the dim stays a
     broadcast, the stream never shuffles before the windowed agg.
     Oracle is the batch equivalent over the same tables."""
-    import tempfile
-    import uuid
-
-    from ingestao_dados_poli_spark.streaming.stream_ops import state_partitions
-
-    # events_compat: no-op on micro-precision data; applies the scoped
-    # legacy reader flag for the whole stream run (micro-batches re-read
-    # the files) only when the footer carries TIMESTAMP(NANOS).
     with events_compat(spark, sf_dir):
-        path = f"{sf_dir}/events.parquet"
-        raw_schema = spark.read.parquet(path).schema
-        src = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-            .transform(_events_ts)
-        )
+        [src] = _events_streams(spark, sf_dir)
         dim = F.broadcast(
             _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
         )
@@ -264,18 +231,8 @@ def q89_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("value").alias("sum_value"),
             )
         )
-        name = f"q89_sink_{uuid.uuid4().hex[:8]}"
-        with state_partitions(spark, 2):
-            query = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .option("checkpointLocation", _scratch("q89_ck_"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination(300)
-        return spark.table(name).select(
+        sink = _drain_to_memory(agg, "complete")
+        return spark.table(sink.name).select(
             F.col("window.start").cast("string").alias("window_start"),
             "c_mktsegment",
             "n_events",
@@ -311,14 +268,8 @@ def q91_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checks. At 100 TB the snapshot is a bucketed table on the
     merge key and each micro-batch pays one co-located window, not a
     rescan of history."""
-    import tempfile
-    import uuid
-
-    ev = _t(spark, sf_dir, "events")
     work = _scratch("q91_")
-    shard_dir = f"{work}/shards"
-    ev.repartition(2).write.mode("overwrite").parquet(shard_dir)
-
+    src = _shard_stream(_t(spark, sf_dir, "events"), work)
     snap_versions: list[str] = []
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
@@ -336,21 +287,8 @@ def q91_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged.write.mode("overwrite").parquet(out)
         snap_versions.append(out)
 
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(shard_dir)
-    )
-    from ingestao_dados_poli_spark.streaming.stream_ops import state_partitions
-
-    with state_partitions(spark, 2):
-        query = (
-            src.writeStream.foreachBatch(upsert)
-            .option("checkpointLocation", f"{work}/ck_{uuid.uuid4().hex[:8]}")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(300)
+    with SO.state_partitions(spark, 2):
+        SO.drain(src.writeStream.foreachBatch(upsert))
     assert len(snap_versions) >= 2, "expected multiple micro-batches"
     final = spark.read.parquet(snap_versions[-1])
     return final.select(
@@ -387,50 +325,20 @@ def q92_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     as event time advances — the property that lets this run forever
     at 100 TB/day while an unconstrained stream-stream join would
     buffer both streams whole. Oracle is the identical batch join."""
-    import tempfile
-    import uuid
-
-    from ingestao_dados_poli_spark.streaming.stream_ops import (
-        interval_join_streams,
-        state_partitions,
-    )
-
-    # events_compat: no-op on micro-precision data; applies the scoped
-    # legacy reader flag for the whole stream run (micro-batches re-read
-    # the files) only when the footer carries TIMESTAMP(NANOS).
     with events_compat(spark, sf_dir):
-        raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-
-        def ev_stream() -> DataFrame:
-            return (
-                spark.readStream.schema(raw_schema)
-                .option("pathGlobFilter", "events.parquet")
-                .parquet(sf_dir)
-                .transform(_events_ts)
-            )
-
-        errors = ev_stream().filter(F.col("event_type") == "error").select(
+        err_src, click_src = _events_streams(spark, sf_dir, 2)
+        errors = err_src.filter(F.col("event_type") == "error").select(
             "user_id", "ts", F.col("event_id").alias("err_id")
         )
-        clicks = ev_stream().filter(F.col("event_type") == "click").select(
+        clicks = click_src.filter(F.col("event_type") == "click").select(
             "user_id", "ts", F.col("event_id").alias("click_id")
         )
-        joined = interval_join_streams(
+        joined = SO.interval_join_streams(
             errors, clicks, keys=["user_id"], lookback="60 minutes",
             watermark="30 minutes",
         )
-        name = f"q92_sink_{uuid.uuid4().hex[:8]}"
-        with state_partitions(spark, 2):
-            query = (
-                joined.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .option("checkpointLocation", _scratch("q92_ck_"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination(300)
-        return spark.table(name).select(
+        sink = _drain_to_memory(joined, "append")
+        return spark.table(sink.name).select(
             "err_id",
             "click_id",
             F.col("l_user_id").alias("user_id"),
@@ -460,56 +368,22 @@ def q129_streaming_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     provider silently fell back to HDFS-backed (no rocksdb custom
     metrics in the query progress), the query raises — the gate goes
     red rather than green-by-accident on the wrong store."""
-    import os as _os
-    import shutil as _shutil
-    import uuid
-
-    from ingestao_dados_poli_spark.session import scoped_conf
-    from ingestao_dados_poli_spark.streaming.stream_ops import (
-        rocksdb_state,
-        state_partitions,
-        tumbling_counts,
-    )
-
     # Scoped, unlike _t()'s session-wide set: a batch DataFrame from _t
     # executes after _t returns so its conf must outlive the call, but
     # this stream runs to completion inside the block — the flag can be
     # restored the moment the last micro-batch commits.
     with events_compat(spark, sf_dir):
-        raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-        src = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-            .transform(_events_ts)
-        )
-        agg = tumbling_counts(src, window_len="1 day", watermark="10 minutes")
-        name = f"q129_sink_{uuid.uuid4().hex[:8]}"
-        # pid-scoped checkpoint dir, cleared on entry (a reused checkpoint
-        # would resume from committed offsets and emit nothing; a mkdtemp
-        # per call leaked one dir per run)
-        ck = f"/tmp/q129_ck_{_os.getpid()}"
-        _shutil.rmtree(ck, ignore_errors=True)
-        with state_partitions(spark, 2), rocksdb_state(
-            spark, bounded_memory_mb=512
-        ):
-            query = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .option("checkpointLocation", ck)
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination(300)
-            progress = query.lastProgress
-    ops = (progress or {}).get("stateOperators") or []
+        [src] = _events_streams(spark, sf_dir)
+        agg = SO.tumbling_counts(src, window_len="1 day", watermark="10 minutes")
+        with SO.rocksdb_state(spark, bounded_memory_mb=512):
+            sink = _drain_to_memory(agg, "complete")
+    ops = (sink.lastProgress or {}).get("stateOperators") or []
     custom = ops[0].get("customMetrics", {}) if ops else {}
     if not any(k.startswith("rocksdb") for k in custom):
         raise RuntimeError(
             f"RocksDB state store did not engage: {sorted(custom)[:5]}"
         )
-    return spark.table(name).select(
+    return spark.table(sink.name).select(
         F.col("window_start").cast("string").alias("window_start"),
         "event_type",
         "n_events",
@@ -545,47 +419,20 @@ def q152_streaming_session_window(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Built-in session_window run through the ACTUAL streaming engine
-    (readStream → availableNow → memory sink) — the streaming twin of
-    batch q104, completing the engine's sessionize matrix: lag+cumsum
-    SQL (q20), custom applyInPandasWithState (q46-family), batch
-    session_window (q104), and now MERGING session windows with
-    watermark state eviction on a real stream. Bounded single-batch
+    (readStream → drain → memory sink) — the streaming twin of batch
+    q104, completing the engine's sessionize matrix: lag+cumsum SQL
+    (q20), batch session_window (q104), and MERGING session windows
+    with watermark state eviction on a real stream. Bounded single-batch
     source + complete mode means the watermark drops nothing, so the
     streaming result must hash-equal the batch oracle — the
     batch/stream parity contract, again."""
-    import tempfile
-    import uuid
-
-    from ingestao_dados_poli_spark.streaming.stream_ops import (
-        session_window_counts,
-        state_partitions,
-    )
-
-    # events_compat: no-op on micro-precision data; applies the scoped
-    # legacy reader flag for the whole stream run (micro-batches re-read
-    # the files) only when the footer carries TIMESTAMP(NANOS).
     with events_compat(spark, sf_dir):
-        path = f"{sf_dir}/events.parquet"
-        raw_schema = spark.read.parquet(path).schema
-        src = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-            .transform(_events_ts)
+        [src] = _events_streams(spark, sf_dir)
+        agg = SO.session_window_counts(
+            src, gap="30 minutes", watermark="10 minutes"
         )
-        agg = session_window_counts(src, gap="30 minutes", watermark="10 minutes")
-        name = f"q152_sink_{uuid.uuid4().hex[:8]}"
-        with state_partitions(spark, 2):
-            query = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .option("checkpointLocation", _scratch("q152_ck_"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination(300)
-        return spark.table(name).select(
+        sink = _drain_to_memory(agg, "complete")
+        return spark.table(sink.name).select(
             "user_id",
             F.col("session_start").cast("string").alias("session_start"),
             F.col("session_end").cast("string").alias("session_end"),
@@ -619,44 +466,12 @@ def q154_streaming_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     state must equal the one-shot batch aggregate REGARDLESS of how
     rows were batched (count/sum/min/max are associative+commutative)
     — exactly what the oracle hash-checks."""
-    import tempfile
-
-    from ingestao_dados_poli_spark.operators import incremental as IC
-    from ingestao_dados_poli_spark.streaming.stream_ops import state_partitions
-
-    keys, measures = ["event_type"], ["value"]
-    ev = _t(spark, sf_dir, "events")
     work = _scratch("q154_")
-    shard_dir = f"{work}/shards"
-    ev.repartition(2).write.mode("overwrite").parquet(shard_dir)
-
-    state: list[DataFrame] = []
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        delta = IC.partial_aggregate(batch_df, keys, measures)
-        merged = (
-            IC.merge_aggregates(state[-1], delta, keys, measures)
-            if state
-            else delta
-        )
-        out = f"{work}/state_v{batch_id}"
-        merged.write.mode("overwrite").parquet(out)
-        state.append(batch_df.sparkSession.read.parquet(out))
-
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(shard_dir)
-    )
-    with state_partitions(spark, 2):
-        q_ = (
-            src.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", f"{work}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q_.awaitTermination(300)
-    final = IC.finalize(state[-1], measures)
+    src = _shard_stream(_t(spark, sf_dir, "events"), work)
+    fold, state = _mv_fold(work)
+    with SO.state_partitions(spark, 2):
+        SO.drain(src.writeStream.foreachBatch(fold))
+    final = IC.finalize(state[-1], ["value"])
     return final.select(
         "event_type",
         F.col("n").cast("long").alias("n"),
@@ -705,10 +520,6 @@ def q182_streaming_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle (a correlated LIMIT 1 subquery — DuckDB's decorrelated
     formulation of the same lookup) certifies. The streaming shape a
     price/fx/config enrichment job runs forever."""
-    import tempfile
-
-    from ingestao_dados_poli_spark.streaming.stream_ops import state_partitions
-
     ev = _t(spark, sf_dir, "events").filter(F.col("user_id") < 500)
     orders = _t(spark, sf_dir, "orders")
     ref = (
@@ -720,8 +531,7 @@ def q182_streaming_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("o_totalprice").alias("ref_price"))
     )
     work = _scratch("q182_")
-    shard_dir = f"{work}/shards"
-    ev.repartition(2).write.mode("overwrite").parquet(shard_dir)
+    src = _shard_stream(ev, work)
     outs: list[str] = []
 
     def enrich(batch_df: DataFrame, batch_id: int) -> None:
@@ -741,19 +551,8 @@ def q182_streaming_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).parquet(out)
         outs.append(out)
 
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(shard_dir)
-    )
-    with state_partitions(spark, 2):
-        q_ = (
-            src.writeStream.foreachBatch(enrich)
-            .option("checkpointLocation", f"{work}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q_.awaitTermination(300)
+    with SO.state_partitions(spark, 2):
+        SO.drain(src.writeStream.foreachBatch(enrich))
     res = spark.read.parquet(*outs)
     return res.agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
@@ -797,6 +596,28 @@ def _write_degraded_shards(ev: DataFrame, shard_dir: str) -> None:
     )
 
 
+def _drain_gated_mv(ev: DataFrame, work: str, suite):
+    """Stream ``ev``'s degraded shards (4 micro-batches) through the
+    quality-gated MV fold: each batch stages once under ``work`` and
+    only a certified batch folds; a degraded one moves to
+    ``work/quarantine``. Returns ``_mv_fold``'s ``(fold, state)``."""
+    spark = ev.sparkSession
+    _write_degraded_shards(ev, f"{work}/shards")
+    fold, state = _mv_fold(work)
+    body = SO.quality_gated_foreach_batch(
+        suite,
+        fold,
+        quarantine_dir=f"{work}/quarantine",
+        staging_dir=f"{work}/staging",
+    )
+    src = SO.read_file_stream(
+        spark, f"{work}/shards/s=*", ev.schema, max_files_per_trigger=1
+    )
+    with SO.state_partitions(spark, 2):
+        SO.drain(src.writeStream.foreachBatch(body))
+    return fold, state
+
+
 # ------------- 132. streaming MV maintenance behind the quality publish gate
 
 @q(
@@ -824,62 +645,23 @@ def q190_streaming_gated_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern): the query itself fails if the quarantine row count
     doesn't equal shard 2's, so a silently-published degraded batch
     can't return plausible rows."""
-    import tempfile
-
-    from ingestao_dados_poli_spark.operators import incremental as IC
     from ingestao_dados_poli_spark.quality import Rule, Suite
-    from ingestao_dados_poli_spark.streaming.stream_ops import (
-        quality_gated_foreach_batch,
-        state_partitions,
-    )
 
-    keys, measures = ["event_type"], ["value"]
-    ev = _t(spark, sf_dir, "events")
     work = _scratch("q190_")
-    shard_dir = f"{work}/shards"
-    _write_degraded_shards(ev, shard_dir)
-    # footer-metadata count of the written shard — no events re-scan
-    n_bad = spark.read.parquet(f"{shard_dir}/s=2").count()
-
-    state: list[DataFrame] = []
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        delta = IC.partial_aggregate(batch_df, keys, measures)
-        merged = (
-            IC.merge_aggregates(state[-1], delta, keys, measures)
-            if state
-            else delta
-        )
-        out = f"{work}/state_v{batch_id}"
-        merged.write.mode("overwrite").parquet(out)
-        state.append(batch_df.sparkSession.read.parquet(out))
-
-    body = quality_gated_foreach_batch(
+    _fold, state = _drain_gated_mv(
+        _t(spark, sf_dir, "events"),
+        work,
         Suite("gated_mv", [Rule("not_null", "event_type")]),
-        fold,
-        quarantine_dir=f"{work}/quarantine",
-        staging_dir=f"{work}/staging",
     )
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{shard_dir}/s=*")
-    )
-    with state_partitions(spark, 2):
-        q_ = (
-            src.writeStream.foreachBatch(body)
-            .option("checkpointLocation", f"{work}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q_.awaitTermination(300)
+    # footer-metadata count of the written shard — no events re-scan
+    n_bad = spark.read.parquet(f"{work}/shards/s=2").count()
     quarantined = spark.read.parquet(f"{work}/quarantine/batch_id=*").count()
     if quarantined != n_bad:
         raise AssertionError(
             f"publish gate leaked: quarantined {quarantined} rows, "
             f"expected the whole degraded shard ({n_bad})"
         )
-    final = IC.finalize(state[-1], measures)
+    final = IC.finalize(state[-1], ["value"])
     return final.select(
         "event_type",
         F.col("n").cast("long").alias("n"),
@@ -912,54 +694,12 @@ def q191_quarantine_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     still fails the suite raises instead of folding — repair can't
     become a bypass of the gate."""
     import os
-    import tempfile
 
-    from ingestao_dados_poli_spark.operators import incremental as IC
     from ingestao_dados_poli_spark.quality import Rule, Suite, validate
-    from ingestao_dados_poli_spark.streaming.stream_ops import (
-        quality_gated_foreach_batch,
-        state_partitions,
-    )
 
-    keys, measures = ["event_type"], ["value"]
     suite = Suite("gated_mv", [Rule("not_null", "event_type")])
-    ev = _t(spark, sf_dir, "events")
     work = _scratch("q191_")
-    shard_dir = f"{work}/shards"
-    _write_degraded_shards(ev, shard_dir)
-
-    state: list[DataFrame] = []
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        delta = IC.partial_aggregate(batch_df, keys, measures)
-        merged = (
-            IC.merge_aggregates(state[-1], delta, keys, measures)
-            if state
-            else delta
-        )
-        out = f"{work}/state_v{batch_id}"
-        merged.write.mode("overwrite").parquet(out)
-        state.append(batch_df.sparkSession.read.parquet(out))
-
-    body = quality_gated_foreach_batch(
-        suite,
-        fold,
-        quarantine_dir=f"{work}/quarantine",
-        staging_dir=f"{work}/staging",
-    )
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{shard_dir}/s=*")
-    )
-    with state_partitions(spark, 2):
-        q_ = (
-            src.writeStream.foreachBatch(body)
-            .option("checkpointLocation", f"{work}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q_.awaitTermination(300)
+    fold, state = _drain_gated_mv(_t(spark, sf_dir, "events"), work, suite)
 
     # repair loop: quarantined rows -> declared fix -> RE-VALIDATE
     # through the same suite -> fold as one more (batch_id-disjoint)
@@ -972,7 +712,7 @@ def q191_quarantine_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not report["certified"]:
         raise AssertionError(f"repair did not certify: {report}")
     fold(repaired, 1000 + len(state))
-    final = IC.finalize(state[-1], measures)
+    final = IC.finalize(state[-1], ["value"])
     if os.path.isdir(f"{work}/staging") and any(
         not d.startswith(("_", ".")) for d in os.listdir(f"{work}/staging")
     ):
@@ -1014,9 +754,6 @@ def q205_streaming_join_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     the delta rule's order-invariance is precisely what's being
     proven). Per-batch cost is |delta| x fanout; the snapshots grow
     but are only ever probed by delta-sized joins."""
-    import tempfile
-    import uuid
-
     # key-RANGE slice (not modulo): the harness — micro-batching,
     # snapshot growth, delta joins — is what's under test, not raw
     # volume, and a range predicate prunes parquet row groups at the
@@ -1042,9 +779,7 @@ def q205_streaming_join_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    work = _scratch("q205_")
-    shard_dir = f"{work}/shards"
-    chg.repartition(2).write.mode("overwrite").parquet(shard_dir)
+    src = _shard_stream(chg, _scratch("q205_"))
 
     # cross-batch state: snapshots as localCheckpoint-ed unions (block
     # storage, no parquet round-trip per batch) and the MV-delta log as
@@ -1091,21 +826,8 @@ def q205_streaming_join_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
         state["a"] = a_old.unionByName(d_a)
         state["b"] = b_old.unionByName(d_b)
 
-    src = (
-        spark.readStream.schema(chg.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(shard_dir)
-    )
-    from ingestao_dados_poli_spark.streaming.stream_ops import state_partitions
-
-    with state_partitions(spark, 2):
-        query = (
-            src.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", f"{work}/ck_{uuid.uuid4().hex[:8]}")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(300)
+    with SO.state_partitions(spark, 2):
+        SO.drain(src.writeStream.foreachBatch(fold))
     assert len(state["mv"]) > 5, "expected MV deltas from multiple batches"
     mv = _lit_df(
         spark,
@@ -1151,49 +873,23 @@ def q267_streaming_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     resume from the last persisted partial. The query asserts >= 2
     real micro-batches ran, and the oracle rebuilds the identical grid
     from the raw table."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from ingestao_dados_poli_spark.operators import sketches as SK
 
     with events_compat(spark, sf_dir):
         ev = _t(spark, sf_dir, "events").select("event_id", "user_id")
-        tmp = tempfile.mkdtemp(prefix=f"q267_src_{os.getpid()}_")
-        ck = None
-        try:
-            ev.repartition(2).write.mode("overwrite").parquet(tmp)
-            schema = spark.read.parquet(tmp).schema
-            src = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(tmp)
-            )
-            # keyed by batch_id and OVERWRITTEN, not appended:
-            # foreachBatch is at-least-once, so a retried micro-batch
-            # must replace its prior partial or the fold double-counts.
-            partials: dict = {}
+        src = _shard_stream(ev, _scratch("q267_"))
+        # keyed by batch_id and OVERWRITTEN, not appended:
+        # foreachBatch is at-least-once, so a retried micro-batch
+        # must replace its prior partial or the fold double-counts.
+        partials: dict = {}
 
-            def build_partial(batch_df, batch_id):
-                cells = SK.cms_build(batch_df, "user_id").collect()
-                partials[int(batch_id)] = [
-                    (int(r.depth), int(r.bucket), int(r.cnt))
-                    for r in cells
-                ]
+        def build_partial(batch_df, batch_id):
+            cells = SK.cms_build(batch_df, "user_id").collect()
+            partials[int(batch_id)] = [
+                (int(r.depth), int(r.bucket), int(r.cnt)) for r in cells
+            ]
 
-            ck = tempfile.mkdtemp(prefix="q267_ck_")
-            query = (
-                src.writeStream.foreachBatch(build_partial)
-                .option("checkpointLocation", ck)
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination(300)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-            if ck is not None:
-                shutil.rmtree(ck, ignore_errors=True)
+        SO.drain(src.writeStream.foreachBatch(build_partial))
         if len(partials) < 2:
             raise AssertionError(
                 f"expected >= 2 micro-batches, got {len(partials)}"
@@ -1235,57 +931,32 @@ def q283_streaming_seasonal_anomaly(
     micro-batches; the oracle recomputes the identical screen from
     the raw table, so a dropped batch, a double-counted cell, or any
     drift between the streaming and batch tails fails on values."""
-    import os
-    import shutil
-    import tempfile
-
     from ingestao_dados_poli_spark.registry.mlstats import (
         _hour_seasonal_screen,
     )
 
     with events_compat(spark, sf_dir):
-        ev = _t(spark, sf_dir, "events").select("ts")
-        tmp = tempfile.mkdtemp(prefix=f"q283_src_{os.getpid()}_")
-        ck = None
-        try:
-            ev.repartition(2).write.mode("overwrite").parquet(tmp)
-            schema = spark.read.parquet(tmp).schema
-            src = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(tmp)
-            )
-            # keyed by batch_id and OVERWRITTEN (foreachBatch is
-            # at-least-once; append would double-count a retried batch)
-            partials: dict = {}
+        src = _shard_stream(
+            _t(spark, sf_dir, "events").select("ts"), _scratch("q283_")
+        )
+        # keyed by batch_id and OVERWRITTEN (foreachBatch is
+        # at-least-once; append would double-count a retried batch)
+        partials: dict = {}
 
-            def build_partial(batch_df, batch_id):
-                cells = (
-                    batch_df.groupBy(
-                        F.date_trunc("day", F.col("ts"))
-                        .cast("date")
-                        .alias("day"),
-                        F.hour("ts").cast("int").alias("hod"),
-                    )
-                    .agg(F.count(F.lit(1)).alias("c"))
-                    .collect()
+        def build_partial(batch_df, batch_id):
+            cells = (
+                batch_df.groupBy(
+                    F.date_trunc("day", F.col("ts")).cast("date").alias("day"),
+                    F.hour("ts").cast("int").alias("hod"),
                 )
-                partials[int(batch_id)] = [
-                    (r.day, int(r.hod), int(r.c)) for r in cells
-                ]
-
-            ck = tempfile.mkdtemp(prefix="q283_ck_")
-            query = (
-                src.writeStream.foreachBatch(build_partial)
-                .option("checkpointLocation", ck)
-                .trigger(availableNow=True)
-                .start()
+                .agg(F.count(F.lit(1)).alias("c"))
+                .collect()
             )
-            query.awaitTermination(300)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-            if ck is not None:
-                shutil.rmtree(ck, ignore_errors=True)
+            partials[int(batch_id)] = [
+                (r.day, int(r.hod), int(r.c)) for r in cells
+            ]
+
+        SO.drain(src.writeStream.foreachBatch(build_partial))
         if len(partials) < 2:
             raise AssertionError(
                 f"expected >= 2 micro-batches, got {len(partials)}"
@@ -1336,7 +1007,7 @@ def q290_streaming_left_outer_join(
     Spark only allows outer stream-stream joins with watermarks AND an
     event-time bound (state must be provably evictable); unmatched
     left rows emit only once the watermark passes their match window,
-    so the finite availableNow run appends a SENTINEL event pair
+    so the finite drained run appends a SENTINEL event pair
     beyond max event time (written last, processed last) to flush the
     tail — the production pattern for draining a finite backfill
     through a streaming topology. The joined rows land in a parquet
@@ -1346,115 +1017,86 @@ def q290_streaming_left_outer_join(
     duplicated, or null-padded despite a match all shift a histogram
     cell. Scale shape: join state is bounded by watermark + lookback
     per user key; the histogram aggregates (user, ts) grain first."""
-    import os
-    import shutil
-
-    from ingestao_dados_poli_spark.streaming import stream_ops as SO
-
     with events_compat(spark, sf_dir):
         ev = _t(spark, sf_dir, "events").select(
             "user_id", "ts", "event_type"
         ).filter(F.col("event_type").isin("purchase", "click"))
         [mx] = ev.agg(F.max("ts").alias("mx")).collect()
-        # pid-scoped dirs cleared on ENTRY (the repo's gate-protocol
-        # convention): the SINK must outlive this function — the
-        # returned DataFrame reads it lazily at driver collect time —
-        # so it is ALSO registered for atexit removal (a different pid
-        # re-running would otherwise leave orphans accumulating in
-        # /tmp); the checkpoint dies with the query in the finally.
-        import atexit
+        # _scratch, not a function-local temp dir: the returned
+        # DataFrame reads the SINK lazily at driver collect time.
+        work = _scratch("q290_")
+        src_dir, sink = f"{work}/src", f"{work}/sink"
+        # Files must arrive in EVENT-TIME order ACROSS triggers:
+        # the file source advances the watermark batch by batch, so
+        # a randomly split source would deliver early timestamps in
+        # late batches — behind the watermark, silently dropped
+        # (first cut lost 1/3 of the purchases exactly this way).
+        # Within ONE trigger order is irrelevant (the watermark
+        # only advances after the batch), so the minimal correct
+        # topology is 2 micro-batches: all real events in the
+        # first, the flush sentinel in the second — each extra
+        # trigger on this 4-state-store outer join costs a full
+        # micro-batch commit for no additional proof (the 3-batch
+        # variant was the round-5 bench's #1 cost at 10.4 s).
+        ev.coalesce(1).write.mode("append").parquet(src_dir)
+        # sentinel pair 2h past max event time, appended AFTER the
+        # main file so the file source processes it last and the
+        # watermark sweeps every real match window. Built via
+        # _lit_df (JVM literal), never createDataFrame: the
+        # Python-RDD-backed 2-row write measured an erratic 5-6 s
+        # — the single biggest line item in this query's cost.
+        import datetime as _dt
 
-        pid = os.getpid()
-        tmp = f"/tmp/q290_src_{pid}"
-        sink = f"/tmp/q290_sink_{pid}"
-        ck = f"/tmp/q290_ck_{pid}"
-        for d in (tmp, sink, ck):
-            shutil.rmtree(d, ignore_errors=True)
-        atexit.register(shutil.rmtree, sink, ignore_errors=True)
-        try:
-            # Files must arrive in EVENT-TIME order ACROSS triggers:
-            # the file source advances the watermark batch by batch, so
-            # a randomly split source would deliver early timestamps in
-            # late batches — behind the watermark, silently dropped
-            # (first cut lost 1/3 of the purchases exactly this way).
-            # Within ONE trigger order is irrelevant (the watermark
-            # only advances after the batch), so the minimal correct
-            # topology is 2 micro-batches: all real events in the
-            # first, the flush sentinel in the second — each extra
-            # trigger on this 4-state-store outer join costs a full
-            # micro-batch commit for no additional proof (the 3-batch
-            # variant was the round-5 bench's #1 cost at 10.4 s).
-            ev.coalesce(1).write.mode("append").parquet(tmp)
-            # sentinel pair 2h past max event time, appended AFTER the
-            # main file so the file source processes it last and the
-            # watermark sweeps every real match window. Built via
-            # _lit_df (JVM literal), never createDataFrame: the
-            # Python-RDD-backed 2-row write measured an erratic 5-6 s
-            # — the single biggest line item in this query's cost.
-            import datetime as _dt
-
-            sent_ts = mx.mx + _dt.timedelta(hours=2)
-            _lit_df(
-                spark,
-                ev.schema,
-                [(-1, sent_ts, "purchase"), (-1, sent_ts, "click")],
-            ).coalesce(1).write.mode("append").parquet(tmp)
-            schema = spark.read.parquet(tmp).schema
-            src = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(tmp)
+        sent_ts = mx.mx + _dt.timedelta(hours=2)
+        _lit_df(
+            spark,
+            ev.schema,
+            [(-1, sent_ts, "purchase"), (-1, sent_ts, "click")],
+        ).coalesce(1).write.mode("append").parquet(src_dir)
+        src = SO.read_file_stream(
+            spark, src_dir, ev.schema, max_files_per_trigger=1
+        )
+        purchases = src.filter(
+            F.col("event_type") == "purchase"
+        ).select("user_id", "ts")
+        clicks = src.filter(F.col("event_type") == "click").select(
+            "user_id", "ts"
+        )
+        joined = SO.interval_join_streams(
+            purchases,
+            clicks,
+            ["user_id"],
+            lookback="30 minutes",
+            watermark="10 minutes",
+            how="left_outer",
+        )
+        # outer stream-stream joins keep FOUR state stores per
+        # shard; at this stream's volume the 32-way batch default
+        # spends the micro-batch committing empty stores (q92's
+        # measured 7.4 -> 2.3 s lesson — 29.6 s here before
+        # scoping). The store COMMIT (files per store per shard
+        # per batch) dominates at test volumes, so the whole
+        # streaming family runs 2 shards (round-7 sweep: q290
+        # 7.4/4.7 s at 4/2, q92 4.4/3.7/2.7 at 8/4/2); rows/shard
+        # stays ~20k, far from any memory bound, and production
+        # sizing scales shards with stream volume.
+        with SO.state_partitions(spark, 2):
+            SO.drain(
+                joined.writeStream.format("parquet")
+                .option("path", sink)
+                .outputMode("append")
             )
-            purchases = src.filter(
-                F.col("event_type") == "purchase"
-            ).select("user_id", "ts")
-            clicks = src.filter(F.col("event_type") == "click").select(
-                "user_id", "ts"
+        rows = spark.read.parquet(sink).filter(F.col("l_user_id") != -1)
+        per_purchase = rows.groupBy("l_user_id", "l_ts").agg(
+            F.count("r_ts").alias("k")
+        )
+        return (
+            per_purchase.groupBy(
+                F.col("k").cast("int").alias("n_clicks_before")
             )
-            joined = SO.interval_join_streams(
-                purchases,
-                clicks,
-                ["user_id"],
-                lookback="30 minutes",
-                watermark="10 minutes",
-                how="left_outer",
-            )
-            # outer stream-stream joins keep FOUR state stores per
-            # shard; at this stream's volume the 32-way batch default
-            # spends the micro-batch committing empty stores (q92's
-            # measured 7.4 -> 2.3 s lesson — 29.6 s here before
-            # scoping). The store COMMIT (files per store per shard
-            # per batch) dominates at test volumes, so the whole
-            # streaming family runs 2 shards (round-7 sweep: q290
-            # 7.4/4.7 s at 4/2, q92 4.4/3.7/2.7 at 8/4/2); rows/shard
-            # stays ~20k, far from any memory bound, and production
-            # sizing scales shards with stream volume.
-            with SO.state_partitions(spark, 2):
-                query = (
-                    joined.writeStream.format("parquet")
-                    .option("path", sink)
-                    .option("checkpointLocation", ck)
-                    .outputMode("append")
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                query.awaitTermination(300)
-            rows = spark.read.parquet(sink).filter(
-                F.col("l_user_id") != -1
-            )
-            per_purchase = rows.groupBy("l_user_id", "l_ts").agg(
-                F.count("r_ts").alias("k")
-            )
-            return (
-                per_purchase.groupBy(
-                    F.col("k").cast("int").alias("n_clicks_before")
-                )
-                .agg(F.count(F.lit(1)).alias("n_purchases"))
-                .orderBy("n_clicks_before")
-            )
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-            shutil.rmtree(ck, ignore_errors=True)
+            .agg(F.count(F.lit(1)).alias("n_purchases"))
+            .orderBy("n_clicks_before")
+        )
 
 
 # ------------------ 15. streaming drift monitor (mergeable histograms)
@@ -1506,60 +1148,33 @@ def q297_streaming_drift_monitor(
     state and no event retention; the oracle rebuilds the profile
     from the raw table, so a dropped batch or a double-fold shifts a
     CDF cell and fails on values. Asserts >= 2 real micro-batches."""
-    import os
-    import shutil
-
     with events_compat(spark, sf_dir):
         ev = _t(spark, sf_dir, "events").select("event_type", "value")
-        pid = os.getpid()
-        tmp = f"/tmp/q297_src_{pid}"
-        ckd = f"/tmp/q297_ck_{pid}"
-        for d in (tmp, ckd):
-            shutil.rmtree(d, ignore_errors=True)
-        try:
-            ev.repartition(2).write.mode("overwrite").parquet(tmp)
-            schema = spark.read.parquet(tmp).schema
-            src = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(tmp)
-            )
-            # keyed by batch_id and OVERWRITTEN (foreachBatch is
-            # at-least-once; append would double-count a retried batch)
-            partials: dict = {}
+        src = _shard_stream(ev, _scratch("q297_"))
+        # keyed by batch_id and OVERWRITTEN (foreachBatch is
+        # at-least-once; append would double-count a retried batch)
+        partials: dict = {}
 
-            def build_partial(batch_df, batch_id):
-                cells = (
-                    batch_df.select(
-                        F.when(
-                            F.col("event_type").isin("view", "click"),
-                            "engage",
-                        )
-                        .otherwise("act")
-                        .alias("grp"),
-                        F.least(
-                            F.floor(F.col("value") / 10.0).cast("int"),
-                            F.lit(9),
-                        ).alias("bin"),
-                    )
-                    .groupBy("grp", "bin")
-                    .agg(F.count(F.lit(1)).alias("c"))
-                    .collect()
+        def build_partial(batch_df, batch_id):
+            cells = (
+                batch_df.select(
+                    F.when(F.col("event_type").isin("view", "click"), "engage")
+                    .otherwise("act")
+                    .alias("grp"),
+                    F.least(
+                        F.floor(F.col("value") / 10.0).cast("int"),
+                        F.lit(9),
+                    ).alias("bin"),
                 )
-                partials[int(batch_id)] = [
-                    (r.grp, int(r.bin), int(r.c)) for r in cells
-                ]
-
-            query = (
-                src.writeStream.foreachBatch(build_partial)
-                .option("checkpointLocation", ckd)
-                .trigger(availableNow=True)
-                .start()
+                .groupBy("grp", "bin")
+                .agg(F.count(F.lit(1)).alias("c"))
+                .collect()
             )
-            query.awaitTermination(300)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-            shutil.rmtree(ckd, ignore_errors=True)
+            partials[int(batch_id)] = [
+                (r.grp, int(r.bin), int(r.c)) for r in cells
+            ]
+
+        SO.drain(src.writeStream.foreachBatch(build_partial))
         if len(partials) < 2:
             raise AssertionError(
                 f"expected >= 2 micro-batches, got {len(partials)}"
@@ -1664,7 +1279,6 @@ def q301_streaming_pipeline_e2e(
     store = _scratch("q301_fp_")
     pub = _scratch("q301_pub_")
     surv_dir = _scratch("q301_surv_")
-    ck = _scratch("q301_ck_")
     # batch 1's file FIRST: the file source orders micro-batches by
     # modification time, and the store's seen-set must grow in the
     # same direction the oracle's `seen` CTE assumes
@@ -1702,18 +1316,10 @@ def q301_streaming_pipeline_e2e(
             .collect()
         ]
 
-    src = (
-        spark.readStream.schema(b1.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+    src = SO.read_file_stream(
+        spark, src_dir, b1.schema, max_files_per_trigger=1
     )
-    query = (
-        src.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(300)
+    SO.drain(src.writeStream.foreachBatch(ingest))
 
     got = V.committed_versions(spark, store)
     if got != [1, 2] or len(raw_partials) != 2:

@@ -206,10 +206,11 @@ class _SynthEventsStreamReader(SimpleDataSourceStreamReader):
     """Bounded deterministic micro-batch stream: each ``read(start)``
     emits ``rows_per_batch`` synthetic events and advances the offset,
     until ``max_rows`` is reached — after that it reports no new data
-    (empty batch, unchanged offset), so ``processAllAvailable`` /
-    ``availableNow`` terminate. Offsets are plain row counters, which
-    makes replay after failure exact: ``readBetweenOffsets`` regenerates
-    the same rows from the same seeded formula.
+    (empty batch, unchanged offset), so ``processAllAvailable`` and a
+    drained run (``stream_ops.drain``) terminate. Offsets are plain row
+    counters, which makes replay after failure exact:
+    ``readBetweenOffsets`` regenerates the same rows from the same
+    seeded formula.
 
     The Simple variant generates rows DRIVER-side (fine for a control
     stream / demo source); a partition-parallel executor-side stream

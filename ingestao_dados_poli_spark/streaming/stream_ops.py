@@ -5,27 +5,54 @@ append-mode comment (gerenciando-dados-externos/0a:28). The engine
 upgrades the landing zone to an OPTIONAL streaming source: the same
 transforms run on `readStream` because DataFrame code is
 execution-mode agnostic. Everything here is stock Structured Streaming —
-file source, watermarks, tumbling/sliding windows, stateful
-sessionization via applyInPandasWithState.
+file source, watermarks, tumbling/sliding/session windows, dedup and
+interval joins — and every finite stream is drained through one
+bounded runner, ``drain``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import shutil
+import tempfile
 from contextlib import contextmanager
 from typing import Any
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+from pyspark.sql.types import StructType
+
+DRAIN_TIMEOUT_S = 300
+
+
+def drain(writer: DataStreamWriter) -> StreamingQuery:
+    """Run a configured stream over everything its source holds now and
+    return the terminated query (its ``lastProgress`` stays readable).
+
+    The query starts with the ``availableNow`` trigger on a fresh
+    checkpoint dir, so it never resumes offsets from an earlier run. A
+    query still running after ``DRAIN_TIMEOUT_S`` is stopped and raises
+    ``TimeoutError`` — its sink would be partial. A failing query
+    raises its ``StreamingQueryException``. Either way the query is
+    stopped and the checkpoint removed before this returns."""
+    ck = tempfile.mkdtemp(prefix="drain_ck_")
+    query = None
+    try:
+        query = (
+            writer.option("checkpointLocation", ck)
+            .trigger(availableNow=True)
+            .start()
+        )
+        if not query.awaitTermination(DRAIN_TIMEOUT_S):
+            raise TimeoutError(
+                f"stream {query.name or query.id} did not drain within "
+                f"{DRAIN_TIMEOUT_S} s"
+            )
+        return query
+    finally:
+        if query is not None:
+            query.stop()
+        shutil.rmtree(ck, ignore_errors=True)
 
 
 def read_file_stream(
@@ -122,108 +149,6 @@ def dedup_stream(
             id_cols
         )
     return events.dropDuplicates(id_cols)
-
-
-SESSION_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("session_start", TimestampType()),
-        StructField("session_end", TimestampType()),
-        StructField("n_events", LongType()),
-        StructField("sum_value", DoubleType()),
-    ]
-)
-
-_SESSION_STATE = StructType(
-    [
-        StructField("start_ms", LongType()),
-        StructField("end_ms", LongType()),
-        StructField("n", LongType()),
-        StructField("total", DoubleType()),
-    ]
-)
-
-
-def sessionize(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    key_col: str = "user_id",
-) -> DataFrame:
-    """Custom stateful operator: per-user session windows with idle-gap
-    close, via applyInPandasWithState (the engine's template for any
-    operator Spark's built-ins can't express). State per user is O(1).
-
-    The event-time ``watermark`` is applied to the input so rows later
-    than it are dropped BEFORE reaching state (bounded late-data
-    semantics); processing-time timeout additionally evicts idle users'
-    state. Batch (non-streaming) inputs skip the watermark — it is a
-    streaming-only concept.
-
-    ``ts_col``/``value_col``/``key_col`` select the event time, summed
-    value, and grouping key; the OUTPUT schema is fixed (user_id,
-    session_start, session_end, n_events, sum_value) regardless."""
-    gap_ms = _duration_ms(gap)
-    if events.isStreaming:
-        events = events.withWatermark(ts_col, watermark)
-
-    def fn(
-        key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:
-            start_ms, end_ms, n, total = state.get
-            state.remove()
-            yield _session_row(user_id, start_ms, end_ms, n, total)
-            return
-        rows = pd.concat(list(batches))
-        ts_ms = (rows[ts_col].astype("int64") // 1_000_000).to_numpy()
-        vals = rows[value_col].to_numpy()
-        order = ts_ms.argsort()
-        cur = list(state.get) if state.exists else None
-        closed: list[pd.DataFrame] = []
-        for i in order:
-            t, v = int(ts_ms[i]), float(vals[i])
-            if cur is None:
-                cur = [t, t, 1, v]
-            elif t - cur[1] <= gap_ms:
-                cur[1], cur[2], cur[3] = max(cur[1], t), cur[2] + 1, cur[3] + v
-            else:
-                closed.append(_session_row(user_id, *cur))
-                cur = [t, t, 1, v]
-        if cur is not None:
-            state.update(tuple(cur))
-            state.setTimeoutDuration(gap_ms)
-        yield from closed
-
-    return events.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=SESSION_SCHEMA,
-        stateStructType=_SESSION_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
-def _session_row(user_id: int, start_ms: int, end_ms: int, n: int, total: float) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "user_id": [user_id],
-            "session_start": [pd.Timestamp(start_ms, unit="ms")],
-            "session_end": [pd.Timestamp(end_ms, unit="ms")],
-            "n_events": [n],
-            "sum_value": [total],
-        }
-    )
-
-
-def _duration_ms(s: str) -> int:
-    n, unit = s.split()
-    mult = {"second": 1000, "seconds": 1000, "minute": 60_000, "minutes": 60_000,
-            "hour": 3_600_000, "hours": 3_600_000}[unit]
-    return int(n) * mult
 
 
 @contextmanager
@@ -412,7 +337,6 @@ def quality_gated_foreach_batch(
     """
     import json as _json
     import os
-    import shutil
 
     from ingestao_dados_poli_spark.quality import observe_suite
 
@@ -441,83 +365,6 @@ def quality_gated_foreach_batch(
     return body
 
 
-def running_totals_tws(
-    stream: DataFrame,
-    key_col: str = "user_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """Per-key running (count, sum, max) via Spark 4's
-    ``transformWithStateInPandas`` — the successor stateful API to
-    ``applyInPandasWithState`` (cf. ``sessionize``): typed state
-    handles (ValueState) managed by the state store instead of one
-    opaque per-key blob, composable timers, and TTL support. Each
-    micro-batch updates the key's ValueState and emits the NEW running
-    totals for keys seen in that batch (update semantics).
-
-    Scale shape: state is partitioned by the group key across the
-    state store's shuffle partitions (size via ``state_partitions``);
-    per-batch work is Arrow-batched pandas over only the keys present
-    in the batch.
-    """
-    try:
-        import google.protobuf  # noqa: F401  (TWS state protocol dep)
-    except ImportError as e:  # pragma: no cover - present on real clusters
-        raise ImportError(
-            "transformWithStateInPandas needs the protobuf package (its "
-            "state-server protocol); not installed in this container — "
-            "use sessionize()'s applyInPandasWithState path instead"
-        ) from e
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = StructType(
-        [
-            StructField(key_col, LongType()),
-            StructField("n_events", LongType()),
-            StructField("sum_value", DoubleType()),
-            StructField("max_value", DoubleType()),
-        ]
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "n long, s double, mx double"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, s, mx = 0, 0.0, float("-inf")
-            if self._totals.exists():
-                n, s, mx = self._totals.get()
-            for pdf in rows:
-                vals = pdf[value_col].astype("float64")
-                n += len(vals)
-                s += float(vals.sum())
-                mx = max(mx, float(vals.max()))
-            self._totals.update((n, s, mx))
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]],
-                    "n_events": [n],
-                    "sum_value": [s],
-                    "max_value": [mx],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def session_window_counts(
     events: DataFrame,
     gap: str = "30 minutes",
@@ -525,11 +372,12 @@ def session_window_counts(
     ts_col: str = "ts",
     key_col: str = "user_id",
 ) -> DataFrame:
-    """Streaming sessionization via the BUILT-IN merging session_window
-    (the declarative sibling of `sessionize`'s applyInPandasWithState):
+    """Streaming sessionization via the BUILT-IN merging session_window:
     dynamic-gap windows merge as events arrive, the watermark closes a
     session once event time passes its end + gap, and closed sessions'
-    state is evicted — bounded state on an unbounded stream. Works
+    state is evicted — bounded state on an unbounded stream. In append
+    mode only closed sessions are emitted. ``ts_col``/``key_col`` pick
+    the event time and grouping key; ``value`` is summed. Works
     identically on batch DataFrames (q104) and streams (q152): the
     batch/stream parity Structured Streaming promises."""
     return (

@@ -48,6 +48,22 @@ def test_registry_modules_stay_bounded():
     assert not oversized, f"split these registry modules: {oversized}"
 
 
+def test_available_now_only_in_runner():
+    # Every finite stream starts through stream_ops.drain, which bounds
+    # the wait and stops the query; a copied start/await block would
+    # silently hand back a partial sink. Pin the trigger to the runner's
+    # module so the next streaming query cannot copy the block again.
+    import pathlib
+
+    pkg = pathlib.Path(__file__).parent.parent / "ingestao_dados_poli_spark"
+    users = sorted(
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if "availableNow" in p.read_text()
+    )
+    assert users == ["streaming/stream_ops.py"], users
+
+
 def test_readme_counts_match_registry():
     # README's driver-contract block states the registry size; keep it
     # from drifting (round-1 verdict found it stale).

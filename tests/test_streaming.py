@@ -1,10 +1,15 @@
 """Structured Streaming tests: file-source micro-batches through the
-windowed/stateful operators, with availableNow trigger so the suite
-terminates deterministically."""
+windowed/stateful operators, drained by ``stream_ops.drain`` so every
+stream terminates within a bound or fails loudly."""
 
 from __future__ import annotations
 
+import os
+import tempfile
+import time
+
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType, LongType, StringType, StructField, StructType, TimestampType,
@@ -41,110 +46,65 @@ def event_dir(spark, tmp_path_factory):
     return path
 
 
-def _run_to_memory(spark, sdf, name):
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append" if sdf.isStreaming else "append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"/tmp/ck_{name}")
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.sql(f"SELECT * FROM {name}")
+def _drain_to_memory(sdf, name, mode="append"):
+    S.drain(sdf.writeStream.format("memory").queryName(name).outputMode(mode))
+    return sdf.sparkSession.sql(f"SELECT * FROM {name}").collect()
 
 
-def test_tumbling_counts(spark, event_dir, tmp_path):
+def test_tumbling_counts(spark, event_dir):
     src = S.read_file_stream(spark, event_dir, EVENT_SCHEMA)
     assert src.isStreaming
     agg = S.tumbling_counts(src, window_len="1 minute", watermark="2 hours")
-    q = (
-        agg.writeStream.format("memory").queryName("tumbling")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ck1"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     out = {
         (str(r.window_start), r.event_type): r.n_events
-        for r in spark.sql("SELECT * FROM tumbling").collect()
+        for r in _drain_to_memory(agg, "tumbling", "complete")
     }
     assert out[("2024-01-01 00:00:00", "click")] == 3
     assert out[("2024-01-01 00:02:00", "view")] == 1
     assert out[("2024-01-01 01:00:00", "click")] == 1
 
 
-def test_sessionize_stateful(spark, event_dir, tmp_path):
+def test_session_window_counts_closed_sessions(spark, event_dir):
     src = S.read_file_stream(spark, event_dir, EVENT_SCHEMA)
-    sess = S.sessionize(src, gap="30 minutes")
-    q = (
-        sess.writeStream.format("memory").queryName("sessions")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(120)
-        rows = spark.sql("SELECT * FROM sessions").collect()
-    finally:
-        q.stop()
-    # availableNow processes all input in one batch; sessions still open
-    # at end-of-stream stay in state, so we assert on the CLOSED one:
-    closed = [r for r in rows if r.user_id == 1]
-    assert len(closed) >= 1
-    first = min(closed, key=lambda r: r.session_start)
-    assert first.n_events == 3
-    assert first.sum_value == 6.0
+    sess = S.session_window_counts(src, gap="30 minutes")
+    rows = _drain_to_memory(sess, "sessions")
+    # append mode emits only sessions the watermark (max ts 01:00 minus
+    # 10 min) has closed; user 1's 01:00 session is still open
+    assert sorted((r.user_id, r.n_events, r.sum_value) for r in rows) == [
+        (1, 3, 6.0),
+        (2, 1, 4.0),
+    ]
+    first = min((r for r in rows if r.user_id == 1), key=lambda r: r.session_start)
+    assert str(first.session_start) == "2024-01-01 00:00:10"
+    assert str(first.session_end) == "2024-01-01 00:32:10"
 
 
-def test_sessionize_custom_column_names(spark, event_dir, tmp_path):
-    # non-default ts/value/key column names must flow through to the
-    # stateful fn (they were once hardcoded: regression guard).
+def test_session_window_counts_custom_column_names(spark, event_dir):
+    # non-default ts/key column names must flow through to the window
+    # and the grouping (regression guard: they were once hardcoded).
     src = S.read_file_stream(spark, event_dir, EVENT_SCHEMA).select(
         F.col("ts").alias("event_time"),
         F.col("user_id").alias("uid"),
-        F.col("value").alias("amount"),
+        "value",
     )
-    sess = S.sessionize(
-        src, gap="30 minutes", ts_col="event_time", value_col="amount", key_col="uid"
+    sess = S.session_window_counts(
+        src, gap="30 minutes", ts_col="event_time", key_col="uid"
     )
-    q = (
-        sess.writeStream.format("memory").queryName("sessions_renamed")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck2r"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(120)
-        rows = spark.sql("SELECT * FROM sessions_renamed").collect()
-    finally:
-        q.stop()
-    closed = [r for r in rows if r.user_id == 1]
-    assert len(closed) >= 1
-    first = min(closed, key=lambda r: r.session_start)
-    assert first.n_events == 3
-    assert first.sum_value == 6.0
+    rows = _drain_to_memory(sess, "sessions_renamed")
+    closed = [r for r in rows if r.uid == 1]
+    assert len(closed) == 1
+    assert closed[0].n_events == 3
+    assert closed[0].sum_value == 6.0
 
 
-def test_sliding_avg(spark, event_dir, tmp_path):
+def test_sliding_avg(spark, event_dir):
     src = S.read_file_stream(spark, event_dir, EVENT_SCHEMA)
     agg = S.sliding_avg(
         src, window_len="2 minutes", slide="1 minute", watermark="2 hours"
     )
-    q = (
-        agg.writeStream.format("memory").queryName("sliding")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ck_slide"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     out = {
         (str(r.window_start), r.event_type): r.avg_value
-        for r in spark.sql("SELECT * FROM sliding").collect()
+        for r in _drain_to_memory(agg, "sliding", "complete")
     }
     # events at 00:00:10 (1.0), 00:00:40 (2.0), 00:00:20 (4.0) fall in the
     # 00:00-00:02 window AND the 23:59-00:01 window (2-min windows, 1-min slide)
@@ -152,26 +112,17 @@ def test_sliding_avg(spark, event_dir, tmp_path):
     assert out[("2023-12-31 23:59:00", "click")] == pytest.approx(7.0 / 3)
 
 
-def test_dedup_stream_drops_duplicate_ids(spark, event_dir, tmp_path):
+def test_dedup_stream_drops_duplicate_ids(spark, event_dir):
     # duplicated delivery: the same source unioned with itself
     src = S.read_file_stream(spark, event_dir, EVENT_SCHEMA).unionByName(
         S.read_file_stream(spark, event_dir, EVENT_SCHEMA)
     )
     deduped = S.dedup_stream(src, ["event_id"])
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_plain")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ck_dd"))
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM dedup_plain").collect()
+    rows = _drain_to_memory(deduped, "dedup_plain")
     assert sorted(r.event_id for r in rows) == [1, 2, 3, 4, 5]
 
 
-def test_dedup_stream_within_watermark(spark, event_dir, tmp_path):
+def test_dedup_stream_within_watermark(spark, event_dir):
     # watermarked variant: same dedup result on this bounded input, but
     # the operator is dropDuplicatesWithinWatermark — state is evictable,
     # so it runs forever on unbounded streams.
@@ -179,16 +130,7 @@ def test_dedup_stream_within_watermark(spark, event_dir, tmp_path):
         S.read_file_stream(spark, event_dir, EVENT_SCHEMA)
     )
     deduped = S.dedup_stream(src, ["event_id"], ts_col="ts", watermark="2 hours")
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_wm")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ck_ddwm"))
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM dedup_wm").collect()
+    rows = _drain_to_memory(deduped, "dedup_wm")
     assert sorted(r.event_id for r in rows) == [1, 2, 3, 4, 5]
 
 
@@ -196,11 +138,11 @@ def test_write_stream_parquet_roundtrip(spark, event_dir, tmp_path):
     src = S.read_file_stream(spark, event_dir, EVENT_SCHEMA)
     out_path = str(tmp_path / "out")
     q = S.write_stream_parquet(src, out_path, str(tmp_path / "ck3"))
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     assert spark.read.parquet(out_path).count() == 5
 
 
-def test_interval_join_streams(spark, event_dir, tmp_path):
+def test_interval_join_streams(spark, event_dir):
     # clicks within 2 minutes BEFORE each view, same user. From the
     # fixture: view id=3 (user 1, 00:02:10) should match click id=2
     # (00:00:40, 90s before) but not id=1 (00:00:10, 120s+ before the
@@ -216,16 +158,7 @@ def test_interval_join_streams(spark, event_dir, tmp_path):
         views, clicks, keys=["user_id"], lookback="2 minutes",
         watermark="10 minutes",
     )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ivj")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ck_ivj"))
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT view_id, click_id FROM ivj").collect()
+    rows = _drain_to_memory(joined, "ivj")
     assert sorted((r.view_id, r.click_id) for r in rows) == [(3, 1), (3, 2)]
 
 
@@ -244,29 +177,7 @@ def test_interval_join_batch_parity(spark, event_dir):
     assert sorted((r.view_id, r.click_id) for r in rows) == [(3, 1), (3, 2)]
 
 
-def test_running_totals_tws(spark, event_dir, tmp_path):
-    # TWS ships a protobuf-based state protocol; container lacks protobuf.
-    pytest.importorskip("google.protobuf")
-    src = S.read_file_stream(spark, event_dir, EVENT_SCHEMA)
-    out = S.running_totals_tws(src)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("tws_totals")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ck_tws"))
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = {r.user_id: r for r in spark.sql("SELECT * FROM tws_totals").collect()}
-    # single micro-batch → one update row per key with full totals
-    assert rows[1].n_events == 4
-    assert abs(rows[1].sum_value - 11.0) < 1e-9
-    assert rows[1].max_value == 5.0
-    assert rows[2].n_events == 1 and rows[2].max_value == 4.0
-
-
-def test_rocksdb_state_store(spark, event_dir, tmp_path):
+def test_rocksdb_state_store(spark, event_dir):
     """The RocksDB provider (the state-bigger-than-heap path) must
     actually engage: same watermarked aggregate as the HDFS-backed
     default, identical results, and the query progress must report
@@ -274,14 +185,10 @@ def test_rocksdb_state_store(spark, event_dir, tmp_path):
     with S.rocksdb_state(spark, bounded_memory_mb=256):
         src = S.read_file_stream(spark, event_dir, EVENT_SCHEMA)
         agg = S.tumbling_counts(src, window_len="1 minute", watermark="2 hours")
-        q = (
+        q = S.drain(
             agg.writeStream.format("memory").queryName("rocks")
             .outputMode("complete")
-            .option("checkpointLocation", str(tmp_path / "ck_rocks"))
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(120)
         progress = q.lastProgress
     out = {
         (str(r.window_start), r.event_type): r.n_events
@@ -303,7 +210,6 @@ def test_quality_gated_foreach_batch_quarantines_degraded(spark, tmp_path):
     batches publish normally. Mirrors the batch versioned.publish
     gate's `certified` contract."""
     import json
-    import os
 
     from ingestao_dados_poli_spark.quality import Rule, Suite
     from ingestao_dados_poli_spark.streaming.stream_ops import (
@@ -337,13 +243,7 @@ def test_quality_gated_foreach_batch_quarantines_degraded(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{shard_dir}/s=*")
     )
-    q_ = (
-        src.writeStream.foreachBatch(body)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination(300)
+    S.drain(src.writeStream.foreachBatch(body))
 
     flat = sorted(x for batch in published for x in batch)
     assert flat == [(1, "click"), (2, "view"), (4, "click")]  # bad row never published
@@ -407,3 +307,41 @@ def test_interval_join_left_outer_batch_semantics(spark):
         (1, 15 * 60 + 20, None),
         (2, 13 * 60, None),
     ]
+
+
+def test_drain_times_out_and_stops(spark, event_dir, monkeypatch):
+    # a stream still running past the bound must raise, not hand back a
+    # partial sink, and must not be left running
+    monkeypatch.setattr(S, "DRAIN_TIMEOUT_S", 1)
+    src = S.read_file_stream(spark, event_dir, EVENT_SCHEMA)
+    with pytest.raises(TimeoutError):
+        S.drain(src.writeStream.foreachBatch(lambda df, bid: time.sleep(3)))
+    assert spark.streams.active == []
+
+
+def test_drain_propagates_batch_failure(spark, event_dir):
+    def fail(df, bid):
+        raise ValueError("batch body failed")
+
+    src = S.read_file_stream(spark, event_dir, EVENT_SCHEMA)
+    with pytest.raises(StreamingQueryException):
+        S.drain(src.writeStream.foreachBatch(fail))
+    assert spark.streams.active == []
+
+
+def test_drain_leaves_no_query_or_checkpoint(spark, event_dir, tmp_path, monkeypatch):
+    ck_root = tmp_path / "ck_root"
+    ck_root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(ck_root))
+    seen: list = []
+
+    def record(df, bid):
+        seen.append((df.count(), os.listdir(ck_root)))
+
+    src = S.read_file_stream(spark, event_dir, EVENT_SCHEMA)
+    q = S.drain(src.writeStream.foreachBatch(record))
+    # the checkpoint lived under the temp root while the batch ran
+    assert [(n, len(dirs)) for n, dirs in seen] == [(5, 1)]
+    assert not q.isActive
+    assert spark.streams.active == []
+    assert os.listdir(ck_root) == []
