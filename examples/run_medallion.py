@@ -89,7 +89,7 @@ def main() -> None:
             suite=suites[name],
             sink=Sink(path=silver[name], target_file_partitions=1),
         ).run(spark)
-        Q.write_report(report["validation"], os.path.join(work, f"report_{name}.json"))
+        Q.publish_report(spark, report["validation"], os.path.join(work, "docs", name))
         print(f"{name}: rows={report['validation']['row_count']} "
               f"quality_ok={report['validation']['success']}")
 

@@ -31,38 +31,6 @@ def apply_rules(col: Column | str, rules: RuleTable) -> Column:
     return out
 
 
-def conform_entity_key(
-    df: DataFrame,
-    col: str,
-    rules: RuleTable = (),
-    remap: Mapping[str, str] | None = None,
-    upper: bool = False,
-    trim: bool = True,
-    squash_spaces: bool = True,
-    out_col: str | None = None,
-) -> DataFrame:
-    """Conform a natural-key column so it joins across sources.
-
-    Generalizes the reference's F1-F9 pipeline: regexp rule fold +
-    ``when/isin`` exact remap (etl/4:36-38) + ``upper`` case conforming
-    (etl/3:78). Whole thing is one projection — no shuffle, no UDF.
-    """
-    expr = apply_rules(col, rules)
-    if upper:
-        expr = F.upper(expr)
-    if trim:
-        expr = F.trim(expr)
-    if squash_spaces:
-        expr = F.regexp_replace(expr, r" {2,}", " ")
-    if remap:
-        result = None
-        for src, dst in remap.items():
-            cond = expr == F.lit(src)
-            result = F.when(cond, F.lit(dst)) if result is None else result.when(cond, F.lit(dst))
-        expr = result.otherwise(expr)
-    return df.withColumn(out_col or col, expr)
-
-
 def remap_values(
     df: DataFrame, col: str, mapping: Mapping[str, str], out_col: str | None = None
 ) -> DataFrame:
@@ -114,18 +82,3 @@ def align_union(dfs: list[DataFrame]) -> DataFrame:
     return out
 
 
-# Latin accent fold map: every accented char the reference's pt-BR bank/
-# claims names can carry (NFD would need a UDF; translate stays codegen).
-_ACCENTED = "áàâãäåÁÀÂÃÄÅéèêëÉÈÊËíìîïÍÌÎÏóòôõöÓÒÔÕÖúùûüÚÙÛÜçÇñÑýÝ"
-_FOLDED = "aaaaaaAAAAAAeeeeEEEEiiiiIIIIoooooOOOOOuuuuUUUUcCnNyY"
-
-
-def fold_accents(col: Column | str) -> Column:
-    """Strip Latin diacritics (``São Paulo`` → ``Sao Paulo``) with one
-    scan-side ``translate`` — the normalization a pt-BR entity-key join
-    (reference etl/4:26-28 joins on cleaned names) needs before
-    uppercase/regex rules, kept out of NAME_RULES so existing behavior
-    parity is untouched. Matches DuckDB's ``strip_accents`` for the
-    Latin-1/Latin Extended-A range enumerated here."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.translate(c, _ACCENTED, _FOLDED)

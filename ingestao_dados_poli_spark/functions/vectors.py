@@ -38,14 +38,8 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     # for doubles (verified in this build: SELECT 1e0/0e0 raises
     # DIVIDE_BY_ZERO) — one degenerate embedding row must not kill a
     # corpus-wide similarity scan. try_divide yields NULL instead,
-    # which the consumers' null filters exclude (e.g. topk_bruteforce
-    # pre-reduce).
+    # which the consumers' null filters exclude.
     return F.try_divide(dot(a, b), norm(a) * norm(b))
-
-
-def l2_distance(a: Column | str, b: Column | str) -> Column:
-    diffs = F.zip_with(_c(a), _c(b), lambda x, y: (x - y) * (x - y))
-    return F.sqrt(F.aggregate(diffs, F.lit(0.0), lambda acc, v: acc + v))
 
 
 def quantize_int8(a: Column | str) -> Column:

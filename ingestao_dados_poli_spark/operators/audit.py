@@ -76,39 +76,3 @@ def table_fingerprint(
     return base.agg(*aggs)
 
 
-def fingerprint_diff(
-    a: DataFrame, b: DataFrame, group_by: Sequence[str]
-) -> DataFrame:
-    """Join two digest tables (both from ``table_fingerprint`` with the
-    same group_by) and return ONLY the divergent groups, with a
-    per-group verdict: 'missing_in_a'/'missing_in_b' (group absent on
-    one side), 'count', 'content' (same count, different rows). The
-    re-sync worklist, sized in groups, not rows."""
-    keys = list(group_by)
-    an = a.select(
-        *keys,
-        F.col("n_rows").alias("n_a"),
-        F.col("xor_fp").alias("xor_a"),
-        F.col("sum_fp").alias("sum_a"),
-    )
-    bn = b.select(
-        *keys,
-        F.col("n_rows").alias("n_b"),
-        F.col("xor_fp").alias("xor_b"),
-        F.col("sum_fp").alias("sum_b"),
-    )
-    j = an.join(bn, keys, "full_outer")
-    verdict = (
-        F.when(F.col("n_a").isNull(), F.lit("missing_in_a"))
-        .when(F.col("n_b").isNull(), F.lit("missing_in_b"))
-        .when(F.col("n_a") != F.col("n_b"), F.lit("count"))
-        .when(
-            (F.col("xor_a") != F.col("xor_b"))
-            | (F.col("sum_a") != F.col("sum_b")),
-            F.lit("content"),
-        )
-        .otherwise(F.lit(None))
-    )
-    return j.withColumn("verdict", verdict).filter(
-        F.col("verdict").isNotNull()
-    )

@@ -504,8 +504,7 @@ def minhash_candidate_pairs(
     empty/boilerplate docs) degrade to salted sub-bucket samples plus
     an anchor chain instead of emitting O(n²) pairs — the salt lives in
     the GROUP KEY so no task ever buffers a whole hot bucket, see
-    ``salted_bucket_pairs``; audit the size distribution with
-    ``minhash_bucket_stats``.
+    ``salted_bucket_pairs``.
     """
     if num_hashes % num_bands:
         raise ValueError(
@@ -550,63 +549,6 @@ def minhash_candidate_pairs(
             est.cast("double").alias("est_jaccard"),
         )
         .dropDuplicates(["id_a", "id_b"])
-    )
-
-
-def minhash_bucket_stats(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 64,
-    num_bands: int = 16,
-    k: int = 5,
-    max_bucket_size: int = 200,
-) -> DataFrame:
-    """Per-band LSH bucket-size audit — run this BEFORE (or alongside)
-    ``minhash_candidate_pairs`` to see how much of the corpus falls
-    into hot buckets and therefore gets SAMPLED pair recall instead of
-    exhaustive: one row per band with ``n_buckets``, ``n_pair_buckets``
-    (size ≥ 2), ``n_hot_buckets`` (size > cap, the degraded ones),
-    ``max_bucket`` and ``docs_in_hot``. A corpus where ``docs_in_hot``
-    is a meaningful fraction of rows needs boilerplate stripping or
-    exact dedup FIRST — degradation keeps the job bounded, the stats
-    make the recall trade visible instead of silent.
-
-    Cost: the same signature scan as the pair job plus one count-only
-    (band, bucket) aggregation — no signatures ride along and no pair
-    expansion, so the shuffle carries 8-byte counts.
-    """
-    if num_hashes % num_bands:
-        raise ValueError(
-            f"num_hashes={num_hashes} must be divisible by num_bands={num_bands}"
-        )
-    rows_per_band = num_hashes // num_bands
-    sigs = fan_out(df).select(
-        F.col(id_col).alias("_id"),
-        _minhash_from_token_hashes_udf(num_hashes, k)(
-            _token_hashes(text_col)
-        ).alias("minhash"),
-    )
-    sizes = (
-        sigs.select(
-            F.explode(
-                minhash_bands("minhash", num_bands, rows_per_band)
-            ).alias("bb")
-        )
-        .groupBy(F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("sz"))
-    )
-    hot = F.col("sz") > max_bucket_size
-    return (
-        sizes.groupBy("band")
-        .agg(
-            F.count(F.lit(1)).alias("n_buckets"),
-            F.sum((F.col("sz") >= 2).cast("int")).alias("n_pair_buckets"),
-            F.sum(hot.cast("int")).alias("n_hot_buckets"),
-            F.max("sz").alias("max_bucket"),
-            F.sum(F.when(hot, F.col("sz")).otherwise(0)).alias("docs_in_hot"),
-        )
-        .orderBy("band")
     )
 
 
@@ -799,26 +741,6 @@ def minhash_pairs_between(
         .dropDuplicates(["left_id", "right_id"])
     )
     return pairs
-
-
-def dedup_minhash(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    threshold: float = 0.8,
-    **kwargs,
-) -> DataFrame:
-    """Drop near-duplicates: from each candidate pair above ``threshold``
-    remove the higher-id doc. Single-link transitive clustering is
-    approximated by iterated pair removal (one pass — adequate for dedup
-    where any surviving representative is acceptable)."""
-    pairs = minhash_candidate_pairs(df, text_col, id_col, **kwargs)
-    to_drop = (
-        pairs.filter(F.col("est_jaccard") >= threshold)
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
-    )
-    return df.join(to_drop, id_col, "left_anti")
 
 
 # -------------------------------------------------------------- SimHash

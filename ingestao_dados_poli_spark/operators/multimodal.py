@@ -6,19 +6,12 @@ typed metadata struct; all per-item compute goes through Arrow-batched
 ``mapInPandas`` so bytes move driver-free, batch-at-a-time, and the
 Python worker amortizes per-row overhead.
 
-Decode coverage is layered by codec availability:
-
-- **Real, dependency-free**: uncompressed standard formats are decoded
-  with numpy/struct alone — ``decode_ppm`` (netpbm P6 images) and
-  ``decode_wav`` (RIFF PCM-16 audio) parse ACTUAL encoded bytes to
-  pixel/sample arrays, so the full byte→decode→feature path runs and
-  is value-tested in this container.
-- **Optional**: compressed codecs (JPEG/PNG via PIL) plug into the same
-  ``featurizer=`` seam; ``pil_featurizer`` is proven by a
-  skip-if-missing test wherever pillow exists.
-- **Stubbed**: video frame EXTRACTION (no video codec is decodable
-  without external libs) keeps a deterministic fake behind the real
-  explode-shaped plumbing.
+Real decode is dependency-free: ``decode_ppm`` parses ACTUAL netpbm P6
+image bytes to a pixel array with numpy/struct alone, so the full
+byte→decode→feature path runs and is value-tested in this container.
+Compressed codecs plug into the same ``featurizer=`` seam of
+``extract_image_features``; the default featurizer is a deterministic
+sha256 stand-in for plumbing tests.
 """
 
 from __future__ import annotations
@@ -90,41 +83,6 @@ def _fake_features(payload: bytes, dim: int = 8) -> list[float]:
     return [int.from_bytes(h[4 * i : 4 * i + 4], "big") / 2**32 for i in range(dim)]
 
 
-def decode_image(payload: bytes) -> "object":
-    """Real decode path: returns a PIL Image when pillow is installed.
-
-    The container this engine is developed in ships no codec libs, so
-    the default featurizer stays the deterministic fake; wherever PIL
-    exists, ``pil_featurizer`` plugs real decoding into the SAME
-    ``extract_image_features`` mapInPandas plumbing (proven by a
-    skip-if-missing test)."""
-    try:
-        import io
-
-        from PIL import Image  # type: ignore[import-not-found]
-    except ImportError as e:
-        raise NotImplementedError(
-            "image decode requires PIL/pillow; use extract_image_features "
-            "(deterministic fake) for plumbing tests"
-        ) from e
-    return Image.open(io.BytesIO(payload))
-
-
-def pil_featurizer(dim: int = 8) -> Callable[[bytes], list[float]]:
-    """Real-bytes featurizer for ``extract_image_features(featurizer=)``:
-    decode with PIL, grayscale, resize to a (dim × 1) strip, return the
-    mean intensities in [0, 1). Deterministic (pure pixel math), and
-    exercises the exact UDF contract the sha256 fake stands in for.
-    Raises NotImplementedError (via decode_image) where PIL is absent.
-    """
-
-    def fz(payload: bytes) -> list[float]:
-        img = decode_image(payload).convert("L").resize((dim, 1))
-        return [min(p / 256.0, 0.999999) for p in list(img.getdata())]
-
-    return fz
-
-
 def encode_ppm(arr) -> bytes:
     """Encode an (h, w, 3) uint8 array as binary netpbm P6 — the
     uncompressed interchange format whose decode needs no codec lib."""
@@ -164,8 +122,8 @@ def decode_ppm(payload: bytes):
 def ppm_featurizer(dim: int = 8) -> Callable[[bytes], list[float]]:
     """Real-pixel featurizer for ``extract_image_features``: decode the
     P6 bytes, grayscale, mean intensity of ``dim`` vertical strips in
-    [0, 1] — the same contract as ``pil_featurizer`` but runnable with
-    numpy alone, so the byte→decode→feature path is fully real here."""
+    [0, 1] — runnable with numpy alone, so the byte→decode→feature path
+    is fully real here."""
     import numpy as np
 
     def fz(payload: bytes) -> list[float]:
@@ -214,123 +172,6 @@ def synthetic_ppm_media(
     return _range_sliced(spark, n).mapInPandas(fn, schema=MEDIA_SCHEMA)
 
 
-def encode_wav_pcm16(samples, rate: int = 16000) -> bytes:
-    """Encode int16 samples as a canonical mono RIFF/WAVE PCM file."""
-    import struct
-
-    data = samples.astype("<i2").tobytes()
-    return (
-        struct.pack(
-            "<4sI4s4sIHHIIHH4sI",
-            b"RIFF", 36 + len(data), b"WAVE",
-            b"fmt ", 16, 1, 1, rate, rate * 2, 2, 16,
-            b"data", len(data),
-        )
-        + data
-    )
-
-
-def decode_wav(payload: bytes):
-    """REAL audio decode, dependency-free: walk the RIFF chunk list
-    (tolerating extra chunks and odd-size padding), return
-    (sample_rate, int16 numpy samples) for PCM-16 mono/stereo data."""
-    import struct
-
-    import numpy as np
-
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    i, rate, data = 12, None, None
-    while i + 8 <= len(payload):
-        cid, sz = struct.unpack("<4sI", payload[i : i + 8])
-        i += 8
-        if cid == b"fmt ":
-            audio_fmt, _ch, rate, _, _, bits = struct.unpack(
-                "<HHIIHH", payload[i : i + 16]
-            )
-            if audio_fmt != 1 or bits != 16:
-                raise ValueError("only PCM-16 supported")
-        elif cid == b"data":
-            data = np.frombuffer(payload, "<i2", count=sz // 2, offset=i)
-        i += sz + (sz & 1)
-    if rate is None or data is None:
-        raise ValueError("missing fmt/data chunk")
-    return rate, data
-
-
-AUDIO_FEATURES_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("sample_rate", IntegerType()),
-        StructField("n_samples", LongType()),
-        StructField("rms", FloatType()),
-        StructField("zero_crossings", LongType()),
-    ]
-)
-
-
-def extract_audio_features(media: DataFrame) -> DataFrame:
-    """Audio path with REAL decode: parse each WAV payload (decode_wav,
-    numpy-only), compute RMS amplitude and zero-crossing count — the
-    cheap silence/energy screens an audio crawl runs before expensive
-    ASR. Same Arrow-batched mapInPandas shape as the image path."""
-    import numpy as np
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                "media_id": [], "sample_rate": [], "n_samples": [],
-                "rms": [], "zero_crossings": [],
-            }
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                rate, s = decode_wav(payload)
-                sf = s.astype(np.float64) / 32768.0
-                rows["media_id"].append(mid)
-                rows["sample_rate"].append(rate)
-                rows["n_samples"].append(len(s))
-                rows["rms"].append(float(np.sqrt(np.mean(sf**2))) if len(s) else 0.0)
-                rows["zero_crossings"].append(
-                    int(np.count_nonzero(np.diff(np.signbit(sf)))) if len(s) else 0
-                )
-            yield pd.DataFrame(rows)
-
-    return fan_out(media.select("media_id", "payload")).mapInPandas(
-        fn, schema=AUDIO_FEATURES_SCHEMA
-    )
-
-
-def synthetic_wav_media(
-    spark, n: int = 64, rate: int = 8000, duration_s: float = 0.2
-) -> DataFrame:
-    """Media table whose payloads are REAL encoded WAV files: one sine
-    tone per id (220 Hz × (1 + id % 8)), PCM-16 mono."""
-    import numpy as np
-
-    n_samp = int(rate * duration_s)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        t = np.arange(n_samp, dtype=np.float64) / rate
-        for pdf in batches:
-            payloads = []
-            for mid in pdf["id"]:
-                freq = 220.0 * (1 + int(mid) % 8)
-                s = (0.5 * np.sin(2 * np.pi * freq * t) * 32767).astype("<i2")
-                payloads.append(encode_wav_pcm16(s, rate))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["id"],
-                    "kind": "audio",
-                    "payload": payloads,
-                    "mime": "audio/wav",
-                    "width": 0,
-                    "height": 0,
-                    "duration_ms": int(duration_s * 1000),
-                }
-            )
-
-    return _range_sliced(spark, n).mapInPandas(fn, schema=MEDIA_SCHEMA)
-
-
 def extract_image_features(
     media: DataFrame,
     dim: int = 8,
@@ -361,59 +202,6 @@ def extract_image_features(
 
     cols = ["media_id", "payload", "width", "height"]
     return fan_out(media.select(*cols)).mapInPandas(fn, schema=IMAGE_FEATURES_SCHEMA)
-
-
-def sample_video_frames(
-    media: DataFrame, every_ms: int = 1000
-) -> DataFrame:
-    """Frame-sampling plumbing: one output row per sampled timestamp.
-
-    The frame EXTRACTION is stubbed (no video codec in container): the
-    'frame' is a deterministic 16-byte digest of (payload, ts). The
-    explode shape — row per (media_id, frame_ts, frame_bytes) — is the
-    real contract a downstream embedding stage consumes.
-    """
-    out_schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("frame_ts_ms", IntegerType()),
-            StructField("frame", BinaryType()),
-        ]
-    )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            rows = {"media_id": [], "frame_ts_ms": [], "frame": []}
-            for mid, payload, dur in zip(
-                pdf["media_id"], pdf["payload"], pdf["duration_ms"]
-            ):
-                dur = int(dur or 0)
-                for ts in range(0, max(dur, 1), every_ms):
-                    rows["media_id"].append(mid)
-                    rows["frame_ts_ms"].append(ts)
-                    rows["frame"].append(
-                        hashlib.md5((payload or b"") + ts.to_bytes(8, "big")).digest()
-                    )
-            yield pd.DataFrame(rows)
-
-    return fan_out(media.select("media_id", "payload", "duration_ms")).mapInPandas(
-        fn, schema=out_schema
-    )
-
-
-def media_stats(media: DataFrame) -> DataFrame:
-    """Pure-JVM metadata aggregation over a media table (no payload
-    decode): per kind, count/bytes/avg dims — the cheap first pass any
-    100 TB media crawl runs before spending GPU-decode money."""
-    return media.groupBy("kind").agg(
-        F.count(F.lit(1)).alias("n_items"),
-        F.sum(F.length("payload")).alias("total_bytes"),
-        F.avg("width").alias("avg_width"),
-        F.avg("height").alias("avg_height"),
-        F.avg("duration_ms").alias("avg_duration_ms"),
-    )
 
 
 def synthetic_media(spark, n: int = 64, seed: int = 42) -> DataFrame:

@@ -1,5 +1,5 @@
 """Privacy auditing for training-data release: k-anonymity and
-l-diversity over quasi-identifier columns, plus suppression.
+l-diversity over quasi-identifier columns, plus salted masking.
 
 A released dataset is k-anonymous when every combination of
 quasi-identifier (QI) values is shared by >= k rows (Sweeney 2002) —
@@ -11,9 +11,7 @@ regex PII scrub (`functions/text.py`, q53): scrubbing removes literal
 identifiers, these audit the STATISTICAL re-identification surface.
 
 Scale shape: the audit is one map-side-combined groupBy on the QI
-columns; suppression anti-joins the data against the VIOLATING group
-set, which is the small side by construction (the long tail below k)
-— AQE broadcasts it. Never a window over the full table.
+columns, never a window over the full table.
 """
 
 from __future__ import annotations
@@ -40,42 +38,6 @@ def k_anonymity_report(
         aggs.append(F.count_distinct(sensitive_col).alias("l_div"))
     out = df.groupBy(*qi_cols).agg(*aggs)
     return out.withColumn("satisfies_k", F.col("n") >= k)
-
-
-def k_anonymity_summary(
-    df: DataFrame, qi_cols: Sequence[str], k: int
-) -> DataFrame:
-    """One-row dataset verdict: the dataset's actual k (min group
-    size), group/row counts and how many fall below ``k``. The single
-    row a publish gate checks (cf. quality.Suite's certified flag)."""
-    rep = k_anonymity_report(df, qi_cols, k)
-    return rep.agg(
-        F.min("n").alias("k_actual"),
-        F.count(F.lit(1)).alias("n_groups"),
-        F.sum(F.when(~F.col("satisfies_k"), 1).otherwise(0))
-        .cast("long")
-        .alias("violating_groups"),
-        F.sum(F.when(~F.col("satisfies_k"), F.col("n")).otherwise(0))
-        .cast("long")
-        .alias("violating_rows"),
-        F.sum("n").cast("long").alias("total_rows"),
-    )
-
-
-def suppress_below_k(
-    df: DataFrame, qi_cols: Sequence[str], k: int
-) -> DataFrame:
-    """Suppression: drop every row whose QI group has < k members —
-    the remainder is k-anonymous BY CONSTRUCTION (removing whole groups
-    cannot shrink surviving groups). Anti-join against the violating
-    group set (the small side; AQE broadcasts it)."""
-    violating = (
-        df.groupBy(*qi_cols)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") < k)
-        .select(*qi_cols)
-    )
-    return df.join(violating, list(qi_cols), "left_anti")
 
 
 def pseudonym_text(col, salt: str, prefix: str = "anon_"):
@@ -107,8 +69,8 @@ def mask_columns(df: DataFrame, spec: dict[str, str], salt: str) -> DataFrame:
     """Produce a masked VIEW of ``df``: every column in ``spec`` is
     replaced in place by a deterministic salted pseudonym (``'text'`` →
     prefixed hex string, ``'numeric'`` → 48-bit bigint), all other
-    columns pass through. Complements suppression/k-anonymity above:
-    those bound group-level re-identification, this removes the direct
+    columns pass through. Complements the k-anonymity audit above: it
+    measures group-level re-identification, this removes the direct
     identifiers while preserving equality (1:1 per salt), so
     distinct-counts, group-bys and joins on the masked columns return
     the same answers as on the originals.

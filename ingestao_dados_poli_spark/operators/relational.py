@@ -84,23 +84,6 @@ def top_k(
     return df.orderBy(*order_by).limit(k)
 
 
-def top_k_per_group(
-    df: DataFrame,
-    partition_by: Sequence[str],
-    order_by: Sequence[Column],
-    k: int,
-    rank_col: str = "rn",
-) -> DataFrame:
-    """Per-group top-k via row_number window; one shuffle on the group
-    key. For heavy skew, pre-aggregate or salt before ranking."""
-    w = Window.partitionBy(*partition_by).orderBy(*order_by)
-    return (
-        df.withColumn(rank_col, F.row_number().over(w))
-        .filter(F.col(rank_col) <= k)
-        .drop(rank_col)
-    )
-
-
 def dedup_keep_first(
     df: DataFrame,
     keys: Sequence[str],
@@ -229,20 +212,6 @@ def _md5_threshold(fraction: float) -> str:
     return "g" if t >= 16**8 else format(t, "08x")
 
 
-def deterministic_sample(df: DataFrame, key_col: str, fraction: float) -> DataFrame:
-    """Reproducible Bernoulli sampling by CONTENT, not RNG: a row
-    survives iff the first 8 hex chars of ``md5(key)`` sort below the
-    fraction's threshold. Unlike ``sample``/``sampleBy`` (engine RNG,
-    partitioning-sensitive), membership here is a pure function of the
-    key — stable across reruns, repartitions, engines (DuckDB/Trino
-    compute the identical md5), and INCREMENTAL ingest: a doc admitted
-    today is admitted in every future run, which is what makes a
-    training-data mix reproducible and auditable. One scan-side string
-    compare, no shuffle, no RNG state."""
-    h = F.substring(F.md5(F.col(key_col).cast("string")), 1, 8)
-    return df.filter(h < F.lit(_md5_threshold(fraction)))
-
-
 def stratified_sample_deterministic(
     df: DataFrame,
     stratum_col: str,
@@ -250,11 +219,15 @@ def stratified_sample_deterministic(
     fractions: dict,
     default: float = 0.0,
 ) -> DataFrame:
-    """Per-stratum ``deterministic_sample`` — the reproducible
-    data-mixing lever (keep 100% of rare high-quality sources, hash-thin
-    the crawl). Same contract as ``stratified_sample`` but membership is
-    a pure function of (stratum fraction, key bytes); strata absent from
-    ``fractions`` get ``default``. Scan-side only."""
+    """Reproducible per-stratum Bernoulli sampling by CONTENT, not RNG —
+    the data-mixing lever (keep 100% of rare high-quality sources,
+    hash-thin the crawl). A row survives iff the first 8 hex chars of
+    ``md5(key)`` sort below its stratum fraction's threshold; strata
+    absent from ``fractions`` get ``default``. Unlike ``sampleBy``
+    (engine RNG, partitioning-sensitive), membership is a pure function
+    of (stratum fraction, key bytes) — stable across reruns,
+    repartitions, engines (DuckDB computes the identical md5) and
+    incremental ingest. Scan-side only."""
     h = F.substring(F.md5(F.col(key_col).cast("string")), 1, 8)
     thresh = None
     for stratum, frac in fractions.items():

@@ -3,11 +3,6 @@
 Not present in the reference (SURVEY §2.7/§7 step 6) — added as the
 engine's ANN surface for training-data pipelines:
 
-- ``topk_bruteforce``: exact cosine top-k. Queries are broadcast (they
-  are small by definition); the corpus streams through once; per-query
-  top-k via window rank. At 100 TB the corpus scan dominates and is
-  embarrassingly parallel — no shuffle of the corpus, only of the
-  (num_queries × k)-sized ranked candidates.
 - ``signed_random_projection`` + ``topk_lsh``: the scale path. Random
   hyperplane LSH buckets corpus and queries; candidate set = bucket
   collisions (multi-probe via multiple tables); exact cosine re-rank on
@@ -28,116 +23,10 @@ from pyspark.sql import functions as F
 
 from ingestao_dados_poli_spark.functions.vectors import cosine
 from ingestao_dados_poli_spark.operators.dedup import (
-    _pairs_in_group,
     plain_bucket_pairs,
     salted_bucket_pairs,
 )
 from ingestao_dados_poli_spark.partitioning import fan_out
-
-
-def topk_bruteforce(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    chunk_rows: int = 1 << 20,
-) -> DataFrame:
-    """Exact cosine top-k: (query_id, vec_id, cos_sim), k rows per query.
-
-    Two-phase plan: broadcast(queries) × corpus → scan-side cosine →
-    per-(partition, chunk, query) pre-reduce → tiny per-query window.
-    The corpus is never shuffled, and the round-1 scale-killer — the
-    whole scored product row-numbered through |Q| window tasks — is
-    gone: the pre-reduce groups spread over |Q|·P·chunks keys, and the
-    final ``row_number`` window ranks ≤ k·(chunks per partition)·P
-    rows per query.
-
-    The ``collect_list`` pre-reduce buffer is NOT spillable, so group
-    size is bounded structurally rather than by a docstring: each scan
-    partition's scored rows are split into chunks of ≤ ``chunk_rows``
-    rows (via ``monotonically_increasing_id``'s documented low 33 bits
-    = the within-partition record number), and the group key is
-    (query, partition, chunk). No group — hence no aggregation buffer
-    — can exceed ``chunk_rows`` structs (~50 MB of (double, long) at
-    the 1 Mi default), whatever the partition size or |Q|. Chunking
-    cannot change the answer: a global top-k row for a query is by
-    definition in the top-k of every subset that contains it, so the
-    chunk-local slice never discards one. At default parquet split
-    sizes a partition is a single chunk and the plan is identical to
-    the unchunked one.
-
-    Null- and NaN-scored candidates are excluded by the pre-reduce:
-    null embeddings and zero-norm vectors score null (``cosine`` uses
-    ``try_divide`` — ANSI mode raises on a bare double division), and
-    NaN ELEMENTS inside an embedding propagate to a NaN score, which
-    would sort FIRST in the final descending window but LAST in the
-    ascending pre-reduce. Brute force is the exact baseline for modest
-    |Q|; ``topk_lsh`` / ``ivf_search`` are the advertised 100 TB paths.
-    """
-    q = F.broadcast(
-        queries.select(F.col(query_id), F.col(query_vec))
-    )
-    scored = fan_out(corpus.select(F.col(corpus_id), F.col(corpus_vec))).crossJoin(q).select(
-        F.col(query_id),
-        F.col(corpus_id),
-        cosine(F.col(corpus_vec), F.col(query_vec)).cast("double").alias("cos_sim"),
-        # Within-partition record number (mid's low 33 bits) → chunk id.
-        # Computed on the SCORED product, so the bound holds in scored
-        # rows even though the broadcast cross join multiplies each
-        # corpus row by |Q| inside the partition.
-        (
-            F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1))
-            / F.lit(int(chunk_rows))
-        )
-        .cast("long")
-        .alias("_chunk"),
-    )
-    # Phase 1: chunk-local top-k. struct sort on (-cos, id) ==
-    # (cos desc, id asc) — the same total order the final window uses,
-    # so the pre-reduce provably never discards a global top-k row.
-    # NaN excluded along with null: a zero-norm vector scores 0/0 = NaN,
-    # which Spark sorts LAST ascending but FIRST descending — left in,
-    # the pre-reduce and the final window would disagree about it.
-    pre = (
-        scored.filter(F.col("cos_sim").isNotNull() & ~F.isnan("cos_sim"))
-        .groupBy(
-            F.col(query_id),
-            F.spark_partition_id().alias("_pid"),
-            F.col("_chunk"),
-        )
-        .agg(
-            F.slice(
-                F.sort_array(
-                    F.collect_list(
-                        F.struct(
-                            (-F.col("cos_sim")).alias("_neg"),
-                            F.col(corpus_id).alias("_cid"),
-                        )
-                    )
-                ),
-                1,
-                k,
-            ).alias("_top")
-        )
-        .select(F.col(query_id), F.explode("_top").alias("_t"))
-        .select(
-            F.col(query_id),
-            F.col("_t._cid").alias(corpus_id),
-            (-F.col("_t._neg")).alias("cos_sim"),
-        )
-    )
-    # Phase 2: final exact rank over the ≤ k·P survivors per query.
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("cos_sim").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        pre.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
 
 
 def _plane_signs(table: int, plane: int, dim: int) -> list[float]:
@@ -270,10 +159,10 @@ def topk_lsh(
     ``num_planes=0`` with ``num_tables=1`` and a ``max_bucket_size``
     above the corpus size is the DEGENERATE-EXACT configuration: every
     row lands in the single bucket, recall is 1.0 by construction, and
-    the result equals ``topk_bruteforce`` — the oracle-twin mode (the
-    IVF analog is ``ivf_topk(nprobe=nlist)``). ``score_round`` rounds
-    the cosine BEFORE ranking so float noise can't flip ranks across
-    engines.
+    the result equals exact brute-force top-k — the oracle-twin mode
+    (the IVF analog is ``ivf_topk(nprobe=nlist)``). ``score_round``
+    rounds the cosine BEFORE ranking so float noise can't flip ranks
+    across engines.
     """
     sig_fn = _lsh_signatures_udf(num_planes, num_tables, dim) if dim else None
 
@@ -720,7 +609,7 @@ def ivf_topk(
     degrades gracefully to exact brute force (the oracle case);
     recall/cost tunes with nprobe exactly like FAISS IVF.
 
-    Tie rules match nearest_centroid/topk_bruteforce: equal probe scores
+    Tie rules match nearest_centroid: equal probe scores
     go to the lowest centroid index, equal cosine to the lowest
     corpus id. ``score_round`` rounds the final cosine (engine parity).
     """
@@ -899,16 +788,9 @@ def ivf_index_read(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Union of the committed index deltas since the last compaction —
-    the full assigned corpus. One multi-directory parquet scan; filters
-    on centroid_id prune the hive partition dirs of every delta.
-
-    A compaction publishes the WHOLE folded index as one snapshot whose
-    commit marker carries ``base: true`` (`ivf_index_compact`); deltas
-    before the newest base are superseded, so the union starts there —
-    unioning them too would duplicate every pre-compaction row whenever
-    ``vacuum(keep>1)`` retains them, and duplicate ids would fill top-k
-    slots twice."""
+    """Union of the committed index deltas — the full assigned corpus.
+    One multi-directory parquet scan; filters on centroid_id prune the
+    hive partition dirs of every delta."""
     from functools import reduce
 
     from ingestao_dados_poli_spark.sources import versioned
@@ -916,13 +798,6 @@ def ivf_index_read(
     versions = versioned.committed_versions(spark, index_path)
     if not versions:
         raise FileNotFoundError(f"no committed index under {index_path}")
-    bases = [
-        v
-        for v in versions
-        if versioned.snapshot_marker(spark, index_path, v).get("base")
-    ]
-    if bases:
-        versions = [v for v in versions if v >= bases[-1]]
     # one read PER delta, each with its own basePath: a single
     # multi-path read would try to unify partition discovery across
     # version roots (v=N and centroid_id both look like partitions)
@@ -962,41 +837,6 @@ def ivf_index_search(
         assigned, queries, centroids, k=k, nprobe=nprobe,
         score_round=score_round, **name_cols,
     )
-
-
-def ivf_index_compact(
-    spark,
-    index_path: str,
-    keep: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> int:
-    """Fold all committed index deltas into one snapshot (still
-    hive-partitioned by centroid_id) and vacuum the olds away — bounds
-    the reader's union fan-in after many ingests, exactly like
-    `dedup.fingerprint_store_compact` does for the fingerprint store.
-    Duplicate ids across deltas (idempotent re-ingests) collapse to
-    one row. Returns the compacted version. Not safe concurrently
-    with an in-flight ingest.
-
-    The compacted snapshot commits with ``base: true`` in its marker;
-    `ivf_index_read` unions only deltas from the newest base onward, so
-    ``keep > 1`` (retaining superseded deltas for pinned reads) no
-    longer duplicates pre-compaction rows in the live index."""
-    from ingestao_dados_poli_spark.sources import versioned
-
-    full = ivf_index_read(
-        spark, index_path, id_col=id_col, vec_col=vec_col
-    ).dropDuplicates([id_col])
-    version = versioned.publish(
-        spark,
-        full,
-        index_path,
-        partition_by=["centroid_id"],
-        marker_extra={"base": True},
-    )
-    versioned.vacuum(spark, index_path, keep=keep)
-    return version
 
 
 def quantize_embedding(vec_col: str, scale: int = 1000) -> "Column":

@@ -1,12 +1,12 @@
-"""Time-series repair operators: forward fill and linear interpolation
-over gappy per-key series.
+"""Time-series operators over per-key series: linear interpolation of
+gaps and the upper CUSUM change-point chart.
 
 Not in the reference (batch ETL over complete tables); added because
 sensor/metric feeds at scale always arrive with holes, and the repair
 must happen distributed — both operators are pure window algebra (one
 shuffle on the series key, linear work per partition), no UDFs, no
-driver involvement, and they compose with the engine's date-spine
-query (q70) for grid densification before interpolation.
+driver involvement, and interpolation composes with the engine's
+date-spine query (q70) for grid densification.
 """
 
 from __future__ import annotations
@@ -15,27 +15,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def fill_forward(
-    df: DataFrame,
-    value_col: str,
-    *,
-    partition_by: list[str],
-    order_by: list[str],
-    out_col: str | None = None,
-) -> DataFrame:
-    """Carry the last non-null observation forward within each key's
-    order (LOCF). Leading nulls (no prior observation) stay null.
-    One window, rows-unbounded-preceding frame — Spark evaluates it in
-    a single pass per sorted partition."""
-    w = (
-        Window.partitionBy(*partition_by)
-        .orderBy(*order_by)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    filled = F.last(F.col(value_col), ignorenulls=True).over(w)
-    return df.withColumn(out_col or value_col, filled)
 
 
 def linear_interpolate(
@@ -85,23 +64,6 @@ def linear_interpolate(
         .otherwise(lerp)
     )
     return df.withColumn(out_col, interp)
-
-
-def gap_flags(
-    df: DataFrame,
-    ts_col: str,
-    *,
-    partition_by: list[str],
-    max_gap: int | float,
-    flag_col: str = "gap_exceeded",
-) -> DataFrame:
-    """Flag rows whose time since the previous observation exceeds
-    ``max_gap`` (same units as ``ts_col``) — the guard that keeps
-    interpolation honest: repairing across an outage is fabrication,
-    and downstream should see the flag, not a smooth lie."""
-    w = Window.partitionBy(*partition_by).orderBy(ts_col)
-    gap = F.col(ts_col) - F.lag(ts_col).over(w)
-    return df.withColumn(flag_col, F.coalesce(gap > max_gap, F.lit(False)))
 
 
 def cusum_upper(

@@ -291,13 +291,6 @@ def null_counts(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     )
 
 
-def write_report(report: dict[str, Any], path: str) -> None:
-    """Q8 — persist the validation report (reference publishes GX data
-    docs to a bucket, etl/1:196; we write plain JSON)."""
-    with open(path, "w", encoding="utf-8") as fh:
-        json.dump(report, fh, ensure_ascii=False, indent=2)
-
-
 def render_report_markdown(report: dict[str, Any]) -> str:
     """Human-readable data docs from a validation report — the engine's
     counterpart to the GX data-docs build the reference runs and

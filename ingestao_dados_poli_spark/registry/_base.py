@@ -10,7 +10,12 @@ assembled registry.
 from __future__ import annotations
 
 
+import atexit
 import functools
+import hashlib
+import os
+import shutil
+import tempfile
 
 from collections.abc import Callable
 from contextlib import contextmanager
@@ -82,23 +87,33 @@ def _events_ts(df: DataFrame) -> DataFrame:
 
 
 
-def _scratch(prefix: str) -> str:
-    """mkdtemp registered for atexit removal. Several queries return
-    DataFrames that lazily read sink/state parquet at driver collect
-    time, so in-function rmtree would pull the bytes out from under the
-    result; process-exit cleanup is the earliest safe point, and it
-    stops repeated runs under different pids from accumulating orphan
-    directories in /tmp (round-5 ADVICE). mkdtemp (not a pid-suffixed
-    fixed path) also guarantees two concurrent drivers — or a recycled
-    pid — can never cross-wire each other's stateful stores (round-6
-    ADVICE on q300's fingerprint-store lifecycle assertions)."""
-    import atexit
-    import shutil
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix=prefix)
+@functools.cache
+def _scratch_root() -> str:
+    """This process's scratch root: one mkdtemp, removed at exit.
+    Several queries return DataFrames that lazily read files they wrote
+    here at driver collect time, so in-function rmtree would pull the
+    bytes out from under the result; process exit is the earliest safe
+    point, and it leaves nothing behind in the temp dir. mkdtemp (not a
+    pid-suffixed fixed path) also keeps two concurrent drivers — or a
+    recycled pid — from ever sharing a stateful store."""
+    d = tempfile.mkdtemp(prefix="poli_scratch_")
     atexit.register(shutil.rmtree, d, ignore_errors=True)
     return d
+
+
+def _scratch(prefix: str) -> str:
+    """A fresh directory under the scratch root, one per call."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root())
+
+
+def _scratch_dir(name: str, sf_dir: str) -> str:
+    """The directory query ``name`` keeps files derived from ``sf_dir``
+    in: the same path on every call in this process, a different one
+    per dataset, so a copy written once per process is never served
+    for another ``sf_dir``. Neither created nor cleared here — a query
+    that rebuilds on every call clears it on entry."""
+    key = hashlib.sha1(os.path.realpath(sf_dir).encode()).hexdigest()[:12]
+    return os.path.join(_scratch_root(), f"{name}_{key}")
 
 
 def _lit_df(spark: SparkSession, schema_ddl, rows: list[tuple]) -> DataFrame:
@@ -373,19 +388,13 @@ _PSI_WIDTH = 60000.0
 
 # --------------------- 78. bucketed co-located join (zero-exchange fact⋈fact)
 
-def q136_table_names() -> tuple[str, str, str]:
-    """(orders_table, lineitem_table, base_dir) — pid-scoped so parallel
-    test/driver processes never collide in the shared session catalog
-    or /tmp. Exposed so the plan test can rebuild the join on the
-    registered tables."""
-    import os as _os
-
-    pid = _os.getpid()
-    return (
-        f"q136_orders_b{pid}",
-        f"q136_lineitem_b{pid}",
-        f"/tmp/q136_bkt_{pid}",
-    )
+def q136_table_names() -> tuple[str, str]:
+    """(orders_table, lineitem_table) — pid-scoped so parallel
+    test/driver processes never collide in the shared session catalog.
+    Exposed so the plan test can rebuild the join on the registered
+    tables."""
+    pid = os.getpid()
+    return f"q136_orders_b{pid}", f"q136_lineitem_b{pid}"
 
 
 __all__ = [
@@ -416,6 +425,7 @@ __all__ = [
     "_events_ts",
     "_lit_df",
     "_scratch",
+    "_scratch_dir",
     "_t",
     "events_compat",
     "q",

@@ -777,11 +777,10 @@ def q122_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pyds.register(spark)
     docs = _t(spark, sf_dir, "documents")
-    # pid-scoped REUSED dir, cleared on entry: bounds /tmp growth to
-    # one corpus copy per process (mkdtemp per call leaked one per
-    # bench run). Safe because each constructed DataFrame is fully
+    # REUSED dir, cleared on entry: bounds scratch growth to one corpus
+    # copy per process. Safe because each constructed DataFrame is fully
     # consumed before the next call re-enters (gate/bench are serial).
-    base = f"/tmp/q122_jsonl_{_os.getpid()}"
+    base = _scratch_dir("q122_jsonl", sf_dir)
     _shutil.rmtree(base, ignore_errors=True)
     out = _os.path.join(base, "data")
     # NOTE (r08, measured): fan_out before this sink A/B-measured 1.34x
@@ -1182,13 +1181,12 @@ def q138_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     order differs by construction — THE ulp-level caveat of algebraic
     MV maintenance, surfaced here by rounding both engines to 2/4 dp).
     """
-    import os as _os
     import shutil as _shutil
 
     from ingestao_dados_poli_spark.operators import incremental as IC
     from ingestao_dados_poli_spark.sources import versioned as V
 
-    base_path = f"/tmp/q138_mv_{_os.getpid()}"
+    base_path = _scratch_dir("q138_mv", sf_dir)
     _shutil.rmtree(base_path, ignore_errors=True)
     cutoff = "1997-06-01"
     keys, measures = ["o_orderpriority"], ["o_totalprice"]
@@ -1364,16 +1362,14 @@ def q156_multi_format_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     quoting bug or JSON escaping difference flips the hash — the
     oracle computes the digest from the parquet original."""
     import os as _os
-    import shutil as _shutil
 
     from ingestao_dados_poli_spark.functions.cleaning import align_union
     from ingestao_dados_poli_spark.operators import audit as AU
     from ingestao_dados_poli_spark.sources.readers import read_csv, read_json
 
-    base = f"/tmp/q156_fmt_{_os.getpid()}"
+    base = _scratch_dir("q156_fmt", sf_dir)
     docs = _t(spark, sf_dir, "documents")
     if not _os.path.exists(base):
-        _shutil.rmtree(base, ignore_errors=True)
         docs.filter(F.col("doc_id") % 3 == 1).write.option(
             "header", "true"
         ).option("sep", "|").mode("overwrite").csv(base + "/csv")

@@ -169,7 +169,6 @@ def q168_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     passes, and the SINK's bytes (not the in-memory frame) carry
     exactly the transformed population. The reference's notebook hop
     (etl/1:44-186) as six lines of configuration."""
-    import os as _os
     import shutil as _shutil
 
     from ingestao_dados_poli_spark.plans.pipeline import (
@@ -179,7 +178,7 @@ def q168_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ingestao_dados_poli_spark.quality import Suite, not_null
 
-    base = f"/tmp/q168_pipe_{_os.getpid()}"
+    base = _scratch_dir("q168_pipe", sf_dir)
     _shutil.rmtree(base, ignore_errors=True)
     out = base + "/silver"
 

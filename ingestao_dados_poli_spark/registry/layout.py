@@ -441,14 +441,13 @@ def q132_versioned_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     red. The oracle is the source table itself: lossless publish means
     identical count/sum, live_version stays 1 because the drifted
     candidate was refused before writing."""
-    import os as _os
     import shutil as _shutil
 
     from ingestao_dados_poli_spark.sources import versioned as V
 
     docs = _t(spark, sf_dir, "documents")
-    # pid-scoped, cleared on entry: bounds /tmp to one copy per process
-    base = f"/tmp/q132_tbl_{_os.getpid()}"
+    # cleared on entry: bounds scratch space to one copy per process
+    base = _scratch_dir("q132_tbl", sf_dir)
     _shutil.rmtree(base, ignore_errors=True)
     path = base + "/t"
     v1 = V.publish(spark, docs, path)
@@ -512,7 +511,6 @@ def q135_bloom_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     bloom can't be saved across jobs. Oracled against the PLAIN join:
     no-false-negatives means pruning must not change a single group or
     sum (false positives are absorbed by the join)."""
-    import os as _os
     import shutil as _shutil
 
     from ingestao_dados_poli_spark.operators import bloom as B
@@ -522,7 +520,7 @@ def q135_bloom_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("o_orderdate") < "1997-04-01")
     )
     bf = B.build_key_bloom(orders, "o_orderkey", num_bits=1 << 21)
-    bpath = f"/tmp/q135_bloom_{_os.getpid()}"
+    bpath = _scratch_dir("q135_bloom", sf_dir)
     _shutil.rmtree(bpath, ignore_errors=True)
     B.save_bloom(spark, bf, bpath)
     loaded, nh = B.load_bloom(spark, bpath)
@@ -581,10 +579,11 @@ def q136_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ingestao_dados_poli_spark.sources.writers import write_bucketed_table
 
-    ord_t, li_t, base = q136_table_names()
+    ord_t, li_t = q136_table_names()
+    base = _scratch_dir("q136_bkt", sf_dir)
     # idempotent re-entry: drop catalog entries AND external files —
-    # saveAsTable(overwrite) alone would CTAS into a non-empty dir when
-    # a fresh session inherits a previous run's /tmp artifacts.
+    # saveAsTable(overwrite) alone would CTAS into a non-empty dir left
+    # by an earlier call in this process.
     spark.sql(f"DROP TABLE IF EXISTS {ord_t}")
     spark.sql(f"DROP TABLE IF EXISTS {li_t}")
     _shutil.rmtree(base, ignore_errors=True)
@@ -695,7 +694,7 @@ def q144_stats_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ingestao_dados_poli_spark.sources import stats as ST
 
-    base = f"/tmp/q144_cluster_{_os.getpid()}"
+    base = _scratch_dir("q144_cluster", sf_dir)
     clustered = base + "/lineitem"
     if not _os.path.exists(clustered):
         _shutil.rmtree(base, ignore_errors=True)
@@ -757,7 +756,7 @@ def q146_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ingestao_dados_poli_spark.sources import stats as ST
     from ingestao_dados_poli_spark.sources.writers import write_clustered
 
-    base = f"/tmp/q146_z_{_os.getpid()}"
+    base = _scratch_dir("q146_z", sf_dir)
     clustered = base + "/lineitem"
     if not _os.path.exists(clustered):
         _shutil.rmtree(base, ignore_errors=True)
@@ -820,7 +819,7 @@ def q147_optimize_lossless(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ingestao_dados_poli_spark.operators import audit as AU
     from ingestao_dados_poli_spark.sources.writers import optimize_table
 
-    base = f"/tmp/q147_opt_{_os.getpid()}"
+    base = _scratch_dir("q147_opt", sf_dir)
     src, dst = base + "/src", base + "/opt"
     if not _os.path.exists(dst):
         _shutil.rmtree(base, ignore_errors=True)
@@ -943,12 +942,11 @@ def q150_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     == the source table). The column-level assertions (pinned read has
     no quality column; unstated drift still raises) live in
     test_versioned."""
-    import os as _os
     import shutil as _shutil
 
     from ingestao_dados_poli_spark.sources import versioned as V
 
-    base = f"/tmp/q150_evo_{_os.getpid()}"
+    base = _scratch_dir("q150_evo", sf_dir)
     _shutil.rmtree(base, ignore_errors=True)
     path = base + "/docs"
     docs = _t(spark, sf_dir, "documents")
@@ -1002,14 +1000,13 @@ def q151_dynamic_partition_overwrite(
     doubled values on the corrected day, originals elsewhere. The
     1-row min-day collect is driver-side CONFIG derivation (which day
     to fix), not data movement."""
-    import os as _os
     import shutil as _shutil
 
     from ingestao_dados_poli_spark.sources.writers import (
         overwrite_partitions_dynamic,
     )
 
-    base = f"/tmp/q151_dpo_{_os.getpid()}"
+    base = _scratch_dir("q151_dpo", sf_dir)
     path = base + "/events"
     _shutil.rmtree(base, ignore_errors=True)
     ev = _t(spark, sf_dir, "events").withColumn(
@@ -1053,12 +1050,11 @@ def q160_gdpr_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     complete after retention-policy vacuum, and test_versioned pins
     exactly that sequence (pinned-still-there, then vacuum, then
     pinned-read raises)."""
-    import os as _os
     import shutil as _shutil
 
     from ingestao_dados_poli_spark.sources import versioned as V
 
-    base = f"/tmp/q160_gdpr_{_os.getpid()}"
+    base = _scratch_dir("q160_gdpr", sf_dir)
     path = base + "/events"
     _shutil.rmtree(base, ignore_errors=True)
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
@@ -1162,12 +1158,11 @@ def q176_snapshot_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta instead of re-reading either version in full. The oracle
     recomputes the same classification from the source table's
     algebra."""
-    import os as _os
     import shutil as _shutil
 
     from ingestao_dados_poli_spark.sources import versioned as V
 
-    base = f"/tmp/q176_cdf_{_os.getpid()}"
+    base = _scratch_dir("q176_cdf", sf_dir)
     path = base + "/docs"
     _shutil.rmtree(base, ignore_errors=True)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
@@ -1230,7 +1225,7 @@ def q181_partitioned_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pid = _os.getpid()
     ord_t, li_t = f"q181_orders_{pid}", f"q181_lineitem_{pid}"
-    base = f"/tmp/q181_pb_{pid}"
+    base = _scratch_dir("q181_pb", sf_dir)
     spark.sql(f"DROP TABLE IF EXISTS {ord_t}")
     spark.sql(f"DROP TABLE IF EXISTS {li_t}")
     _shutil.rmtree(base, ignore_errors=True)
@@ -1372,7 +1367,7 @@ def q184_mergeschema_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
     import shutil as _shutil
 
-    base = f"/tmp/q184_ms_{_os.getpid()}"
+    base = _scratch_dir("q184_ms", sf_dir)
     path = base + "/docs"
     if not _os.path.exists(path):
         _shutil.rmtree(base, ignore_errors=True)
@@ -1415,24 +1410,26 @@ def q201_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical rollup straight from the parquet source, so the
     value-hash proves the ORC roundtrip is LOSSLESS for every column
     that matters (decimal-as-double survives; cents quantization makes
-    the sum exact). Write is pid+sf-scoped and idempotent within a
-    session (bench runs every query twice)."""
+    the sum exact). Write is sf-scoped and idempotent within a session
+    (bench runs every query twice)."""
     import os as _os
     import shutil as _shutil
 
-    tag = _os.path.basename(sf_dir.rstrip("/"))
-    base = f"/tmp/q201_orc_{_os.getpid()}_{tag}"
+    from ingestao_dados_poli_spark.sources.readers import read_orc
+    from ingestao_dados_poli_spark.sources.writers import write_orc
+
+    base = _scratch_dir("q201_orc", sf_dir)
     orc_path = base + "/lineitem"
     if not _os.path.exists(orc_path):
         _shutil.rmtree(base, ignore_errors=True)
-        (
-            _t(spark, sf_dir, "lineitem")
-            .select("l_returnflag", "l_linestatus", "l_extendedprice")
-            .write.mode("overwrite")
-            .partitionBy("l_returnflag")
-            .orc(orc_path)
+        write_orc(
+            _t(spark, sf_dir, "lineitem").select(
+                "l_returnflag", "l_linestatus", "l_extendedprice"
+            ),
+            orc_path,
+            partition_by=["l_returnflag"],
         )
-    back = spark.read.orc(orc_path).filter(F.col("l_returnflag") != "N")
+    back = read_orc(spark, orc_path).filter(F.col("l_returnflag") != "N")
     return back.groupBy("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).cast("long").alias("n_lines"),
         F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
@@ -1468,8 +1465,7 @@ def q209_corrupt_record_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil as _shutil
 
     events = _t(spark, sf_dir, "events")
-    tag = _os.path.basename(sf_dir.rstrip("/"))
-    base = f"/tmp/q209_jsonl_{_os.getpid()}_{tag}"
+    base = _scratch_dir("q209_jsonl", sf_dir)
     feed = f"{base}/feed"
     if not _os.path.exists(feed):
         _shutil.rmtree(base, ignore_errors=True)
@@ -1519,12 +1515,11 @@ def q221_file_governance_metadata(spark: SparkSession, sf_dir: str) -> DataFrame
     the governance target before returning; drift raises. The oracle
     never sees the files and pins the same ceil arithmetic from row
     counts, so the value-hash proves both the layout contract and the
-    roundtrip. Write is pid+sf-scoped and idempotent within a session
+    roundtrip. Write is sf-scoped and idempotent within a session
     (bench runs every query twice)."""
-    import os as _os
     import shutil as _shutil
 
-    base = f"/tmp/q221_meta_{_os.getpid()}_{_os.path.basename(sf_dir)}"
+    base = _scratch_dir("q221_meta", sf_dir)
     _shutil.rmtree(base, ignore_errors=True)
     od = _t(spark, sf_dir, "orders").select(
         "o_orderkey",

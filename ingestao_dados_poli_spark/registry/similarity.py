@@ -841,7 +841,6 @@ def q133_fp_store_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     Version lifecycle is asserted in-line: ingest, ingest, compact
     (vacuum to 1), ingest must leave exactly committed versions
     [3, 4]."""
-    import os as _os
     import shutil as _shutil
 
     from ingestao_dados_poli_spark.operators.dedup import fingerprint_exact
@@ -866,7 +865,7 @@ def q133_fp_store_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    store = f"/tmp/q133_fp_{_os.getpid()}"
+    store = _scratch_dir("q133_fp", sf_dir)
     _shutil.rmtree(store, ignore_errors=True)
     DD.dedup_ingest_batch(spark, b1, store, "text", "doc_id")
     DD.dedup_ingest_batch(spark, b2, store, "text", "doc_id")
@@ -1087,7 +1086,6 @@ def q148_ivf_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge — degrades exactly to brute force and value-checks against
     the exact-cosine oracle. Batching-invariance (index built in 2
     batches == built in 1) is pinned in test_similarity_ivf."""
-    import os as _os
     import shutil as _shutil
 
     from ingestao_dados_poli_spark.operators.similarity import (
@@ -1095,8 +1093,8 @@ def q148_ivf_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_index_search,
     )
 
-    idx = f"/tmp/q148_ivf_{_os.getpid()}/index"
-    _shutil.rmtree(f"/tmp/q148_ivf_{_os.getpid()}", ignore_errors=True)
+    idx = _scratch_dir("q148_ivf", sf_dir)
+    _shutil.rmtree(idx, ignore_errors=True)
     emb = _t(spark, sf_dir, "embeddings").withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     )

@@ -655,7 +655,7 @@ def q190_streaming_gated_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # footer-metadata count of the written shard — no events re-scan
     n_bad = spark.read.parquet(f"{work}/shards/s=2").count()
-    quarantined = spark.read.parquet(f"{work}/quarantine/batch_id=*").count()
+    quarantined = spark.read.parquet(f"{work}/quarantine").count()
     if quarantined != n_bad:
         raise AssertionError(
             f"publish gate leaked: quarantined {quarantined} rows, "
@@ -704,7 +704,7 @@ def q191_quarantine_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     # repair loop: quarantined rows -> declared fix -> RE-VALIDATE
     # through the same suite -> fold as one more (batch_id-disjoint)
     # delta. Validation failure raises: repair is not a gate bypass.
-    quarantined = spark.read.parquet(f"{work}/quarantine/batch_id=*")
+    quarantined = spark.read.parquet(f"{work}/quarantine").drop("batch_id")
     repaired = quarantined.withColumn(
         "event_type", F.coalesce(F.col("event_type"), F.lit("unknown"))
     )
@@ -1327,7 +1327,7 @@ def q301_streaming_pipeline_e2e(
             f"streamed ingest drifted: store versions {got}, "
             f"{len(raw_partials)} micro-batches (expected 2 of each)"
         )
-    corpus = spark.read.parquet(f"{surv_dir}/batch=*").select(
+    corpus = spark.read.parquet(surv_dir).select(
         "doc_id", "lang", "source"
     )
     pub_version = V.publish(spark, corpus, pub)

@@ -929,9 +929,7 @@ def q139_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Statistical re-identification audit (`operators/privacy.py`):
     k-anonymity + l-diversity per quasi-identifier group over customer
     (QI = segment x nation, sensitive = banded account balance). One
-    map-side-combined shuffle; the companion suppress_below_k drops
-    whole violating groups (k-anonymous by construction — proven in
-    test_privacy). Complements q53's literal PII scrub: scrubbing
+    map-side-combined shuffle. Complements q53's literal PII scrub: scrubbing
     removes identifiers, this measures the JOIN-attack surface of what
     remains — the check a training-data release gate runs."""
     from ingestao_dados_poli_spark.operators import privacy as PV
@@ -1108,13 +1106,12 @@ def q185_quality_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     committed report snapshots (one tiny config-sized DataFrame per
     run, never a rescan of the data). Oracled against direct
     recomputation of both versions' violation counts."""
-    import os as _os
     import shutil as _shutil
 
     from ingestao_dados_poli_spark import quality as Q_
     from ingestao_dados_poli_spark.sources import versioned as V
 
-    base = f"/tmp/q185_qh_{_os.getpid()}"
+    base = _scratch_dir("q185_qh", sf_dir)
     hist = base + "/quality_history"
     _shutil.rmtree(base, ignore_errors=True)
     docs = _t(spark, sf_dir, "documents")

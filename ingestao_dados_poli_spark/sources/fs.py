@@ -1,9 +1,9 @@
 """Filesystem utilities via Hadoop FileSystem (no Databricks dbutils).
 
-Replaces the reference's ``dbutils.fs.cp``/``dbutils.fs.ls`` calls
-(gerenciando-dados-externos/0b:8; etl/1-processing-banks.py:91-97,196)
-with the Hadoop FileSystem API, which works identically on local, HDFS,
-S3A and GCS paths — executor-free driver metadata ops.
+Replaces the reference's ``dbutils.fs.ls`` calls
+(etl/1-processing-banks.py:91-97,196) with the Hadoop FileSystem API,
+which works identically on local, HDFS, S3A and GCS paths —
+executor-free driver metadata ops.
 """
 
 from __future__ import annotations
@@ -25,15 +25,6 @@ def ls(spark: SparkSession, path: str, suffix: str | None = None) -> list[str]:
     if suffix is not None:
         out = [p for p in out if p.endswith(suffix)]
     return out
-
-
-def cp(spark: SparkSession, src: str, dst: str) -> bool:
-    """Recursive copy (reference 0b:8 dbutils.fs.cp(..., recurse=True))."""
-    fs_src, jsrc, jvm = _fs(spark, src)
-    fs_dst, jdst, _ = _fs(spark, dst)
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    FileUtil = jvm.org.apache.hadoop.fs.FileUtil
-    return bool(FileUtil.copy(fs_src, jsrc, fs_dst, jdst, False, True, hconf))
 
 
 def exists(spark: SparkSession, path: str) -> bool:
@@ -70,15 +61,6 @@ def write_text(spark: SparkSession, path: str, content: str, overwrite: bool = F
 def rm(spark: SparkSession, path: str, recursive: bool = True) -> bool:
     fs, jpath, _ = _fs(spark, path)
     return bool(fs.delete(jpath, recursive))
-
-
-def rename(spark: SparkSession, src: str, dst: str) -> bool:
-    """Filesystem rename — atomic on HDFS/local, copy-free. (On object
-    stores rename is a server-side copy; callers doing swap-on-publish
-    there should flip a manifest/pointer instead.)"""
-    fs, jsrc, jvm = _fs(spark, src)
-    jdst = jvm.org.apache.hadoop.fs.Path(dst)
-    return bool(fs.rename(jsrc, jdst))
 
 
 def file_sizes(

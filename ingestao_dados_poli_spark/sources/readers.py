@@ -1,17 +1,17 @@
-"""Typed source readers (CSV/TSV/pipe, Parquet, JSON).
+"""Typed source readers (CSV/TSV/pipe, Parquet, ORC, JSON).
 
 Re-expresses the reference's landing-zone ingestion (reference:
 gerenciando-dados-externos/0a-moving-from-land-to-bucket-to-parquet.py:26,38,52-53
 — tab/comma/pipe CSV reads with ``header=True`` and *no schema*, yielding
 all-string frames) as schema-first readers: every dataset declares a
 ``StructType`` so numeric/date columns are typed at ingest, filters can
-push down, and bad records are quarantined instead of silently coerced.
+push down, and bad records are kept in a corrupt-record column instead
+of being silently coerced.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 
@@ -75,8 +75,8 @@ def read_json(
     """JSON-lines reader with the same quarantine contract as
     ``read_csv``: under PERMISSIVE mode with an explicit schema,
     malformed lines land whole in ``corrupt_col`` (routed via
-    ``columnNameOfCorruptRecord``) for ``quarantine_corrupt`` to split
-    out, instead of being dropped (DROPMALFORMED) or failing the job
+    ``columnNameOfCorruptRecord``) for the caller to split out,
+    instead of being dropped (DROPMALFORMED) or failing the job
     (FAILFAST)."""
     reader = spark.read.option("mode", mode).options(**options)
     if schema is not None:
@@ -85,83 +85,8 @@ def read_json(
             # the caller's schema is often another DataFrame's cached
             # .schema object — mutating it would make that DataFrame
             # claim a corrupt-record column it doesn't have.
-            from pyspark.sql.types import StructType
-
             schema = StructType(list(schema.fields)).add(corrupt_col, "string")
         reader = reader.schema(schema).option("columnNameOfCorruptRecord", corrupt_col)
     return reader.json(path)
 
 
-def quarantine_corrupt(
-    df: DataFrame, corrupt_col: str = "_corrupt_record"
-) -> tuple[DataFrame, DataFrame]:
-    """Split a PERMISSIVE read into (clean, corrupt) frames.
-
-    The parsed frame is cached first: Spark disallows queries whose only
-    referenced column is the internal corrupt-record column (SPARK-21610),
-    and both halves re-read the source anyway — one materialization
-    serves the clean write AND the quarantine write.
-    """
-    if corrupt_col not in df.columns:
-        return df, df.limit(0)
-    df = df.cache()
-    clean = df.filter(F.col(corrupt_col).isNull()).drop(corrupt_col)
-    bad = df.filter(F.col(corrupt_col).isNotNull())
-    return clean, bad
-
-
-def read_binary_files(
-    spark: SparkSession,
-    path: str,
-    glob: str | None = None,
-    max_bytes: int | None = None,
-) -> DataFrame:
-    """Raw-file ingestion via Spark's built-in ``binaryFile`` source:
-    one row per file with ``(path, modificationTime, length, content
-    binary)`` — the ingestion front door for multimodal corpora (images,
-    audio, any opaque payload) feeding ``operators.multimodal``'s
-    mapInPandas decode/featurize stages.
-
-    ``glob`` filters by filename pattern scan-side
-    (``pathGlobFilter``); ``max_bytes`` pushes a length ceiling into the
-    listing so oversized blobs never reach executors. At scale the
-    source parallelizes across files (one split per file), so millions
-    of small media files fan out naturally; pathological single-huge-
-    file layouts belong in an archive format instead.
-    """
-    reader = spark.read.format("binaryFile")
-    if glob is not None:
-        reader = reader.option("pathGlobFilter", glob)
-    df = reader.load(path)
-    if max_bytes is not None:
-        df = df.filter(F.col("length") <= max_bytes)
-    return df
-
-
-def read_xml(
-    spark: SparkSession,
-    path: str,
-    row_tag: str,
-    schema: StructType | None = None,
-    mode: str = "PERMISSIVE",
-    corrupt_col: str = "_corrupt_record",
-    **options,
-) -> DataFrame:
-    """XML reader (Spark 4 built-in ``xml`` source, ``rowTag``-scoped)
-    with the same schema-first + quarantine contract as ``read_csv`` /
-    ``read_json``: explicit schema skips inference, malformed row
-    elements land whole in ``corrupt_col`` under PERMISSIVE mode for
-    ``quarantine_corrupt`` to split out."""
-    reader = (
-        spark.read.format("xml")
-        .option("rowTag", row_tag)
-        .option("mode", mode)
-        .options(**options)
-    )
-    if schema is not None:
-        if mode == "PERMISSIVE" and corrupt_col not in schema.fieldNames():
-            schema = schema.add(corrupt_col, "string")
-        reader = reader.schema(schema).option(
-            "columnNameOfCorruptRecord", corrupt_col
-        )
-    return reader.load(path)

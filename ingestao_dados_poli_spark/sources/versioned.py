@@ -117,23 +117,6 @@ def snapshot_schema(spark: SparkSession, path: str, version: int) -> StructType 
         return None
 
 
-def snapshot_marker(spark: SparkSession, path: str, version: int) -> dict:
-    """The full commit-marker payload of a committed version ({} for
-    legacy one-line markers). Carries the schema/layout contract plus
-    any ``marker_extra`` the publisher recorded (e.g. a compaction's
-    ``base`` flag)."""
-    marker = f"{path}/v={version}/{_MARKER}"
-    if not fs.exists(spark, marker):
-        raise FileNotFoundError(
-            f"version {version} under {path} is absent or uncommitted"
-        )
-    try:
-        payload = json.loads(fs.read_text(spark, marker))
-        return payload if isinstance(payload, dict) else {}
-    except ValueError:
-        return {}
-
-
 def snapshot_partitioning(
     spark: SparkSession, path: str, version: int
 ) -> list[str] | None:
@@ -159,7 +142,6 @@ def publish(
     path: str,
     allow_schema_change: bool = False,
     partition_by: list[str] | None = None,
-    marker_extra: dict | None = None,
     **writer_options: str,
 ) -> int:
     """Write ``df`` as the next snapshot version and commit it with an
@@ -207,11 +189,6 @@ def publish(
         writer = writer.option(k, v)
     writer.parquet(vdir)
     payload = {"version": n, "schema": json.loads(df.schema.json())}
-    if marker_extra:
-        reserved = {"version", "schema", "partition_by"} & set(marker_extra)
-        if reserved:
-            raise ValueError(f"marker_extra may not override {sorted(reserved)}")
-        payload.update(marker_extra)
     if partition_by:
         # layout contract: record the hive layout so maintenance
         # rewrites (erase_rows, compaction) can republish with the SAME

@@ -106,41 +106,6 @@ def write_clustered(
     )
 
 
-def compact_parquet_dir(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> dict:
-    """Small-file compaction: rewrite a parquet directory so each file
-    is ~``target_file_bytes``, then atomically swap it in place.
-
-    Streaming sinks and fine-grained partitioned writes accumulate
-    thousands of tiny files; at scale that means scan tasks dominated
-    by open/footer overhead and pressure on the namenode/listing. This
-    plans from driver-side metadata only (`fs.file_sizes` — no data
-    read), uses ``coalesce`` (merges splits WITHOUT a shuffle), writes
-    to a temp sibling, and rename-swaps so readers never observe a
-    half-written directory. Returns {files_before, files_after,
-    bytes, target_files}.
-    """
-    sizes = FS.file_sizes(spark, path, suffix=".parquet")
-    total = sum(s for _, s in sizes)
-    n = max(1, math.ceil(total / target_file_bytes))
-    tmp = path.rstrip("/") + ".__compact_tmp__"
-    old = path.rstrip("/") + ".__compact_old__"
-    spark.read.parquet(path).coalesce(n).write.mode("overwrite").parquet(tmp)
-    after = FS.file_sizes(spark, tmp, suffix=".parquet")
-    FS.rename(spark, path, old)
-    FS.rename(spark, tmp, path)
-    FS.rm(spark, old)
-    return {
-        "files_before": len(sizes),
-        "files_after": len(after),
-        "bytes": total,
-        "target_files": n,
-    }
-
-
 def write_bucketed_table(
     df: DataFrame,
     table_name: str,
@@ -175,12 +140,12 @@ def optimize_table(
 ) -> dict:
     """Lakehouse OPTIMIZE: rewrite a parquet directory compacted to
     ~``target_file_bytes`` files AND Z-order-clustered on
-    ``cluster_cols`` in one pass — small-file compaction
-    (`compact_parquet_dir`) and clustering (`write_clustered`) are the
-    same shuffle, so doing them together halves the rewrite cost. The
-    result is the layout the scan-side levers need: big files amortize
-    open/footer overhead, clustering makes footer min/max stats tight
-    so `sources/stats.py` file pruning and row-group skipping bite.
+    ``cluster_cols`` in one pass — small-file compaction and
+    clustering (`write_clustered`) are the same shuffle, so doing them
+    together halves the rewrite cost. The result is the layout the
+    scan-side levers need: big files amortize open/footer overhead,
+    clustering makes footer min/max stats tight so `sources/stats.py`
+    file pruning and row-group skipping bite.
 
     OPTIMIZE must be LOSSLESS — same rows, any order. Verify with
     `operators/audit.table_fingerprint` on src vs dst (q147 does, per

@@ -15,7 +15,6 @@ from __future__ import annotations
 import shutil
 import tempfile
 from contextlib import contextmanager
-from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -278,26 +277,6 @@ def interval_join_streams(
         & (F.col("r_ts") <= F.col("l_ts"))
     )
     return l.join(r, cond, how)
-
-
-def write_stream_parquet(
-    df: DataFrame,
-    path: str,
-    checkpoint: str,
-    trigger_once: bool = True,
-) -> Any:
-    """Parquet sink with checkpointing. ``trigger_once`` (availableNow)
-    is the batch-like mode: process everything pending, then stop —
-    ideal for incremental medallion hops run on a schedule."""
-    writer = (
-        df.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def quality_gated_foreach_batch(

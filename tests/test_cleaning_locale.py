@@ -20,14 +20,6 @@ def test_apply_rules_strips_suffixes(spark):
     assert vals[2] == "Y"
 
 
-def test_conform_entity_key_remap_and_upper(spark):
-    df = spark.createDataFrame([("social bank banco múltiplo",), ("other",)], ["nome"])
-    out = C.conform_entity_key(
-        df, "nome", upper=True, remap={"SOCIAL BANK BANCO MÚLTIPLO": "BANCO CAPITAL"}
-    )
-    assert [r.nome for r in out.collect()] == ["BANCO CAPITAL", "OTHER"]
-
-
 def test_normalize_column_names_single_projection(spark):
     df = spark.createDataFrame([(1, 2)], ["CNPJ IF", "Nome Banco"])
     out = C.normalize_column_names(df)
@@ -68,22 +60,3 @@ def test_compat_int_index_truncates(spark):
     assert [r.v for r in out] == [0, 12]
 
 
-def test_fold_accents_matches_duckdb(spark):
-    import duckdb
-
-    from ingestao_dados_poli_spark.functions.cleaning import fold_accents
-
-    names = [
-        "São Paulo",
-        "BANCO DO BRASÍL S.A.",
-        "Caixa Econômica",
-        "Função Ação çÇñÑ",
-        "no accents",
-    ]
-    df = spark.createDataFrame([(n,) for n in names], ["name"])
-    got = [r.folded for r in df.select(fold_accents("name").alias("folded")).collect()]
-    want = [
-        duckdb.sql("select strip_accents(?)", params=[n]).fetchone()[0]
-        for n in names
-    ]
-    assert got == want

@@ -1,16 +1,13 @@
-"""Physical-layout operators: Morton (Z-order) clustering and
-small-file compaction — the table-maintenance half of a 100 TB lake
-(Delta/Iceberg OPTIMIZE re-expressed as plain Spark writes)."""
+"""Physical-layout operators: Morton (Z-order) clustering — the
+table-maintenance half of a 100 TB lake (Delta/Iceberg OPTIMIZE
+re-expressed as plain Spark writes)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from ingestao_dados_poli_spark.partitioning import morton_code
-from ingestao_dados_poli_spark.sources.writers import (
-    compact_parquet_dir,
-    write_clustered,
-)
+from ingestao_dados_poli_spark.sources.writers import write_clustered
 
 
 def _morton_py(x: int, y: int, bits: int = 8) -> int:
@@ -112,19 +109,3 @@ def test_write_clustered_constant_column(spark, tmp_path):
     assert spark.read.parquet(out).count() == 100
 
 
-def test_compact_parquet_dir(spark, tmp_path):
-    path = str(tmp_path / "frag")
-    spark.range(10_000).withColumn("v", F.col("id") * 2).repartition(
-        32
-    ).write.parquet(path)
-    before = spark.read.parquet(path).agg(F.sum("v")).collect()[0][0]
-    stats = compact_parquet_dir(spark, path, target_file_bytes=1 << 30)
-    assert stats["files_before"] == 32
-    assert stats["files_after"] <= 2
-    # data unchanged, old dir gone, swap left no temp droppings
-    assert spark.read.parquet(path).agg(F.sum("v")).collect()[0][0] == before
-    assert spark.read.parquet(path).count() == 10_000
-    import os
-
-    assert not os.path.exists(path + ".__compact_tmp__")
-    assert not os.path.exists(path + ".__compact_old__")

@@ -193,7 +193,7 @@ def test_q136_bucketed_join_zero_exchange(spark, sf_dir):
 
     # registers the pid-scoped bucketed tables as a side effect
     Q.QUERIES["q136_bucketed_join"](spark, sf_dir).collect()
-    ord_t, li_t, _ = q136_table_names()
+    ord_t, li_t = q136_table_names()
     o = spark.table(ord_t)
     l = spark.table(li_t)
     # sort-elision needs the planner to LIST files and confirm one file
@@ -221,15 +221,13 @@ def test_q138_incremental_never_rescans_base(spark, sf_dir):
     plus the delta slice only — the pre-cutoff base rows are never
     rescanned. The refresh plan must contain exactly one orders scan,
     and that scan must push the delta cutoff into the parquet reader."""
-    import os
-
     from ingestao_dados_poli_spark.operators import incremental as IC
     from ingestao_dados_poli_spark.sources import versioned as V
     from pyspark.sql import functions as F
 
     # publishes state v1 (base) and v2 (first refresh) as a side effect
     Q.QUERIES["q138_incremental_agg"](spark, sf_dir).collect()
-    mv = f"/tmp/q138_mv_{os.getpid()}"
+    mv = Q._scratch_dir("q138_mv", sf_dir)
     delta = (
         spark.read.parquet(f"{sf_dir}/orders.parquet")
         .filter(F.col("o_orderdate") >= "1998-01-01")

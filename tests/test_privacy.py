@@ -1,4 +1,4 @@
-"""k-anonymity / l-diversity audit + suppression invariants."""
+"""k-anonymity / l-diversity audit invariants."""
 
 from __future__ import annotations
 
@@ -29,32 +29,3 @@ def test_report_counts_and_l_diversity(spark):
     assert rep[("SF", "M")]["satisfies_k"] and rep[("SF", "M")]["l_div"] == 1
 
 
-def test_summary_row(spark):
-    s = PV.k_anonymity_summary(_toy(spark), ["city", "sex"], k=2).collect()[0]
-    assert s["k_actual"] == 1
-    assert s["n_groups"] == 3
-    assert s["violating_groups"] == 1
-    assert s["violating_rows"] == 1
-    assert s["total_rows"] == 8
-
-
-def test_suppression_yields_k_anonymous_remainder(spark):
-    df = _toy(spark)
-    out = PV.suppress_below_k(df, ["city", "sex"], k=2)
-    assert out.count() == 7  # only the singleton dropped
-    s = PV.k_anonymity_summary(out, ["city", "sex"], k=2).collect()[0]
-    assert s["k_actual"] >= 2 and s["violating_rows"] == 0
-
-
-def test_suppression_anti_join_is_broadcastable(spark, sf_dir):
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    plan = (
-        PV.suppress_below_k(cust, ["c_mktsegment", "c_nationkey"], k=10)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    # the violating set joins back as the BUILD side of a hash join —
-    # never a cartesian or a sort-merge of the full table against itself
-    assert "CartesianProduct" not in plan
-    assert "LeftAnti" in plan

@@ -11,7 +11,6 @@ from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 
-from ingestao_dados_poli_spark.functions.cleaning import conform_entity_key
 from ingestao_dados_poli_spark.functions.locale import parse_decimal_comma
 from ingestao_dados_poli_spark.functions.text import normalize_text
 
@@ -44,17 +43,6 @@ def test_normalize_never_leaves_runs_or_edges(spark, batch):
     df = spark.createDataFrame([(s,) for s in batch], "t string")
     bad = df.select(normalize_text("t").alias("n")).filter(
         F.col("n").rlike(r"\s{2,}|^\s|\s$") | (F.col("n") != F.lower("n"))
-    )
-    assert bad.count() == 0
-
-
-@BATCH_SETTINGS
-@given(batch=TEXT_BATCH)
-def test_conform_entity_key_squashes_and_trims(spark, batch):
-    df = spark.createDataFrame([(s,) for s in batch], "nome string")
-    out = conform_entity_key(df, "nome", rules=(), upper=True)
-    bad = out.filter(
-        F.col("nome").rlike(r" {2,}|^ | $") | (F.col("nome") != F.upper("nome"))
     )
     assert bad.count() == 0
 

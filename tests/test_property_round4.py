@@ -198,21 +198,24 @@ def test_deterministic_sample_is_stable_and_monotone(spark, keys, frac_pct):
     incremental mixing auditable."""
     from ingestao_dados_poli_spark.operators import relational as R
 
+    def sample(df, frac):
+        return R.stratified_sample_deterministic(df, "k", "k", {}, default=frac)
+
     df = spark.createDataFrame([(k,) for k in keys], "k string")
     frac = frac_pct / 100.0
-    a = {r["k"] for r in R.deterministic_sample(df, "k", frac).collect()}
+    a = {r["k"] for r in sample(df, frac).collect()}
     b = {
         r["k"]
-        for r in R.deterministic_sample(df.repartition(5), "k", frac).collect()
+        for r in sample(df.repartition(5), frac).collect()
     }
     assert a == b
     if frac_pct <= 90:
         bigger = {
             r["k"]
-            for r in R.deterministic_sample(df, "k", min(1.0, frac + 0.1)).collect()
+            for r in sample(df, min(1.0, frac + 0.1)).collect()
         }
         assert a <= bigger
-    full = {r["k"] for r in R.deterministic_sample(df, "k", 1.0).collect()}
+    full = {r["k"] for r in sample(df, 1.0).collect()}
     assert full == set(keys)
 
 

@@ -64,6 +64,52 @@ def test_available_now_only_in_runner():
     assert users == ["streaming/stream_ops.py"], users
 
 
+# Library defs nothing outside the tests calls, kept on purpose.
+KEPT_WITHOUT_CALLER = {
+    # the reference's two-variant employee CSV union (0a:52-66); the
+    # example landing zone ships one variant
+    "align_employee_variants",
+    # quality.Suite rule vocabulary, alongside not_null/exists/unique
+    "row_count_between",
+    "matches_regex",
+}
+
+
+def test_every_library_def_has_a_caller():
+    # A def that only its own test calls is surface nobody runs; pin the
+    # package to defs some query, pipeline, example, tool or benchmark
+    # names (registry @q queries are reached through QUERIES instead).
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).parent.parent
+    referenced: set[str] = set()
+    for p in root.rglob("*.py"):
+        if p.relative_to(root).parts[0] in ("tests", ".git"):
+            continue
+        for n in ast.walk(ast.parse(p.read_text())):
+            if isinstance(n, ast.Name):
+                referenced.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                referenced.add(n.attr)
+
+    def is_query(d):
+        return any(
+            isinstance(t := getattr(dec, "func", dec), ast.Name) and t.id == "q"
+            for dec in d.decorator_list
+        )
+
+    orphans = {
+        d.name
+        for p in (root / "ingestao_dados_poli_spark").rglob("*.py")
+        for d in ast.parse(p.read_text()).body
+        if isinstance(d, (ast.FunctionDef, ast.ClassDef))
+        and not is_query(d)
+        and d.name not in referenced
+    }
+    assert orphans == KEPT_WITHOUT_CALLER, sorted(orphans ^ KEPT_WITHOUT_CALLER)
+
+
 def test_readme_counts_match_registry():
     # README's driver-contract block states the registry size; keep it
     # from drifting (round-1 verdict found it stale).

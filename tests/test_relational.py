@@ -65,16 +65,6 @@ def test_top_k_uses_take_ordered(spark):
     assert "TakeOrderedAndProject" in top._jdf.queryExecution().executedPlan().toString()
 
 
-def test_top_k_per_group(spark):
-    df = spark.createDataFrame(
-        [("a", 1, 10.0), ("a", 2, 20.0), ("a", 3, 30.0), ("b", 4, 5.0)],
-        ["g", "id", "score"],
-    )
-    out = R.top_k_per_group(df, ["g"], [F.col("score").desc()], 2)
-    got = sorted((r.g, r.id) for r in out.collect())
-    assert got == [("a", 2), ("a", 3), ("b", 4)]
-
-
 def test_dedup_keep_first_deterministic(spark):
     df = spark.createDataFrame(
         [(1, "2020", "a"), (1, "2021", "b"), (2, "2019", "c")], ["k", "d", "v"]
@@ -252,17 +242,21 @@ def test_deterministic_sample_edges_and_stability(spark):
     """fraction 1.0 keeps every row, 0.0 none, and membership is a pure
     function of the key: the survivor set is identical under
     repartitioning (the property engine-RNG sample() lacks) and matches
-    a driver-side md5 recomputation exactly."""
+    a driver-side md5 recomputation exactly. One stratum with no listed
+    fraction samples every row at ``default``."""
     import hashlib
 
-    df = spark.createDataFrame([(i,) for i in range(400)], ["k"])
-    assert R.deterministic_sample(df, "k", 1.0).count() == 400
-    assert R.deterministic_sample(df, "k", 0.0).count() == 0
+    def sample(df, frac):
+        return R.stratified_sample_deterministic(df, "k", "k", {}, default=frac)
 
-    got = sorted(r.k for r in R.deterministic_sample(df, "k", 0.3).collect())
+    df = spark.createDataFrame([(i,) for i in range(400)], ["k"])
+    assert sample(df, 1.0).count() == 400
+    assert sample(df, 0.0).count() == 0
+
+    got = sorted(r.k for r in sample(df, 0.3).collect())
     re_got = sorted(
         r.k
-        for r in R.deterministic_sample(df.repartition(13), "k", 0.3).collect()
+        for r in sample(df.repartition(13), 0.3).collect()
     )
     assert got == re_got
     thresh = format(int(round(0.3 * 16**8)), "08x")

@@ -40,87 +40,6 @@ def test_ivf_index_batching_invariance_and_layout(spark, sf_dir, tmp_path):
     assert sorted(ra.collect()) == sorted(rb.collect())
 
 
-def test_ivf_index_compact_bounds_fanin_and_preserves_search(spark, sf_dir, tmp_path):
-    from pyspark.sql import functions as F
-
-    from ingestao_dados_poli_spark.operators.similarity import (
-        ivf_index_compact,
-        ivf_index_ingest,
-        ivf_index_read,
-        ivf_index_search,
-    )
-    from ingestao_dados_poli_spark.queries import _CENTROIDS
-    from ingestao_dados_poli_spark.sources import versioned as V
-
-    emb = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .withColumn("embedding", F.col("embedding").cast("array<double>"))
-        .filter(F.col("vec_id") < 90)
-    )
-    idx = str(tmp_path / "idx")
-    for lo, hi in ((0, 30), (30, 60), (60, 90)):
-        ivf_index_ingest(
-            spark,
-            emb.filter(f"vec_id >= {lo} and vec_id < {hi}"),
-            _CENTROIDS,
-            idx,
-            score_round=6,
-        )
-    # idempotent re-ingest of batch 2 creates duplicate ids
-    ivf_index_ingest(
-        spark, emb.filter("vec_id >= 30 and vec_id < 60"), _CENTROIDS, idx,
-        score_round=6,
-    )
-    q = emb.filter("vec_id = 3").select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    before = sorted(
-        ivf_index_search(spark, idx, q, _CENTROIDS, k=4,
-                         nprobe=len(_CENTROIDS), score_round=6).collect()
-    )
-    ivf_index_compact(spark, idx)
-    # one committed version remains; rows are deduplicated
-    assert V.committed_versions(spark, idx.__str__()) == [5]
-    assert ivf_index_read(spark, idx).count() == 90
-    after = sorted(
-        ivf_index_search(spark, idx, q, _CENTROIDS, k=4,
-                         nprobe=len(_CENTROIDS), score_round=6).collect()
-    )
-    assert before == after
-
-
-def test_ivf_index_compact_keep2_serves_no_duplicates(spark, sf_dir, tmp_path):
-    """vacuum(keep=2) after a compaction retains a superseded delta for
-    pinned reads; the LIVE index read must start at the compaction's
-    base snapshot, not union the retained delta back in (which would
-    duplicate every pre-compaction row and let one vec fill two top-k
-    slots)."""
-    from pyspark.sql import functions as F
-
-    from ingestao_dados_poli_spark.operators.similarity import (
-        ivf_index_compact,
-        ivf_index_ingest,
-        ivf_index_read,
-    )
-    from ingestao_dados_poli_spark.queries import _CENTROIDS
-    from ingestao_dados_poli_spark.sources import versioned as V
-
-    emb = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .withColumn("embedding", F.col("embedding").cast("array<double>"))
-        .filter(F.col("vec_id") < 40)
-    )
-    idx = str(tmp_path / "idx2")
-    ivf_index_ingest(spark, emb.filter("vec_id < 20"), _CENTROIDS, idx, score_round=6)
-    ivf_index_ingest(spark, emb.filter("vec_id >= 20"), _CENTROIDS, idx, score_round=6)
-    ivf_index_compact(spark, idx, keep=2)
-    committed = V.committed_versions(spark, idx)
-    assert len(committed) == 2  # base + one retained pre-compaction delta
-    read = ivf_index_read(spark, idx)
-    assert read.count() == 40  # no duplicated pre-compaction rows
-    assert read.select("vec_id").distinct().count() == 40
-
-
 def test_negative_samples_never_own_label_and_deterministic(spark):
     from ingestao_dados_poli_spark.operators import similarity as SIM
 

@@ -26,106 +26,10 @@ def test_vector_math(spark):
         V.dot("a", "b").alias("dot"),
         V.norm("a").alias("na"),
         V.cosine("a", "b").alias("cos"),
-        V.l2_distance("a", "b").alias("l2"),
     ).collect()[0]
     assert row.dot == 11.0
     assert abs(row.na - math.sqrt(5)) < 1e-12
     assert abs(row.cos - 11.0 / (math.sqrt(5) * 5.0)) < 1e-12
-    assert abs(row.l2 - math.sqrt(8)) < 1e-12
-
-
-def test_topk_bruteforce(spark):
-    corpus = _vecs(spark)
-    queries = corpus.filter(F.col("vec_id") == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    out = SIM.topk_bruteforce(corpus, queries, k=3)
-    got = [r.vec_id for r in out.orderBy(F.desc("cos_sim")).collect()]
-    assert got[0] == 0            # self first
-    assert set(got) == {0, 4, 1}  # nearest neighbors by cosine
-
-
-def test_topk_bruteforce_two_phase_plan(spark):
-    """The scored |C|x|Q| product must pre-reduce per scan partition
-    BEFORE the per-query window: the optimized plan contains an
-    Aggregate grouped on spark_partition_id (phase 1), and the window
-    therefore ranks <= k*P survivors, never the full product."""
-    corpus = _vecs(spark)
-    queries = corpus.limit(2).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    out = SIM.topk_bruteforce(corpus, queries, k=2)
-    plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert "SPARK_PARTITION_ID" in plan.upper(), plan
-    assert "sort_array" in plan, plan
-    # correctness unchanged by the pre-reduce: exact per-query top-k
-    rows = out.collect()
-    per_q = {}
-    for r in rows:
-        per_q.setdefault(r.query_id, []).append(r)
-    assert all(len(v) == 2 for v in per_q.values())
-
-
-def test_topk_bruteforce_many_partitions_exact(spark):
-    """Pre-reduce must not discard global winners: with the corpus
-    scattered over many partitions (each holding < k of the true top-k)
-    the result still equals the exact ranking."""
-    import random
-
-    rng = random.Random(7)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(200)]
-    corpus = spark.createDataFrame(rows, ["vec_id", "embedding"]).repartition(16)
-    queries = spark.createDataFrame(rows[:3], ["query_id", "query_vec"])
-    got = SIM.topk_bruteforce(corpus, queries, k=5).collect()
-
-    import math
-
-    def cos(a, b):
-        d = sum(x * y for x, y in zip(a, b))
-        return d / (math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(x * x for x in b)))
-
-    by_q = {}
-    for r in got:
-        by_q.setdefault(r.query_id, []).append((r.vec_id, r.cos_sim))
-    for qid, vec in rows[:3]:
-        exact = sorted(
-            ((cid, cos(v, vec)) for cid, v in rows),
-            key=lambda t: (-t[1], t[0]),
-        )[:5]
-        assert [c for c, _ in sorted(by_q[qid], key=lambda t: (-t[1], t[0]))] == [
-            c for c, _ in exact
-        ]
-
-
-def test_topk_bruteforce_chunked_buffer_exact(spark):
-    """The structural buffer bound (chunk_rows) must not change the
-    answer: forcing chunks far smaller than a partition (chunk_rows=7,
-    so every (query, partition, chunk) group holds <= 7 scored rows,
-    well under k*|Q|) still yields the exact per-query top-k."""
-    import math
-    import random
-
-    rng = random.Random(11)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(150)]
-    corpus = spark.createDataFrame(rows, ["vec_id", "embedding"]).repartition(4)
-    queries = spark.createDataFrame(rows[:3], ["query_id", "query_vec"])
-    got = SIM.topk_bruteforce(corpus, queries, k=5, chunk_rows=7).collect()
-
-    def cos(a, b):
-        d = sum(x * y for x, y in zip(a, b))
-        return d / (math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(x * x for x in b)))
-
-    by_q = {}
-    for r in got:
-        by_q.setdefault(r.query_id, []).append((r.vec_id, r.cos_sim))
-    for qid, vec in rows[:3]:
-        exact = sorted(
-            ((cid, cos(v, vec)) for cid, v in rows),
-            key=lambda t: (-t[1], t[0]),
-        )[:5]
-        assert [c for c, _ in sorted(by_q[qid], key=lambda t: (-t[1], t[0]))] == [
-            c for c, _ in exact
-        ]
 
 
 def test_topk_lsh_recall_on_exact_match(spark):
@@ -222,10 +126,20 @@ def test_ivf_topk_nprobe_all_equals_bruteforce(spark):
     queries = spark.createDataFrame(
         [(0, [0.9, 0.1, 0.0]), (1, [0.0, 0.1, 0.9])], ["query_id", "query_vec"]
     )
-    bf = SIM.topk_bruteforce(corpus, queries, k=5)
     ivf = SIM.ivf_topk(corpus, queries, _IVF_CENTROIDS, k=5, nprobe=3)
+
+    def cos(a, b):
+        d = sum(x * y for x, y in zip(a, b))
+        return d / (math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(x * x for x in b)))
+
+    exact = []
+    for q in queries.collect():
+        scored = sorted(
+            ((-cos(r.embedding, q.query_vec), r.vec_id) for r in corpus.collect())
+        )[:5]
+        exact += [(q.query_id, vid, round(-neg, 9)) for neg, vid in scored]
     key = lambda r: (r.query_id, r.vec_id, round(r.cos_sim, 9))
-    assert sorted(map(key, bf.collect())) == sorted(map(key, ivf.collect()))
+    assert sorted(exact) == sorted(map(key, ivf.collect()))
 
 
 def test_ivf_topk_nprobe_one_prunes_to_probed_partition(spark):
@@ -271,56 +185,6 @@ def test_multimodal_feature_extraction_plumbing(spark):
     # deterministic: same payload → same features
     again = {r.media_id: r.features for r in MM.extract_image_features(media, dim=8).collect()}
     assert all(again[r.media_id] == r.features for r in rows)
-
-
-def test_pil_featurizer_real_decode(spark):
-    # Real-bytes decode through the SAME mapInPandas plumbing the fake
-    # featurizer uses — runs wherever pillow is installed, skips
-    # cleanly otherwise (no codec libs in the dev container).
-    import io
-
-    import pytest
-
-    PIL_Image = pytest.importorskip("PIL.Image")
-    rows = []
-    for i in range(4):
-        img = PIL_Image.new("RGB", (6, 6), color=(i * 60, 10, 200))
-        buf = io.BytesIO()
-        img.save(buf, format="PNG")
-        rows.append((i, "image", buf.getvalue(), "image/png", 6, 6, None))
-    media = spark.createDataFrame(rows, schema=MM.MEDIA_SCHEMA)
-    feats = MM.extract_image_features(media, dim=4, featurizer=MM.pil_featurizer(4))
-    got = {r.media_id: r.features for r in feats.collect()}
-    assert len(got) == 4
-    assert all(len(v) == 4 and all(0.0 <= x < 1.0 for x in v) for v in got.values())
-    # distinct fill colors → distinct features; same bytes → same features
-    assert got[0] != got[3]
-
-
-def test_pil_featurizer_raises_without_pil():
-    import importlib.util
-
-    import pytest
-
-    if importlib.util.find_spec("PIL") is not None:
-        pytest.skip("PIL installed; covered by the real-decode test")
-    with pytest.raises(NotImplementedError):
-        MM.pil_featurizer(4)(b"not-an-image")
-
-
-def test_video_frame_sampling_shape(spark):
-    media = MM.synthetic_media(spark, n=9).filter(F.col("kind") == "video")
-    frames = MM.sample_video_frames(media, every_ms=1000)
-    per = frames.groupBy("media_id").count().collect()
-    durs = {r.media_id: r.duration_ms for r in media.collect()}
-    for r in per:
-        assert r["count"] == max(1, -(-durs[r.media_id] // 1000))
-
-
-def test_media_stats(spark):
-    stats = MM.media_stats(MM.synthetic_media(spark, n=30))
-    got = {r.kind: r.n_items for r in stats.collect()}
-    assert sum(got.values()) == 30
 
 
 def test_ppm_roundtrip_and_real_decode(spark):
@@ -385,34 +249,6 @@ def test_real_image_decode_distributed(spark):
     }
 
 
-def test_wav_roundtrip_and_audio_features(spark):
-    import numpy as np
-
-    from ingestao_dados_poli_spark.operators.multimodal import (
-        decode_wav,
-        encode_wav_pcm16,
-        extract_audio_features,
-        synthetic_wav_media,
-    )
-
-    s = (np.sin(np.linspace(0, 20 * np.pi, 800)) * 16384).astype("<i2")
-    rate, back = decode_wav(encode_wav_pcm16(s, rate=8000))
-    assert rate == 8000 and np.array_equal(back, s)
-
-    media = synthetic_wav_media(spark, n=16, rate=8000, duration_s=0.1)
-    feats = {r.media_id: r for r in extract_audio_features(media).collect()}
-    assert len(feats) == 16
-    for mid, r in feats.items():
-        assert r.sample_rate == 8000 and r.n_samples == 800
-        # 0.5-amplitude sine: RMS ~ 0.5/sqrt(2) ~ 0.3536
-        assert abs(r.rms - 0.3536) < 0.01
-    # zero-crossing count tracks the per-id frequency: 220Hz*(1+id%8)
-    # over 0.1s crosses ~2*f*0.1 times
-    for mid, r in feats.items():
-        f = 220.0 * (1 + mid % 8)
-        assert abs(r.zero_crossings - 2 * f * 0.1) <= 2, (mid, r)
-
-
 def test_l2_normalize_arrow_values_and_zero_vector(spark):
     import math
 
@@ -433,22 +269,6 @@ def test_l2_normalize_arrow_values_and_zero_vector(spark):
     # shuffle-free: a pure map over scan batches
     plan = l2_normalize_arrow(df)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
-
-
-def test_topk_bruteforce_zero_vector_excluded(spark):
-    """A zero-norm corpus vector scores NaN against every query and
-    must never outrank real candidates (NaN sorts FIRST in a
-    descending window — the naive plan returns it at rank 1)."""
-    corpus = spark.createDataFrame(
-        [(0, [0.0, 0.0]), (1, [1.0, 0.0]), (2, [0.5, 0.5])],
-        ["vec_id", "embedding"],
-    )
-    queries = spark.createDataFrame(
-        [(7, [1.0, 0.0])], ["query_id", "query_vec"]
-    )
-    got = [r.vec_id for r in SIM.topk_bruteforce(corpus, queries, k=2).collect()]
-    assert 0 not in got
-    assert set(got) == {1, 2}
 
 
 def test_int8_quantization_bounds_and_accuracy(spark, sf_dir):

@@ -1,22 +1,22 @@
 """Source-layer tests: typed CSV ingestion with corrupt-row quarantine,
-partitioned parquet writes with pruning, Hadoop-fs utilities, catalog."""
+partitioned parquet writes with pruning, Hadoop-fs utilities."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType, LongType, StringType, StructField, StructType,
-)
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from ingestao_dados_poli_spark.sources import fs
-from ingestao_dados_poli_spark.sources.catalog import Catalog
-from ingestao_dados_poli_spark.sources.readers import (
-    quarantine_corrupt,
-    read_csv,
-    read_json,
-    read_orc,
-)
+from ingestao_dados_poli_spark.sources.readers import read_csv, read_json, read_orc
 from ingestao_dados_poli_spark.sources.writers import write_orc, write_parquet
+
+
+def _split_corrupt(df):
+    # cache first: Spark refuses a query whose only referenced column is
+    # the corrupt-record column (SPARK-21610)
+    df = df.cache()
+    clean = df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
+    return clean, df.filter(F.col("_corrupt_record").isNotNull())
 
 
 def test_read_csv_typed_with_quarantine(spark, tmp_path):
@@ -26,7 +26,7 @@ def test_read_csv_typed_with_quarantine(spark, tmp_path):
         [StructField("id", LongType()), StructField("price", DoubleType())]
     )
     df = read_csv(spark, str(p), schema=schema, sep="|")
-    clean, bad = quarantine_corrupt(df)
+    clean, bad = _split_corrupt(df)
     assert clean.schema["price"].dataType == DoubleType()
     assert sorted(r.id for r in clean.collect()) == [1, 3]
     assert bad.count() == 1  # the unparseable row is kept, not dropped
@@ -46,7 +46,7 @@ def test_read_json_typed_with_quarantine(spark, tmp_path):
         [StructField("id", LongType()), StructField("price", DoubleType())]
     )
     df = read_json(spark, str(p), schema=schema)
-    clean, bad = quarantine_corrupt(df)
+    clean, bad = _split_corrupt(df)
     assert clean.schema["price"].dataType == DoubleType()
     assert sorted(r.id for r in clean.collect()) == [1, 3]
     assert bad.count() == 2
@@ -108,84 +108,10 @@ def test_fs_utils_roundtrip(spark, tmp_path):
     src = str(tmp_path / "src")
     spark.range(10).coalesce(1).write.parquet(src)
     assert fs.exists(spark, src)
-    dst = str(tmp_path / "dst")
-    assert fs.cp(spark, src, dst)
-    assert spark.read.parquet(dst).count() == 10
-    listing = fs.ls(spark, dst, suffix=".parquet")
+    listing = fs.ls(spark, src, suffix=".parquet")
     assert listing and all(p.endswith(".parquet") for p in listing)
-    assert fs.rm(spark, dst)
-    assert not fs.exists(spark, dst)
-
-
-def test_catalog_paths_and_views(spark, sf_dir):
-    cat = Catalog(root=sf_dir)
-    assert cat.path("nation") == f"{sf_dir}/nation.parquet"
-    cat.register("special", f"{sf_dir}/region.parquet")
-    assert cat.load(spark, "special").count() == 5
-    cat.register_views(spark, names=("nation", "region"))
-    assert spark.sql("SELECT count(*) AS n FROM nation").collect()[0].n == 25
-
-
-def test_read_xml_typed_with_quarantine(spark, tmp_path):
-    from pyspark.sql.types import LongType, StringType, StructType
-
-    from ingestao_dados_poli_spark.sources.readers import read_xml
-
-    p = tmp_path / "rows.xml"
-    p.write_text(
-        "<rows>"
-        "<row><id>1</id><name>alpha</name></row>"
-        "<row><id>oops</id><name>bad</name></row>"
-        "<row><id>3</id><name>gamma</name></row>"
-        "</rows>"
-    )
-    schema = StructType().add("id", LongType()).add("name", StringType())
-    df = read_xml(spark, str(p), row_tag="row", schema=schema)
-    clean, bad = quarantine_corrupt(df)
-    assert sorted(r.id for r in clean.collect()) == [1, 3]
-    assert bad.count() == 1
-
-
-def test_read_binary_files_feeds_multimodal_decode(spark, tmp_path):
-    import numpy as np
-
-    from ingestao_dados_poli_spark.operators import multimodal as MM
-    from ingestao_dados_poli_spark.sources.readers import read_binary_files
-
-    rng = np.random.default_rng(7)
-    imgs = {}
-    for i in range(4):
-        arr = rng.integers(0, 256, size=(8, 12, 3), dtype=np.uint8)
-        (tmp_path / f"img_{i}.ppm").write_bytes(MM.encode_ppm(arr))
-        imgs[f"img_{i}.ppm"] = arr
-    (tmp_path / "ignore.txt").write_text("not media")
-
-    files = read_binary_files(spark, str(tmp_path), glob="*.ppm")
-    assert files.count() == 4
-    media = files.select(
-        F.regexp_extract(F.col("path"), r"img_(\d+)\.ppm", 1)
-        .cast("long")
-        .alias("media_id"),
-        F.col("content").alias("payload"),
-    )
-    feats = MM.extract_image_features(
-        media.withColumn("media_type", F.lit("image"))
-        .withColumn("width", F.lit(12))
-        .withColumn("height", F.lit(8)),
-        dim=4,
-        featurizer=MM.ppm_featurizer(4),
-    )
-    rows = {f"img_{r.media_id}.ppm": r.features for r in feats.collect()}
-    assert set(rows) == set(imgs)
-    # featurizer contract: vertical-strip means of the REAL decoded pixels
-    for name, arr in imgs.items():
-        gray = arr.astype(np.float32).mean(axis=2) / 255.0
-        expect = [float(gray[:, k * 3 : (k + 1) * 3].mean()) for k in range(4)]
-        got = list(rows[name])
-        assert all(abs(a - b) < 1e-6 for a, b in zip(got, expect))
-
-    # max_bytes ceiling filters scan-side
-    assert read_binary_files(spark, str(tmp_path), glob="*.ppm", max_bytes=10).count() == 0
+    assert fs.rm(spark, src)
+    assert not fs.exists(spark, src)
 
 
 def test_read_json_does_not_mutate_caller_schema(spark, tmp_path):
@@ -273,14 +199,12 @@ def test_stats_collect_is_metadata_only_and_correct(spark, sf_dir, tmp_path):
 
 
 def test_stats_pruning_skips_files(spark, sf_dir):
-    import os
-
     from ingestao_dados_poli_spark import queries as Q
     from ingestao_dados_poli_spark.sources import stats as ST
 
     # q144 builds the clustered copy as a side effect
     Q.QUERIES["q144_stats_pruned_scan"](spark, sf_dir).collect()
-    clustered = f"/tmp/q144_cluster_{os.getpid()}/lineitem"
+    clustered = Q._scratch_dir("q144_cluster", sf_dir) + "/lineitem"
     stats = ST.collect_file_stats(spark, clustered, ["l_shipdate"])
     files, total = ST.prune_files(
         stats, "l_shipdate", "1997-01-01 00:00:00", "1997-01-31 23:59:59"
@@ -304,13 +228,11 @@ def test_stats_pruning_skips_files(spark, sf_dir):
 
 
 def test_zorder_prunes_both_dimensions(spark, sf_dir):
-    import os
-
     from ingestao_dados_poli_spark import queries as Q
     from ingestao_dados_poli_spark.sources import stats as ST
 
     Q.QUERIES["q146_zorder_skipping"](spark, sf_dir).collect()
-    clustered = f"/tmp/q146_z_{os.getpid()}/lineitem"
+    clustered = Q._scratch_dir("q146_z", sf_dir) + "/lineitem"
     stats = ST.collect_file_stats(
         spark, clustered, ["l_quantity", "l_shipdate"]
     )
@@ -328,13 +250,11 @@ def test_zorder_prunes_both_dimensions(spark, sf_dir):
 
 
 def test_optimize_compacts_and_clusters(spark, sf_dir):
-    import os
-
     from ingestao_dados_poli_spark import queries as Q
     from ingestao_dados_poli_spark.sources import fs as FS
 
     Q.QUERIES["q147_optimize_lossless"](spark, sf_dir).collect()
-    base = f"/tmp/q147_opt_{os.getpid()}"
+    base = Q._scratch_dir("q147_opt", sf_dir)
     before = FS.file_sizes(spark, base + "/src", suffix=".parquet")
     after = FS.file_sizes(spark, base + "/opt", suffix=".parquet")
     assert len(before) == 64
@@ -348,7 +268,7 @@ def test_dynamic_overwrite_touches_only_target_partition(spark, sf_dir):
     from ingestao_dados_poli_spark import queries as Q
 
     Q.QUERIES["q151_dynamic_partition_overwrite"](spark, sf_dir).collect()
-    base = f"/tmp/q151_dpo_{os.getpid()}/events"
+    base = Q._scratch_dir("q151_dpo", sf_dir) + "/events"
     days = sorted(d for d in os.listdir(base) if d.startswith("day="))
     assert len(days) > 2
     target, others = days[0], days[1:]

@@ -134,14 +134,6 @@ def test_dedup_stream_within_watermark(spark, event_dir):
     assert sorted(r.event_id for r in rows) == [1, 2, 3, 4, 5]
 
 
-def test_write_stream_parquet_roundtrip(spark, event_dir, tmp_path):
-    src = S.read_file_stream(spark, event_dir, EVENT_SCHEMA)
-    out_path = str(tmp_path / "out")
-    q = S.write_stream_parquet(src, out_path, str(tmp_path / "ck3"))
-    assert q.awaitTermination(120)
-    assert spark.read.parquet(out_path).count() == 5
-
-
 def test_interval_join_streams(spark, event_dir):
     # clicks within 2 minutes BEFORE each view, same user. From the
     # fixture: view id=3 (user 1, 00:02:10) should match click id=2

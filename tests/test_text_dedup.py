@@ -88,18 +88,6 @@ def test_minhash_finds_near_dup(spark):
     assert est[(1, 5)] == 1.0
 
 
-def test_dedup_minhash_drops_near_dups(spark):
-    docs = _docs(spark)
-    kept = sorted(
-        r.doc_id
-        for r in DD.dedup_minhash(
-            docs, "text", "doc_id", threshold=0.5, num_hashes=32, num_bands=16
-        ).collect()
-    )
-    assert 1 in kept and 4 in kept
-    assert 5 not in kept  # exact dup of 1 dropped
-
-
 def test_simhash_near_dup_small_hamming(spark):
     docs = _docs(spark)
     # chunking guarantees recall only for hamming < num_chunks: use 16
@@ -203,23 +191,6 @@ def test_simhash_hot_bucket_degrades(spark):
     ).collect()
     assert 0 < len(pairs) < n * (n - 1) // 2
     assert all(r.hamming == 0 for r in pairs)
-
-
-def test_minhash_bucket_stats_flags_hot_buckets(spark):
-    rows = [(i, "identical boilerplate footer text repeated verbatim " * 4)
-            for i in range(25)] + [
-        (100 + i, f"unique document number {i} with its own words {i * 13}")
-        for i in range(5)
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    stats = DD.minhash_bucket_stats(
-        df, "text", "doc_id", num_hashes=32, num_bands=8, max_bucket_size=10
-    ).collect()
-    assert len(stats) == 8                      # one row per band
-    for r in stats:
-        assert r.n_hot_buckets >= 1             # the 25-identical bucket
-        assert r.max_bucket >= 25
-        assert r.docs_in_hot >= 25
 
 
 def test_fp_store_lifecycle_multi_batch(spark, tmp_path):

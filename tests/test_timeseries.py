@@ -19,19 +19,6 @@ def _series(spark):
     return spark.createDataFrame(rows, "k string, ts long, v double")
 
 
-def test_fill_forward_locf(spark):
-    out = {
-        (r.k, r.ts): r.filled
-        for r in TS.fill_forward(
-            _series(spark), "v", partition_by=["k"], order_by=["ts"], out_col="filled"
-        ).collect()
-    }
-    assert out[("a", 0)] is None  # leading null: nothing to carry
-    assert out[("a", 20)] == 1.0 and out[("a", 30)] == 1.0
-    assert out[("a", 50)] == 4.0
-    assert out[("b", 10)] is None
-
-
 def test_linear_interpolate_gaps_and_edges(spark):
     out = {
         (r.k, r.ts): r.v
@@ -46,12 +33,3 @@ def test_linear_interpolate_gaps_and_edges(spark):
     assert out[("a", 0)] == 1.0
     assert out[("a", 50)] == 4.0
     assert out[("b", 0)] is None
-
-
-def test_gap_flags(spark):
-    df = _series(spark).filter("k = 'a' and ts in (10, 40)")
-    out = {r.ts: r.gap_exceeded for r in TS.gap_flags(
-        df, "ts", partition_by=["k"], max_gap=20
-    ).collect()}
-    assert out[10] is False  # first row: no previous observation
-    assert out[40] is True   # 30 > max_gap 20
