@@ -45,6 +45,27 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
+def warmup(spark, sf_dir: str) -> None:
+    """Untimed warmup: JVM JIT, codegen compilation, parquet footer reads.
+    Steady-state throughput is what matters at scale, not first-query
+    cold start, so charge warmup to nobody."""
+    from pyspark.sql.functions import pandas_udf
+
+    from ingestao_dados_poli_spark import queries as q
+
+    q.QUERIES["q01_gold_flagship"](spark, sf_dir).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    # ... and the Python UDF worker pool (Arrow serializers, numpy import)
+    # so the first Pandas-UDF query isn't charged ~3 s of process spawn.
+
+    @pandas_udf("long")
+    def _warm(s):
+        return s
+
+    spark.range(1000).select(_warm("id")).write.format("noop").mode("overwrite").save()
+
+
 def main() -> None:
     from ingestao_dados_poli_spark import queries as q
     from ingestao_dados_poli_spark.session import get_spark
@@ -71,22 +92,7 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
-
-    # Untimed warmup: JVM JIT, codegen compilation, parquet footer reads.
-    # Steady-state throughput is what matters at scale, not first-query
-    # cold start, so charge warmup to nobody.
-    q.QUERIES["q01_gold_flagship"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    # ... and the Python UDF worker pool (Arrow serializers, numpy import)
-    # so the first Pandas-UDF query isn't charged ~3 s of process spawn.
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _warm(s):
-        return s
-
-    spark.range(1000).select(_warm("id")).write.format("noop").mode("overwrite").save()
+    warmup(spark, sf_dir)
 
     def run_once(fn) -> float:
         t0 = time.time()

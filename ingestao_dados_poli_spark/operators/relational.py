@@ -1,11 +1,11 @@
 """Relational operator surface (thin, scale-annotated wrappers).
 
 The reference exercises inner/left equi-joins, group-by avg, positional
-union, projections and renames (SURVEY §2.2-§2.5). This module exposes
-that surface — plus the operators any query engine user expects
-(semi/anti/cross joins, set ops, sort/limit/top-k, rollup/cube) — as
-plain DataFrame compositions, with the scale levers (broadcast, salting,
-range-join batching) made explicit.
+union, projections and renames (SURVEY §2.2-§2.5); its equi-joins are
+plain ``DataFrame.join``. This module adds the operators any query
+engine user expects (semi/anti joins, sort/limit/top-k, as-of and range
+joins, upserts) as plain DataFrame compositions, with the scale levers
+(broadcast, salting, range-join batching) made explicit.
 """
 
 from __future__ import annotations
@@ -14,20 +14,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str | Sequence[str] | Column,
-    how: str = "inner",
-    broadcast_right: bool = False,
-) -> DataFrame:
-    """Equi-join (reference etl/4:26-28 inner on cnpj, etl/4:50 left on
-    nome). ``broadcast_right=True`` forces a broadcast-hash join for a
-    small dimension side — no shuffle of the big side at all."""
-    r = F.broadcast(right) if broadcast_right else right
-    return left.join(r, on, how)
 
 
 def salted_join(

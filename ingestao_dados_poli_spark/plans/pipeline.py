@@ -1,4 +1,5 @@
-"""Declarative medallion pipeline: source → transforms → quality → sink.
+"""Declarative medallion pipeline: source → transforms → sink, with the
+quality suite observed on the sink write.
 
 The reference hard-codes each zone hop as a notebook (etl/1-processing-banks.py
 reads bronze at :44, transforms at :54-74, writes silver at :79, validates
@@ -62,16 +63,18 @@ class Sink:
 
 @dataclass
 class Pipeline:
-    """One zone hop. ``transforms`` apply in order; ``suite`` (optional)
-    validates the OUTPUT frame (reference validates silver after write,
-    etl/1:102-186 — we validate the same logical plan pre-write, saving
-    the re-read) and the report is returned, never fatal."""
+    """One zone hop. ``transforms`` apply in order; ``suite`` validates
+    the OUTPUT frame once, as the reference validates each silver table
+    after its write (etl/1:102-186). The suite's aggregates ride the
+    sink write itself (``quality.observe_suite``), so the hop is one
+    pass: nothing is persisted, read back or scanned a second time for
+    validation. The report is returned, never fatal."""
 
     name: str
     source: Source
-    sink: Sink | None = None
+    sink: Sink
+    suite: Q.Suite
     transforms: list[Transform] = field(default_factory=list)
-    suite: Q.Suite | None = None
 
     def build(self, spark: SparkSession) -> DataFrame:
         df = self.source.load(spark)
@@ -80,16 +83,6 @@ class Pipeline:
         return df
 
     def run(self, spark: SparkSession) -> dict[str, Any]:
-        df = self.build(spark)
-        report: dict[str, Any] = {"pipeline": self.name}
-        if self.suite is not None:
-            # One extra pass; cache so validate + write don't recompute
-            # the transform chain twice.
-            df = df.cache()
-            report["validation"] = Q.validate(df, self.suite)
-        if self.sink is not None:
-            self.sink.save(df)
-            report["written_to"] = self.sink.path
-        if self.suite is not None:
-            df.unpersist()
-        return report
+        observed, finish = Q.observe_suite(self.build(spark), self.suite)
+        self.sink.save(observed)
+        return {"pipeline": self.name, "validation": finish(), "written_to": self.sink.path}

@@ -6,9 +6,12 @@ etl/2:105-195, etl/3:106-193): not-null checks (Q3), column-existence (Q4),
 a commented-out between check (Q5), suite persistence (Q6), checkpoint run
 with stored results (Q7), and report publishing (Q8). GX runs ONE Spark
 job per expectation; at 100 TB that is N full scans. This module compiles
-an entire suite into a SINGLE aggregation job — every rule becomes one
-`sum(violation_flag)` / `min` / `max` expression evaluated in the same
-scan — then emits a JSON-serializable report. Failures are recorded, not
+an entire suite into ONE list of exact aggregates — every column rule
+becomes one `sum(violation_flag)` — evaluated in a single scan: its own
+aggregation job (``validate``), or riding the action the caller already
+runs (``observe_suite``; ``Pipeline.run`` observes on the sink write, as
+the reference validates each table once after writing it). Either way it
+emits the same JSON-serializable report. Failures are recorded, not
 fatal, matching the reference's checkpoint policy (etl/1:169-175).
 """
 
@@ -19,14 +22,24 @@ import time
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+# Every kind but ``exists`` and ``row_count_between`` compiles to one
+# exact, commutative ``sum(violation)`` aggregate, so one aggregate list
+# serves both ``df.agg`` (validate) and ``df.observe`` (observe_suite).
+_KINDS = (
+    "not_null", "exists", "between", "row_count_between",
+    "values_in_set", "matches_regex",
+)
 
 
 @dataclass(frozen=True)
 class Rule:
-    """One expectation. ``kind`` ∈ {not_null, exists, between, unique,
-    row_count_between, values_in_set, matches_regex}."""
+    """One expectation. ``kind`` is one of ``_KINDS``; every kind but
+    ``row_count_between`` names a column. An unknown kind raises here
+    rather than compile to no aggregate and report success."""
 
     kind: str
     column: str | None = None
@@ -34,6 +47,14 @@ class Rule:
     hi: float | None = None
     values: tuple = ()
     pattern: str | None = None
+
+    def __post_init__(self) -> None:
+        if self.kind not in _KINDS:
+            raise ValueError(
+                f"unknown rule kind {self.kind!r}; expected one of {', '.join(_KINDS)}"
+            )
+        if self.kind != "row_count_between" and not self.column:
+            raise ValueError(f"rule kind {self.kind!r} needs a column")
 
     def describe(self) -> str:
         bits = [self.kind]
@@ -62,10 +83,6 @@ def between(column: str, lo: float, hi: float) -> Rule:
     """Q5 — expect_column_values_to_be_between; commented out in the
     reference (etl/1:144-146) but clearly intended, so implemented."""
     return Rule("between", column, lo=lo, hi=hi)
-
-
-def unique(column: str) -> Rule:
-    return Rule("unique", column)
 
 
 def row_count_between(lo: float, hi: float = float("inf")) -> Rule:
@@ -115,16 +132,11 @@ class Suite:
         return Suite(obj["name"], rules)
 
 
-def _violation_exprs(df: DataFrame, idx: int, rule: Rule) -> list:
-    """Compile one rule to aggregate expressions named v{idx}_*.
-
-    Every expression is a plain aggregate over the same scan — Catalyst
-    fuses them into one HashAggregate, so a 40-rule suite still costs one
-    pass over the table (vs GX's one job per expectation)."""
-    c = F.col(rule.column) if rule.column else None
-    tag = f"v{idx}"
+def _violation(rule: Rule) -> Column:
+    """The per-row violation flag of a column rule."""
+    c = F.col(rule.column)
     if rule.kind == "not_null":
-        return [F.sum(c.isNull().cast("long")).alias(tag)]
+        return c.isNull()
     if rule.kind == "between":
         # try_cast: ANSI mode makes a plain cast THROW on unparseable
         # strings (killing the whole suite); try_cast yields NULL, and
@@ -132,39 +144,36 @@ def _violation_exprs(df: DataFrame, idx: int, rule: Rule) -> list:
         # failed cast, and out-of-range all count as violations (a bare
         # ~between() is NULL for unparseable values, which sum() would
         # silently skip — masking every bad row).
-        ok = F.coalesce(c.try_cast("double").between(rule.lo, rule.hi), F.lit(False))
-        return [F.sum((~ok).cast("long")).alias(tag)]
-    if rule.kind == "unique":
-        # exact distinct — an approximate count would certify a key with
-        # up to rsd% duplicates as unique
-        return [
-            F.count(c).alias(f"{tag}_n"),
-            F.count_distinct(c).alias(f"{tag}_d"),
-        ]
+        return ~F.coalesce(c.try_cast("double").between(rule.lo, rule.hi), F.lit(False))
     if rule.kind == "values_in_set":
-        bad = ~c.isin(*rule.values) & c.isNotNull()
-        return [F.sum(bad.cast("long")).alias(tag)]
-    if rule.kind == "matches_regex":
-        bad = ~c.rlike(rule.pattern) & c.isNotNull()
-        return [F.sum(bad.cast("long")).alias(tag)]
-    return []  # exists / row_count_between need no per-row expression
+        return ~c.isin(*rule.values) & c.isNotNull()
+    return ~c.rlike(rule.pattern) & c.isNotNull()  # matches_regex
+
+
+def _aggregates(suite: Suite, cols: set[str]) -> list[Column]:
+    """Compile the suite to aggregates: ``_row_count`` plus one
+    ``v{idx}`` violation count per column rule whose column exists.
+
+    Every expression is a plain aggregate over the same scan — Catalyst
+    fuses them into one HashAggregate, so a 40-rule suite still costs one
+    pass over the table (vs GX's one job per expectation)."""
+    exprs = [F.count(F.lit(1)).alias("_row_count")]
+    for idx, rule in enumerate(suite.rules):
+        if rule.kind in ("exists", "row_count_between") or rule.column not in cols:
+            continue  # no per-row expression, or reported as column missing
+        exprs.append(F.sum(_violation(rule).cast("long")).alias(f"v{idx}"))
+    return exprs
 
 
 def _build_report(
-    suite: Suite,
-    cols: set[str],
-    row: dict[str, Any],
-    started: float,
-    approx_unique: bool = False,
+    suite: Suite, cols: set[str], row: dict[str, Any], started: float
 ) -> dict[str, Any]:
     """Turn the one-pass aggregate row into the GX-checkpoint-shaped
-    report dict shared by ``validate`` (dedicated job) and
-    ``observe_suite`` (piggybacked metrics)."""
+    report dict shared by ``validate`` and ``observe_suite``."""
     results: list[dict[str, Any]] = []
     row_count = row["_row_count"]
 
     for idx, rule in enumerate(suite.rules):
-        tag = f"v{idx}"
         if rule.kind == "exists":
             ok = rule.column in cols
             results.append({"rule": rule.describe(), "success": ok, "unexpected_count": 0 if ok else 1})
@@ -174,47 +183,17 @@ def _build_report(
             results.append({"rule": rule.describe(), "success": ok, "observed": row_count})
         elif rule.column not in cols:
             results.append({"rule": rule.describe(), "success": False, "error": "column missing"})
-        elif rule.kind == "unique":
-            n, d = row[f"{tag}_n"], row[f"{tag}_d"]
-            ok = d == n
-            res = {"rule": rule.describe(), "success": bool(ok), "observed": {"count": n, "distinct": d}}
-            if approx_unique:
-                # HLL-estimated distinct: tolerate its default ~2.3% rsd
-                # rather than fail a genuinely-unique key on sketch noise;
-                # exactness needs validate()'s dedicated job. A column
-                # can hide up to ~5% real duplicates inside the sketch
-                # tolerance, so a within-tolerance-but-not-exact estimate
-                # sets success=True (don't page on sketch noise) AND
-                # inconclusive=True. The suite-level `certified` flag
-                # (below) is False whenever any rule is inconclusive —
-                # publish gates MUST key on `certified`, not `success`.
-                res["approx"] = True
-                est_dup_ratio = max(0.0, 1.0 - d / n) if n else 0.0
-                res["observed"]["est_dup_ratio"] = round(est_dup_ratio, 6)
-                if d >= n * 0.95:
-                    res["success"] = True
-                    res["inconclusive"] = not ok
-                else:
-                    res["success"] = False
-            results.append(res)
         else:
-            bad = row.get(tag, 0) or 0
+            bad = row[f"v{idx}"] or 0  # sum over zero rows is NULL
             results.append({"rule": rule.describe(), "success": bad == 0, "unexpected_count": int(bad)})
 
     success = all(r["success"] for r in results)
-    inconclusive = any(r.get("inconclusive") for r in results)
     return {
         "suite": suite.name,
         "success": success,
-        # Three-state verdict: `success` is the alerting signal (sketch
-        # noise tolerated), `certified` is the GATING signal (exact
-        # evidence only). A suite with an approx-unique rule inside HLL
-        # tolerance is success=True but certified=False — anything that
-        # irreversibly promotes data (versioned.publish) must check
-        # `certified`; only validate()'s exact path can certify a
-        # unique rule.
-        "inconclusive": inconclusive,
-        "certified": success and not inconclusive,
+        # Every rule is exact, so the gate key equals `success`; publish
+        # gates (versioned.publish, quality_gated_foreach_batch) read it.
+        "certified": success,
         "row_count": int(row_count),
         "results": results,
         "duration_s": round(time.time() - started, 3),
@@ -226,16 +205,7 @@ def validate(df: DataFrame, suite: Suite) -> dict[str, Any]:
     report dict (Q7, etl/1:161-186). Never raises on rule failure."""
     started = time.time()
     cols = set(df.columns)
-
-    agg_exprs = [F.count(F.lit(1)).alias("_row_count")]
-    for idx, rule in enumerate(suite.rules):
-        if rule.kind == "exists" or rule.kind == "row_count_between":
-            continue
-        if rule.column not in cols:
-            continue  # reported as failed 'exists' below
-        agg_exprs.extend(_violation_exprs(df, idx, rule))
-
-    row = df.agg(*agg_exprs).collect()[0].asDict()
+    row = df.agg(*_aggregates(suite, cols)).collect()[0].asDict()
     return _build_report(suite, cols, row, started)
 
 
@@ -244,40 +214,21 @@ def observe_suite(df: DataFrame, suite: Suite):
     whatever action the caller already runs (typically the sink write)
     via ``df.observe``. ``validate`` costs one dedicated scan; this
     costs NOTHING — at 100 TB the difference is a full extra pass over
-    the table per pipeline run.
+    the table per pipeline run. Same aggregates, same report.
 
     Returns ``(observed_df, finish)``: write/collect ``observed_df``,
-    then call ``finish()`` for the report dict. One degradation forced
-    by the Observation contract (metrics must be commutative partial
-    aggregates, so no exact ``count_distinct``): ``unique`` rules use
-    ``approx_count_distinct`` and carry ``approx: True`` — the report's
-    suite-level ``certified`` is False whenever a unique rule relied on
-    the sketch tolerance. Publish gates must key on ``certified`` (use
-    ``validate`` when key uniqueness must be certified exactly);
-    ``success`` alone only says "nothing definitively failed".
+    then call ``finish()`` for the report dict. Call ``finish`` only
+    after that action succeeded: it waits for the observed metrics.
     """
     from pyspark.sql import Observation
 
     started = time.time()
     cols = set(df.columns)
-    agg_exprs = [F.count(F.lit(1)).alias("_row_count")]
-    for idx, rule in enumerate(suite.rules):
-        if rule.kind == "exists" or rule.kind == "row_count_between":
-            continue
-        if rule.column not in cols:
-            continue
-        if rule.kind == "unique":
-            c = F.col(rule.column)
-            agg_exprs.append(F.count(c).alias(f"v{idx}_n"))
-            agg_exprs.append(F.approx_count_distinct(c).alias(f"v{idx}_d"))
-        else:
-            agg_exprs.extend(_violation_exprs(df, idx, rule))
-
     obs = Observation(f"suite_{suite.name}")
-    observed = df.observe(obs, *agg_exprs)
+    observed = df.observe(obs, *_aggregates(suite, cols))
 
     def finish() -> dict[str, Any]:
-        return _build_report(suite, cols, dict(obs.get), started, approx_unique=True)
+        return _build_report(suite, cols, dict(obs.get), started)
 
     return observed, finish
 
@@ -302,11 +253,7 @@ def render_report_markdown(report: dict[str, Any]) -> str:
     Deterministic for a given report dict (no timestamps are invented
     here — ``duration_s`` comes from the run), so golden-file tests can
     pin the exact output."""
-    verdict = (
-        "CERTIFIED"
-        if report.get("certified")
-        else ("PASSED (inconclusive)" if report.get("success") else "FAILED")
-    )
+    verdict = "CERTIFIED" if report.get("certified") else "FAILED"
     lines = [
         f"# Data quality report — `{report['suite']}`",
         "",
@@ -322,8 +269,6 @@ def render_report_markdown(report: dict[str, Any]) -> str:
         elif not res["success"]:
             status = "fail"
             detail = _result_detail(res)
-        elif res.get("inconclusive"):
-            status, detail = "inconclusive", _result_detail(res)
         else:
             status, detail = "pass", _result_detail(res)
         rule = res["rule"].replace("|", "\\|")
@@ -331,7 +276,7 @@ def render_report_markdown(report: dict[str, Any]) -> str:
     lines += [
         "",
         "Gate on **CERTIFIED** for irreversible promotion (versioned "
-        "publish); *inconclusive* marks sketch-tolerant evidence only.",
+        "publish).",
         "",
     ]
     return "\n".join(lines)
@@ -340,11 +285,6 @@ def render_report_markdown(report: dict[str, Any]) -> str:
 def _result_detail(res: dict[str, Any]) -> str:
     """One terse cell per expectation result."""
     obs = res.get("observed")
-    if isinstance(obs, dict):
-        bits = [f"{k}={v}" for k, v in obs.items()]
-        if res.get("approx"):
-            bits.append("approx")
-        return ", ".join(bits)
     if obs is not None:
         return f"observed={obs}"
     n = res.get("unexpected_count", 0)

@@ -162,8 +162,8 @@ def q167_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q168_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The declarative zone hop (`plans/pipeline.py`) run END TO END
     inside the oracle gate: Source(parquet) → transforms (length gate,
-    whitespace normalize, token count) → quality suite validated on
-    the SAME cached plan → Sink(parquet) → read the written zone back
+    whitespace normalize, token count) → Sink(parquet) with the quality
+    suite observed on that same write → read the written zone back
     and aggregate. What the oracle certifies is the whole hop —
     config-described steps compile to one Catalyst plan, the suite
     passes, and the SINK's bytes (not the in-memory frame) carry

@@ -26,9 +26,7 @@ Pairs with ``operators.relational.snapshot_diff`` for version-to-
 version change capture, and with ``quality.validate`` as the publish
 gate (validate the DataFrame, publish only on green — q132 exercises
 the full protocol inside the oracle gate). Gate on the report's
-``certified`` flag, not ``success``: ``observe_suite`` reports
-sketch-tolerant unique checks as success=True/certified=False, and a
-publish is an irreversible promotion.
+``certified`` flag: a publish is an irreversible promotion.
 
 Scale notes: the protocol costs ONE extra driver metadata op per
 publish (the marker create) over a plain write; data movement is

@@ -307,9 +307,8 @@ def quality_gated_foreach_batch(
        and publish_fn never runs for that batch.
 
     ``reports`` (optional list) collects ``(batch_id, report)`` per
-    batch. Gate keys on ``certified``, not ``success`` — same contract
-    as the batch gate: sketch-tolerant unique checks must not promote
-    data. Exactly-once note: promotion state lives in publish_fn's own
+    batch. Gate keys on ``certified`` — same contract as the batch
+    gate. Exactly-once note: promotion state lives in publish_fn's own
     idempotence (e.g. versioned publish / state overwrite keyed by
     batch_id), matching foreachBatch's at-least-once replay contract —
     a replayed batch re-stages and re-verdicts deterministically.

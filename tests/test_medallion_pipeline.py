@@ -148,3 +148,81 @@ def test_pipeline_end_to_end(spark, tmp_path, fixture_frames):
     assert report["validation"]["row_count"] == 3
     assert report["validation"]["success"]
     assert spark.read.parquet(silver_path).count() == 3
+
+
+def _banks_pipeline(src, out, fmt="csv", transforms=(M.build_banks_silver,)):
+    return Pipeline(
+        name="banks_silver",
+        source=Source(path=src, fmt=fmt),
+        transforms=list(transforms),
+        suite=Q.Suite("validacao_banks")
+        .add(Q.not_null("segmento"))
+        .add(Q.not_null("nome"))
+        .add(Q.exists("cnpj")),
+        sink=Sink(path=out, target_file_partitions=1),
+    )
+
+
+def test_pipeline_run_adds_no_job_to_the_write(spark, tmp_path, fixture_frames):
+    """The suite rides the sink write: a validated hop runs the jobs the
+    bare write runs, with no cache and no separate validation job."""
+    banks, _, _ = fixture_frames
+    src = str(tmp_path / "bronze_banks")
+    banks.write.parquet(src)
+    pipe = _banks_pipeline(src, str(tmp_path / "silver_banks"), fmt="parquet")
+    sc = spark.sparkContext
+
+    def jobs(tag, fn):
+        sc.setJobGroup(tag, tag)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+    write_only = jobs("pipe-write", lambda: pipe.sink.save(pipe.build(spark)))
+    reports = []
+    validated = jobs("pipe-run", lambda: reports.append(pipe.run(spark)))
+    assert validated == write_only
+    assert reports[0]["validation"]["row_count"] == 3
+    assert reports[0]["validation"]["success"]
+
+
+def test_pipeline_header_only_landing(spark, tmp_path):
+    src = tmp_path / "landing_empty"
+    src.mkdir()
+    (src / "banks.csv").write_text("Segmento,CNPJ,Nome\n", encoding="utf-8")
+    out = str(tmp_path / "silver_empty")
+    report = _banks_pipeline(str(src), out).run(spark)["validation"]
+    assert report["row_count"] == 0
+    assert report["success"] and report["certified"]
+    assert spark.read.parquet(out).count() == 0
+    assert [p.name for p in (tmp_path / "silver_empty").glob("part-*.parquet")]
+
+
+def test_pipeline_failed_write_raises_then_recovers(spark, tmp_path, fixture_frames):
+    """A transform that fails at execution makes ``run`` raise instead of
+    waiting on metrics the write never produced; the next run reports."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.errors import SparkRuntimeException
+
+    banks, _, _ = fixture_frames
+    src = str(tmp_path / "landing_banks")
+    banks.write.option("header", True).csv(src)
+    out = str(tmp_path / "silver_banks")
+
+    def boom(df):
+        return df.withColumn("boom", F.raise_error(F.concat(F.lit("bad row "), F.col("cnpj"))))
+
+    bad = _banks_pipeline(src, out, transforms=(M.build_banks_silver, boom))
+    ex = ThreadPoolExecutor(1)
+    fut = ex.submit(bad.run, spark)
+    with pytest.raises(SparkRuntimeException, match="bad row"):
+        fut.result(timeout=180)
+    ex.shutdown(wait=False)
+
+    report = _banks_pipeline(src, out).run(spark)["validation"]
+    assert report["row_count"] == 3 and report["success"]
+    assert spark.read.parquet(out).count() == 3

@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from ingestao_dados_poli_spark import quality as Q
 
 
@@ -20,7 +22,6 @@ def test_suite_single_pass_pass_and_fail(spark):
         .add(Q.exists("id"))
         .add(Q.exists("missing_col"))
         .add(Q.between("score", 0, 100))
-        .add(Q.unique("id"))
         .add(Q.row_count_between(1, 10))
         .add(Q.values_in_set("name", ["a", "c"]))
         .add(Q.matches_regex("name", "^[a-z]$"))
@@ -35,7 +36,6 @@ def test_suite_single_pass_pass_and_fail(spark):
     assert not by_rule["exists missing_col"]["success"]
     # between counts the NULL score as a violation
     assert not by_rule["between score [0, 100]"]["success"]
-    assert by_rule["unique id"]["success"]
     assert not report["success"]
 
 
@@ -45,6 +45,48 @@ def test_suite_json_roundtrip():
     assert again.name == "x"
     assert again.rules == suite.rules
     json.loads(suite.to_json())  # valid JSON
+
+
+@pytest.mark.parametrize("kind", ["not_nul", "unique"])
+def test_unknown_rule_kind_rejected(kind):
+    """A kind the suite cannot compile must not slip through as an
+    aggregate-free rule that reports success."""
+    with pytest.raises(ValueError, match=f"unknown rule kind '{kind}'.*not_null"):
+        Q.Rule(kind, "x")
+    payload = json.dumps({"name": "s", "rules": [{"kind": kind, "column": "x"}]})
+    with pytest.raises(ValueError, match=f"unknown rule kind '{kind}'"):
+        Q.Suite.from_json(payload)
+    with pytest.raises(ValueError, match="needs a column"):
+        Q.Rule("not_null")
+
+
+EVERY_KIND = [
+    Q.not_null("id"),
+    Q.not_null("name"),
+    Q.not_null("missing_col"),
+    Q.exists("id"),
+    Q.exists("missing_col"),
+    Q.between("score", 0, 100),
+    Q.between("name", 0, 1),
+    Q.row_count_between(1, 10),
+    Q.row_count_between(5),
+    Q.values_in_set("name", ["a"]),
+    Q.matches_regex("name", "^[a-z]$"),
+]
+
+
+@pytest.mark.parametrize("rule", EVERY_KIND, ids=[r.describe() for r in EVERY_KIND])
+def test_observe_suite_equals_validate(spark, rule):
+    """The write-riding evaluator and the dedicated aggregation job give
+    the same report, on a frame with nulls and on a zero-row one."""
+    full = _df(spark)
+    for df in (full, full.where("id < 0")):
+        suite = Q.Suite("eq", [rule])
+        observed, finish = Q.observe_suite(df, suite)
+        observed.write.format("noop").mode("overwrite").save()
+        got, want = finish(), Q.validate(df, suite)
+        got.pop("duration_s"), want.pop("duration_s")
+        assert got == want
 
 
 def test_null_counts(spark):
@@ -69,7 +111,6 @@ def test_observe_suite_zero_extra_pass(spark):
         Q.Suite("obs")
         .add(Q.not_null("a"))
         .add(Q.between("b", 0, 10))
-        .add(Q.unique("a"))
         .add(Q.row_count_between(1, 100))
     )
     df = spark.createDataFrame(
@@ -84,34 +125,7 @@ def test_observe_suite_zero_extra_pass(spark):
     assert not by_kind["not_null"]["success"]  # one null
     assert by_kind["not_null"]["unexpected_count"] == 1
     assert not by_kind["between"]["success"]  # 50.0 out of range
-    unique = [r for r in report["results"] if r["rule"].startswith("unique")][0]
-    assert unique.get("approx") is True
     assert report["success"] is False
-
-
-def test_observe_suite_inconclusive_unique_not_certified(spark):
-    """A key with ~1% real duplicates slips inside the HLL tolerance:
-    the rule stays success=True (no alert on sketch noise) but the
-    suite must NOT certify — publish gates key on `certified`."""
-    rows = [(i,) for i in range(990)] + [(i,) for i in range(10)]  # 10 dupes
-    df = spark.createDataFrame(rows, "k long")
-    observed, finish = Q.observe_suite(df, Q.Suite("u").add(Q.unique("k")))
-    assert observed.count() == 1000
-    report = finish()
-    unique = report["results"][0]
-    assert unique["success"] is True  # within ~2.3% rsd tolerance
-    assert unique["inconclusive"] is True  # estimate != row count
-    assert report["success"] is True
-    assert report["inconclusive"] is True
-    assert report["certified"] is False  # the gate signal
-
-    # validate()'s exact path on the same data: definitive failure,
-    # and a clean frame is both success AND certified
-    exact = Q.validate(df, Q.Suite("u").add(Q.unique("k")))
-    assert exact["success"] is False and exact["certified"] is False
-    clean = Q.validate(df.distinct(), Q.Suite("u").add(Q.unique("k")))
-    assert clean["success"] is True and clean["certified"] is True
-    assert clean["inconclusive"] is False
 
 
 def test_fk_violations_detects_orphans(spark):
@@ -159,22 +173,8 @@ def test_render_report_markdown_golden(spark):
         "| 4 | `row_count_between [1, 10]` | pass | observed=3 |\n"
         "\n"
         "Gate on **CERTIFIED** for irreversible promotion (versioned "
-        "publish); *inconclusive* marks sketch-tolerant evidence only.\n"
+        "publish).\n"
     )
-
-
-def test_render_inconclusive_verdict(spark):
-    df = spark.createDataFrame([(i,) for i in range(200)], ["k"])
-    suite = Q.Suite("u").add(Q.unique("k"))
-    observed, finish = Q.observe_suite(df, suite)
-    observed.write.format("noop").mode("overwrite").save()
-    report = finish()
-    md = Q.render_report_markdown(report)
-    if report["certified"]:
-        assert "Verdict: CERTIFIED" in md
-    else:
-        assert "Verdict: PASSED (inconclusive)" in md
-        assert "inconclusive" in md.splitlines()[6]
 
 
 def test_publish_report_writes_json_and_md(spark, tmp_path):

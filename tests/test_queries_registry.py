@@ -68,10 +68,10 @@ def test_available_now_only_in_runner():
 KEPT_WITHOUT_CALLER = {
     # the reference's two-variant employee CSV union (0a:52-66); the
     # example landing zone ships one variant
-    "align_employee_variants",
-    # quality.Suite rule vocabulary, alongside not_null/exists/unique
-    "row_count_between",
-    "matches_regex",
+    "medallion.align_employee_variants",
+    # quality.Suite rule vocabulary, alongside not_null/exists/between
+    "quality.row_count_between",
+    "quality.matches_regex",
 }
 
 
@@ -79,19 +79,66 @@ def test_every_library_def_has_a_caller():
     # A def that only its own test calls is surface nobody runs; pin the
     # package to defs some query, pipeline, example, tool or benchmark
     # names (registry @q queries are reached through QUERIES instead).
+    # A name counts only through the def's own module: bare inside it,
+    # `from mod import name`, or `alias.name` with `alias` bound to the
+    # module (also through `from ... import *`), so a def named like a
+    # DataFrame method is not "called" by every `df.join`.
     import ast
     import pathlib
 
     root = pathlib.Path(__file__).parent.parent
-    referenced: set[str] = set()
+    pkg = "ingestao_dados_poli_spark"
+    trees = {}
     for p in root.rglob("*.py"):
-        if p.relative_to(root).parts[0] in ("tests", ".git"):
-            continue
-        for n in ast.walk(ast.parse(p.read_text())):
+        rel = p.relative_to(root)
+        if rel.parts[0] not in ("tests", ".git"):
+            mod = ".".join(rel.with_suffix("").parts).removesuffix(".__init__")
+            trees[mod] = ast.parse(p.read_text())
+
+    aliases: dict[str, dict[str, str]] = {m: {} for m in trees}
+    stars: dict[str, list[str]] = {m: [] for m in trees}
+    for mod, tree in trees.items():
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Import):
+                for a in n.names:
+                    head = a.name.split(".")[0]
+                    aliases[mod][a.asname or head] = a.name if a.asname else head
+            elif isinstance(n, ast.ImportFrom):
+                for a in n.names:
+                    if a.name == "*":
+                        stars[mod].append(n.module)
+                    else:
+                        aliases[mod][a.asname or a.name] = f"{n.module}.{a.name}"
+
+    def lookup(mod, name):
+        if name in aliases.get(mod, {}):
+            return aliases[mod][name]
+        return next(filter(None, (lookup(s, name) for s in stars.get(mod, ()))), None)
+
+    referenced: set[str] = set()
+
+    def add(mod, name):
+        referenced.add(f"{mod}.{name}")
+        if name in aliases.get(mod, {}):
+            referenced.add(aliases[mod][name])
+        for s in stars.get(mod, ()):
+            add(s, name)
+
+    def dotted(n):
+        if isinstance(n, ast.Name):
+            return n.id
+        if isinstance(n, ast.Attribute) and (d := dotted(n.value)):
+            return f"{d}.{n.attr}"
+        return None
+
+    for mod, tree in trees.items():
+        for n in ast.walk(tree):
             if isinstance(n, ast.Name):
-                referenced.add(n.id)
-            elif isinstance(n, ast.Attribute):
-                referenced.add(n.attr)
+                add(mod, n.id)
+            elif isinstance(n, ast.Attribute) and (d := dotted(n.value)):
+                head, _, rest = d.partition(".")
+                if base := lookup(mod, head):
+                    add(".".join(filter(None, (base, rest))), n.attr)
 
     def is_query(d):
         return any(
@@ -100,12 +147,13 @@ def test_every_library_def_has_a_caller():
         )
 
     orphans = {
-        d.name
-        for p in (root / "ingestao_dados_poli_spark").rglob("*.py")
-        for d in ast.parse(p.read_text()).body
+        f"{mod.removeprefix(pkg + '.')}.{d.name}"
+        for mod, tree in trees.items()
+        if mod.startswith(pkg)
+        for d in tree.body
         if isinstance(d, (ast.FunctionDef, ast.ClassDef))
         and not is_query(d)
-        and d.name not in referenced
+        and f"{mod}.{d.name}" not in referenced
     }
     assert orphans == KEPT_WITHOUT_CALLER, sorted(orphans ^ KEPT_WITHOUT_CALLER)
 

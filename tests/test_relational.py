@@ -5,14 +5,6 @@ from pyspark.sql import functions as F
 from ingestao_dados_poli_spark.operators import relational as R
 
 
-def test_join_broadcast(spark):
-    left = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], ["k", "v"])
-    right = spark.createDataFrame([(1, "x"), (2, "y")], ["k", "w"])
-    out = R.join(left, right, "k", "inner", broadcast_right=True)
-    assert out.count() == 2
-    assert "BroadcastHashJoin" in out._jdf.queryExecution().executedPlan().toString()
-
-
 def test_semi_anti_join(spark):
     left = spark.createDataFrame([(1,), (2,), (3,)], ["k"])
     right = spark.createDataFrame([(2,), (3,), (4,)], ["k"])
@@ -23,7 +15,7 @@ def test_semi_anti_join(spark):
 def test_salted_join_matches_plain(spark):
     left = spark.createDataFrame([(i % 3, i) for i in range(100)], ["k", "v"])
     right = spark.createDataFrame([(0, "x"), (1, "y"), (2, "z")], ["k", "w"])
-    plain = R.join(left, right, "k").select("k", "v", "w")
+    plain = left.join(right, "k").select("k", "v", "w")
     salted = R.salted_join(left, right, "k").select("k", "v", "w")
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
 

@@ -143,8 +143,7 @@ def test_publish_gate_with_quality(spark, tmp_path):
     )
     suite = Suite("gate", [Rule("not_null", "id")])
     report = validate(candidate, suite)
-    # gate on `certified`, not `success`: an inconclusive (sketch-
-    # tolerant) suite must not promote data either
+    # gate on `certified`, the key every publish gate reads
     assert not report["certified"]
     if report["certified"]:  # pragma: no cover - the red path is the test
         V.publish(spark, candidate, path)

@@ -29,6 +29,7 @@ def _get(url: str):
 
 
 def main() -> None:
+    from bench import warmup
     from ingestao_dados_poli_spark import queries as q
     from ingestao_dados_poli_spark.session import get_spark
 
@@ -54,19 +55,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
 
-    # bench-equivalent warmup
-    q.QUERIES["q01_gold_flagship"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _warm(s):
-        return s
-
-    spark.range(1000).select(_warm("id")).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    warmup(spark, sf_dir)
 
     fn = q.QUERIES[name]
     t0 = time.time()

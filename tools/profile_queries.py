@@ -32,6 +32,7 @@ def _get(url: str):
 
 
 def main() -> None:
+    from bench import warmup
     from ingestao_dados_poli_spark import queries as q
     from ingestao_dados_poli_spark.session import get_spark
 
@@ -55,19 +56,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
 
-    # same warmup as bench.py
-    q.QUERIES["q01_gold_flagship"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _warm(s):
-        return s
-
-    spark.range(1000).select(_warm("id")).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    warmup(spark, sf_dir)
 
     import gc as _gc
 
