@@ -66,27 +66,31 @@ def warmup(spark, sf_dir: str) -> None:
     spark.range(1000).select(_warm("id")).write.format("noop").mode("overwrite").save()
 
 
+def resolve_queries(names: list[str]) -> list[str]:
+    """Registry names selected by ``names``, in registry order. Each
+    entry is a full name (``q30_embedding_lsh_topk``) or the number
+    prefix before its first underscore (``q30``, never q300 or q301).
+    Raises ``SystemExit`` naming every entry that matches nothing."""
+    from ingestao_dados_poli_spark import queries as q
+
+    def hit(name: str, p: str) -> bool:
+        return name == p or name.startswith(p + "_")
+
+    missing = [p for p in names if not any(hit(n, p) for n in q.QUERIES)]
+    if missing:
+        raise SystemExit(f"unknown queries: {missing}")
+    return [n for n in q.QUERIES if any(hit(n, p) for p in names)]
+
+
 def main() -> None:
     from ingestao_dados_poli_spark import queries as q
     from ingestao_dados_poli_spark.session import get_spark
 
     isolate: list[str] = []
     if len(sys.argv) > 1 and sys.argv[1] == "--isolate":
-        prefixes = sys.argv[2:]
-        if not prefixes:
+        if not sys.argv[2:]:
             raise SystemExit("--isolate needs at least one query name/prefix")
-        isolate = [
-            name
-            for name in q.QUERIES
-            if any(name == p or name.startswith(p) for p in prefixes)
-        ]
-        missing = [
-            p
-            for p in prefixes
-            if not any(n == p or n.startswith(p) for n in q.QUERIES)
-        ]
-        if missing:
-            raise SystemExit(f"unknown queries: {missing}")
+        isolate = resolve_queries(sys.argv[2:])
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]

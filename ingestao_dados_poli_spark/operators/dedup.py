@@ -23,6 +23,16 @@ Scale notes (how each behaves at 100 TB):
   exploding quadratically.
 - SimHash: signature is one 63-bit long per doc; candidate pairs via
   chunk buckets (Manku trick), hamming-verified in-row.
+
+Candidate generation is kept apart from scoring: each signature family
+has ONE pair builder, and each public operator is its signature plus
+its score —
+- ``_shingle_overlaps`` (inverted shingle index): ``jaccard_pairs``,
+  ``containment_pairs``;
+- ``_minhash_banded`` + ``_minhash_estimate``:
+  ``minhash_candidate_pairs``, ``minhash_pairs_between``;
+- ``hamming_band_pairs`` (pigeonhole band join over bit signatures):
+  ``simhash_pairs``, ``multimodal.ahash_near_dup_pairs``.
 """
 
 from __future__ import annotations
@@ -448,42 +458,80 @@ def _minhash_from_token_hashes_udf(num_hashes: int, k: int):
     return sig
 
 
-def minhash_bands(sig_col: Column | str, num_bands: int, rows_per_band: int) -> Column:
+def minhash_bands(sig_col: str, num_bands: int, rows_per_band: int) -> Column:
     """array<struct<band:int, bucket:bigint>> — hash each band of the
-    signature to one LSH bucket id.
+    signature column ``sig_col`` to one LSH bucket id.
 
     Built as ONE ``F.expr`` SQL string, not num_bands × rows_per_band
     Python Column objects: every ``F.xxx``/``getItem`` call is a py4j
     round trip (~0.3 ms), and at 16 bands × 4 rows × 2 join sides this
     builder alone cost ~1.1 s of driver build time per q124 call
-    (measured r08, cProfile: 6,711 round trips for the query build).
-    The parsed expression is identical — same xxhash64 args, same
-    struct fields — so every bucket id is unchanged."""
-    if isinstance(sig_col, str):
-        name = f"`{sig_col}`"
-        bands_sql = ", ".join(
-            "struct({b} as band, xxhash64({args}) as bucket)".format(
-                b=b,
-                args=", ".join(
-                    f"{name}[{b * rows_per_band + r}]"
-                    for r in range(rows_per_band)
-                ),
-            )
-            for b in range(num_bands)
+    (measured r08, cProfile: 6,711 round trips for the query build)."""
+    name = f"`{sig_col}`"
+    bands_sql = ", ".join(
+        "struct({b} as band, xxhash64({args}) as bucket)".format(
+            b=b,
+            args=", ".join(
+                f"{name}[{b * rows_per_band + r}]" for r in range(rows_per_band)
+            ),
         )
-        return F.expr(f"array({bands_sql})")
-    sig = sig_col
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    *[sig.getItem(b * rows_per_band + r) for r in range(rows_per_band)]
-                ).alias("bucket"),
-            )
-            for b in range(num_bands)
-        ]
+        for b in range(num_bands)
     )
+    return F.expr(f"array({bands_sql})")
+
+
+def _minhash_banded(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_hashes: int,
+    num_bands: int,
+    k: int,
+    side: int | None = None,
+) -> DataFrame:
+    """(doc, band, bucket) rows for banded MinHash LSH: signature
+    (scan-side) → one row per band carrying ONLY the doc struct and its
+    bucket id, never the text. ``doc`` is ``(_id, minhash)``, or
+    ``(_side, _id, minhash)`` when ``side`` tags a corpus for a
+    between-corpora join; the hot-bucket salt is ``xxhash64(doc)``, so
+    these structs fix which pairs a degraded bucket emits.
+
+    The signature (num_hashes longs ≈ 256-512 B) rides along into the
+    bucket groups so the Jaccard estimate is computed IN-ROW on the
+    expanded pair — signatures are computed exactly once and never
+    joined back (the join-back formulation recomputes the MinHash
+    subtree once per join side)."""
+    if num_hashes % num_bands:
+        raise ValueError(
+            f"num_hashes={num_hashes} must be divisible by num_bands="
+            f"{num_bands} (remainder hashes would be computed but never banded)"
+        )
+    # JVM: normalize+tokenize+hash each token once; fused numpy kernel:
+    # k-gram rolling hashes → permutation mins. One Arrow pass per row.
+    sig = _minhash_from_token_hashes_udf(num_hashes, k)(_token_hashes(text_col))
+    sigs = fan_out(df).select(F.col(id_col).alias("_id"), sig.alias("minhash"))
+    tag = [] if side is None else [F.lit(side).alias("_side")]
+    return sigs.select(
+        F.struct(*tag, "_id", "minhash").alias("doc"),
+        F.explode(minhash_bands("minhash", num_bands, num_hashes // num_bands)).alias("bb"),
+    ).select("doc", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+
+
+def _minhash_estimate(num_hashes: int) -> Column:
+    """Jaccard estimate of a candidate pair ``p``: the positional
+    agreement fraction of the two riding signatures — the unbiased
+    MinHash estimator (array_intersect would compare as SETS, which is
+    wrong)."""
+    agree = F.aggregate(
+        F.zip_with(
+            F.col("p.id_a.minhash"),
+            F.col("p.id_b.minhash"),
+            lambda x, y: (x == y).cast("int"),
+        ),
+        F.lit(0),
+        lambda acc, v: acc + v,
+    )
+    return (agree / F.lit(num_hashes)).cast("double")
 
 
 def minhash_candidate_pairs(
@@ -497,56 +545,21 @@ def minhash_candidate_pairs(
 ) -> DataFrame:
     """(id_a, id_b, est_jaccard) candidate near-dup pairs via banded LSH.
 
-    Pipeline: signature (scan-side) → explode bands (rows carry ONLY
-    id + band + bucket, never the text) → shuffle on (band, bucket) →
-    per-bucket self-join (id_a < id_b) → dedup pairs → estimate jaccard
-    from full signatures. Buckets larger than ``max_bucket_size`` (e.g.
+    Pipeline: ``_minhash_banded`` → shuffle on (band, bucket) → in-row
+    pair expansion per bucket → dedup pairs → estimate jaccard from the
+    riding signatures. Buckets larger than ``max_bucket_size`` (e.g.
     empty/boilerplate docs) degrade to salted sub-bucket samples plus
     an anchor chain instead of emitting O(n²) pairs — the salt lives in
     the GROUP KEY so no task ever buffers a whole hot bucket, see
     ``salted_bucket_pairs``.
     """
-    if num_hashes % num_bands:
-        raise ValueError(
-            f"num_hashes={num_hashes} must be divisible by num_bands="
-            f"{num_bands} (remainder hashes would be computed but never banded)"
-        )
-    rows_per_band = num_hashes // num_bands
-    # JVM: normalize+tokenize+hash each token once; fused numpy kernel:
-    # k-gram rolling hashes → permutation mins. One Arrow pass per row.
-    sigs = fan_out(df).select(
-        F.col(id_col).alias("_id"),
-        _minhash_from_token_hashes_udf(num_hashes, k)(
-            _token_hashes(text_col)
-        ).alias("minhash"),
-    )
-    # The signature (num_hashes longs ≈ 256-512 B) rides along into the
-    # bucket groups so the Jaccard estimate is computed IN-ROW on the
-    # expanded pair — signatures are computed exactly once and never
-    # joined back (the join-back formulation recomputes the MinHash
-    # subtree once per join side).
-    banded = sigs.select(
-        F.struct("_id", "minhash").alias("doc"),
-        F.explode(minhash_bands("minhash", num_bands, rows_per_band)).alias("bb"),
-    ).select("doc", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-
-    # positional agreement fraction — the unbiased MinHash Jaccard
-    # estimator (array_intersect would compare as SETS, which is wrong)
-    est = F.aggregate(
-        F.zip_with(
-            F.col("p.id_a.minhash"),
-            F.col("p.id_b.minhash"),
-            lambda x, y: (x == y).cast("int"),
-        ),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    ) / F.lit(num_hashes)
+    banded = _minhash_banded(df, text_col, id_col, num_hashes, num_bands, k)
     return (
         salted_bucket_pairs(banded, ["band", "bucket"], "doc", max_bucket_size)
         .select(
             F.col("p.id_a._id").alias("id_a"),
             F.col("p.id_b._id").alias("id_b"),
-            est.cast("double").alias("est_jaccard"),
+            _minhash_estimate(num_hashes).alias("est_jaccard"),
         )
         .dropDuplicates(["id_a", "id_b"])
     )
@@ -691,41 +704,12 @@ def minhash_pairs_between(
     bucket's doc list, filtered to cross-side pairs (anchor-chain
     stitch pairs between same-side anchors are filtered out with them).
     """
-    if num_hashes % num_bands:
-        raise ValueError(
-            f"num_hashes={num_hashes} must be divisible by num_bands={num_bands}"
-        )
-    rows_per_band = num_hashes // num_bands
-
-    def banded(df: DataFrame, side: int) -> DataFrame:
-        sigs = fan_out(df).select(
-            F.col(id_col).alias("_id"),
-            F.lit(side).alias("_side"),
-            _minhash_from_token_hashes_udf(num_hashes, k)(
-                _token_hashes(text_col)
-            ).alias("minhash"),
-        )
-        return sigs.select(
-            F.struct("_side", "_id", "minhash").alias("doc"),
-            F.explode(
-                minhash_bands("minhash", num_bands, rows_per_band)
-            ).alias("bb"),
-        ).select(
-            "doc", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-        )
-
-    est = F.aggregate(
-        F.zip_with(
-            F.col("p.id_a.minhash"),
-            F.col("p.id_b.minhash"),
-            lambda x, y: (x == y).cast("int"),
-        ),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    ) / F.lit(num_hashes)
-    pairs = (
+    return (
         salted_bucket_pairs(
-            banded(left, 0).unionByName(banded(right, 1)),
+            _minhash_banded(left, text_col, id_col, num_hashes, num_bands, k, side=0)
+            .unionByName(
+                _minhash_banded(right, text_col, id_col, num_hashes, num_bands, k, side=1)
+            ),
             ["band", "bucket"],
             "doc",
             max_bucket_size,
@@ -736,40 +720,30 @@ def minhash_pairs_between(
         .select(
             F.col("p.id_a._id").alias("left_id"),
             F.col("p.id_b._id").alias("right_id"),
-            est.cast("double").alias("est_jaccard"),
+            _minhash_estimate(num_hashes).alias("est_jaccard"),
         )
         .dropDuplicates(["left_id", "right_id"])
     )
-    return pairs
 
 
 # -------------------------------------------------------------- SimHash
 
-def simhash(text_col: Column | str, bits: int = 63, pre_hashed: bool = False) -> Column:
-    """63-bit SimHash as a non-negative bigint, fully JVM-side.
+def simhash(token_hashes: Column) -> Column:
+    """63-bit SimHash of an array<bigint> of token hashes
+    (``_token_hashes``) as a non-negative bigint: each bit is the sign
+    of the sum over tokens of ±1 for that bit position; 63 bits keep it
+    within a signed long.
 
-    Token hashes via xxhash64; each bit of the signature is the sign of
-    the sum over tokens of ±1 for that bit position. Uses 63 bits to stay
-    within a signed long. ``pre_hashed=True`` means ``text_col`` is
-    already an array<bigint> of token hashes (preferred: compute it in
-    its own projection, else the tokenize+hash subtree is re-evaluated
-    once per bit).
+    JVM hashes each token once; the per-bit ±1 balances and the bit
+    pack run in an Arrow-batched numpy kernel. (A pure-column version
+    exists in git history — one aggregate with an array accumulator —
+    but higher-order folds are interpreted per element and measured
+    ~60 µs per fold.) Bit extraction on the uint64 view matches the
+    JVM's two's-complement bit_get exactly.
     """
     from pyspark.sql.functions import pandas_udf
 
-    if pre_hashed:
-        hashes = F.col(text_col) if isinstance(text_col, str) else text_col
-    else:
-        toks = F.split(normalize_text(text_col), " ")
-        hashes = F.transform(toks, lambda t: F.xxhash64(t))
-
-    # JVM hashes each token once; the per-bit ±1 balances and the bit
-    # pack run in an Arrow-batched numpy kernel. (A pure-column version
-    # exists in git history — one aggregate with an array accumulator —
-    # but higher-order folds are interpreted per element and measured
-    # ~60 µs per fold.) Bit extraction on the uint64 view matches the
-    # JVM's two's-complement bit_get exactly.
-    shifts = np.arange(bits, dtype=np.uint64)
+    shifts = np.arange(63, dtype=np.uint64)
     weights = (np.uint64(1) << shifts).astype(np.int64)
 
     @pandas_udf("long")
@@ -785,13 +759,61 @@ def simhash(text_col: Column | str, bits: int = 63, pre_hashed: bool = False) ->
             [np.asarray(h, dtype=np.int64) for h in hs if h is not None and len(h)]
         ).view(np.uint64)  # (T_total,)
         bitmat = ((flat[:, None] >> shifts[None, :]) & np.uint64(1)).astype(np.int8)
-        signed = (2 * bitmat - 1).astype(np.int32)  # (T_total, bits)
+        signed = (2 * bitmat - 1).astype(np.int32)  # (T_total, 63)
         offsets = np.concatenate(([0], np.cumsum(counts[nonempty])[:-1]))
-        balances = np.add.reduceat(signed, offsets, axis=0)  # (docs, bits)
+        balances = np.add.reduceat(signed, offsets, axis=0)  # (docs, 63)
         out[nonempty] = (weights[None, :] * (balances > 0)).sum(axis=1)
         return pd.Series(out)
 
-    return sig(hashes)
+    return sig(token_hashes)
+
+
+def hamming_band_pairs(
+    sigs: DataFrame,
+    bands: int,
+    width: int,
+    max_hamming: int,
+    max_bucket_size: int,
+) -> DataFrame:
+    """(id_a, id_b, hamming) pairs of ``sigs`` rows ``(_id, sig)`` —
+    bigint bit signatures — within ``max_hamming`` bits: the pigeonhole
+    band join shared by SimHash and perceptual image hashes (Manku,
+    Jain & Das Sarma 2007).
+
+    Each signature splits into ``bands`` contiguous ``width``-bit
+    slices; a pair within hamming distance < bands agrees exactly on
+    ≥1 slice, so bucketing on (band, slice value) finds every such
+    pair and an in-row ``bit_count(a ^ b)`` verifies it. One shuffle on
+    the band buckets. Buckets larger than ``max_bucket_size`` (e.g.
+    many empty docs all hashing to sig=0) degrade to key-salted
+    sub-bucket samples via ``salted_bucket_pairs`` instead of the
+    quadratic in-row pair expansion; every emitted pair is still
+    exact-verified, so degradation cannot admit a false match.
+    """
+    if bands <= max_hamming:
+        raise ValueError(
+            f"bands={bands} cannot guarantee recall for "
+            f"max_hamming={max_hamming}; need bands > max_hamming"
+        )
+    # all band slices as ONE SQL expression (one py4j call, not a
+    # Column tree per band)
+    slices = (
+        f"transform(sequence(0, {bands - 1}), b -> struct(b as band,"
+        f" shiftright(sig, b * {width}) & {(1 << width) - 1} as bucket))"
+    )
+    banded = sigs.select(
+        F.struct("_id", "sig").alias("doc"), F.explode(F.expr(slices)).alias("bb")
+    ).select("doc", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+    return (
+        salted_bucket_pairs(banded, ["band", "bucket"], "doc", max_bucket_size)
+        .select(
+            F.col("p.id_a._id").alias("id_a"),
+            F.col("p.id_b._id").alias("id_b"),
+            F.expr("bit_count(p.id_a.sig ^ p.id_b.sig)").alias("hamming"),
+        )
+        .where(F.col("hamming") <= max_hamming)
+        .distinct()
+    )
 
 
 def simhash_pairs(
@@ -802,112 +824,56 @@ def simhash_pairs(
     num_chunks: int | None = None,
     max_bucket_size: int = 200,
 ) -> DataFrame:
-    """(id_a, id_b, hamming) near-dup pairs by SimHash.
-
-    Classic Manku/Jain/Sarma trick: split the 63-bit signature into
-    ``num_chunks`` chunks; any pair within hamming distance < num_chunks
-    must agree exactly on ≥1 chunk → bucket on (chunk_idx, chunk_value),
-    verify with bit_count(xor) inside the bucket. One shuffle on chunks.
+    """(id_a, id_b, hamming) near-dup pairs by SimHash: the 63-bit
+    signature split into ``num_chunks`` chunks through
+    ``hamming_band_pairs``.
 
     ``num_chunks`` defaults to ``max_hamming + 1`` — the smallest value
     for which the pigeonhole recall guarantee actually covers the
-    requested distance; an explicit smaller value silently misses pairs.
-    Buckets larger than ``max_bucket_size`` (e.g. many empty docs all
-    hashing to sig=0) degrade to key-salted sub-bucket samples via
-    ``salted_bucket_pairs`` instead of the quadratic in-row pair
-    expansion; every emitted pair is still exact-verified by the
-    in-row hamming check, so degradation cannot admit a false match.
+    requested distance; a smaller explicit value raises ``ValueError``.
     """
     if num_chunks is None:
         num_chunks = max_hamming + 1
-    elif num_chunks <= max_hamming:
-        raise ValueError(
-            f"num_chunks={num_chunks} cannot guarantee recall for "
-            f"max_hamming={max_hamming}; need num_chunks > max_hamming"
-        )
-    chunk_bits = 63 // num_chunks
-    hashed = fan_out(df).select(
-        F.col(id_col).alias("_id"),
-        F.transform(
-            F.split(normalize_text(text_col), " "), lambda t: F.xxhash64(t)
-        ).alias("_th"),
+    sigs = fan_out(df).select(
+        F.col(id_col).alias("_id"), simhash(_token_hashes(text_col)).alias("sig")
     )
-    sigs = hashed.select("_id", simhash("_th", pre_hashed=True).alias("sig"))
-    chunks = sigs.select(
-        "_id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("ci"),
-                        F.shiftright(F.col("sig"), i * chunk_bits)
-                        .bitwiseAND(F.lit((1 << chunk_bits) - 1))
-                        .alias("cv"),
-                    )
-                    for i in range(num_chunks)
-                ]
-            )
-        ).alias("ch"),
-    ).select("_id", "sig", "ch.ci", "ch.cv")
-
-    # One shuffle: group (id, sig) per chunk bucket, expand pairs in-row
-    # (sorted by struct → id_a < id_b), verify hamming inside the row.
-    pairs = (
-        salted_bucket_pairs(
-            chunks.select(F.struct("_id", "sig").alias("doc"), "ci", "cv"),
-            ["ci", "cv"],
-            "doc",
-            max_bucket_size,
-        )
-        .select(
-            F.col("p.id_a._id").alias("id_a"),
-            F.col("p.id_b._id").alias("id_b"),
-            F.bit_count(F.col("p.id_a.sig").bitwiseXOR(F.col("p.id_b.sig"))).alias(
-                "hamming"
-            ),
-        )
+    return hamming_band_pairs(
+        sigs, num_chunks, 63 // num_chunks, max_hamming, max_bucket_size
     )
-    return pairs.filter(F.col("hamming") <= max_hamming).distinct()
 
 
 # ------------------------------------------------------- n-gram Jaccard
 
-def jaccard_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int = 3,
-    threshold: float = 0.5,
-    max_posting_len: int = 500,
+def _shingle_overlaps(
+    df: DataFrame, text_col: str, id_col: str, k: int, max_posting_len: int
 ) -> DataFrame:
-    """Exact n-gram Jaccard similarity via an inverted shingle index.
+    """(id_a, id_b, na, nb, inter): every doc pair sharing ≥1 hashed
+    k-shingle, with both docs' distinct-shingle counts and the exact
+    intersection size — the inverted-index half that ``jaccard_pairs``
+    and ``containment_pairs`` share; each adds only its score.
 
-    Instead of a cross join (O(n²) at any scale), build shingle→doc
-    postings, join postings to get co-occurring pairs with intersection
-    counts, then compute |A∩B| / (|A|+|B|-|A∩B|). ``max_posting_len``
-    drops stop-shingles whose postings would dominate the pair blow-up.
+    Shingles live as int64 hashes end-to-end (JVM token hash → numpy
+    rolling k-gram, see shingle_hashes_udf): the postings shuffle moves
+    8-byte keys instead of ~40-byte strings. Collisions (~2^-64 per
+    pair) only ever nudge a score, never corrupt ids. The counts ride
+    along with the pair row, so no score joins back to the corpus.
     """
-    # Shingles live as int64 hashes end-to-end (JVM token hash → numpy
-    # rolling k-gram, see shingle_hashes_udf): the postings shuffle moves
-    # 8-byte keys instead of ~40-byte strings. Collisions (~2^-64 per
-    # pair) only ever nudge an estimate, never corrupt ids.
     docs = fan_out(df).select(
         F.col(id_col).alias("_id"),
         shingle_hashes_udf(k)(_token_hashes(text_col)).alias("sh"),
     ).withColumn("n_sh", F.size("sh"))
 
     postings = docs.select("_id", "n_sh", F.explode("sh").alias("shingle"))
-    # The stop-shingle cap is applied BEFORE the postings aggregation:
-    # a count window over the shingle annotates each posting row with
-    # its posting length (WindowExec's buffer spills; collect_list's
-    # does not), hot postings are filtered out, and only then does
-    # collect_list build — so the buffer never materializes a stop
-    # shingle's posting. Output is identical to filtering the collected
-    # array's size (those postings were dropped either way); grouping
-    # on the window's own partition key reuses its exchange.
+    # ``max_posting_len`` drops stop-shingles whose postings would
+    # dominate the pair blow-up. The cap is applied BEFORE the postings
+    # aggregation: a count window over the shingle annotates each
+    # posting row with its posting length (WindowExec's buffer spills;
+    # collect_list's does not), hot postings are filtered out, and only
+    # then does collect_list build — so the buffer never materializes a
+    # stop shingle's posting. Grouping on the window's own partition
+    # key reuses its exchange.
     plen = F.count(F.lit(1)).over(Window.partitionBy("shingle"))
-    inter = (
+    return (
         postings.withColumn("_plen", plen)
         .filter(F.col("_plen") <= max_posting_len)
         .groupBy("shingle")
@@ -922,6 +888,23 @@ def jaccard_pairs(
         )
         .agg(F.count(F.lit(1)).alias("inter"))
     )
+
+
+def jaccard_pairs(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    k: int = 3,
+    threshold: float = 0.5,
+    max_posting_len: int = 500,
+) -> DataFrame:
+    """Exact n-gram Jaccard similarity via an inverted shingle index.
+
+    Instead of a cross join (O(n²) at any scale), build shingle→doc
+    postings, join postings to get co-occurring pairs with intersection
+    counts (``_shingle_overlaps``), then compute |A∩B| / (|A|+|B|-|A∩B|).
+    """
+    inter = _shingle_overlaps(df, text_col, id_col, k, max_posting_len)
     jac = (F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))).cast("double")
     return inter.select("id_a", "id_b", jac.alias("jaccard")).filter(
         F.col("jaccard") >= threshold
@@ -947,41 +930,14 @@ def containment_pairs(
     subset-duplicates, which is exactly the boilerplate/quotation case
     a training-corpus cleaner must catch.
 
-    Same machinery as ``jaccard_pairs`` — shingle→doc postings with a
-    windowed stop-shingle cap, one shuffle, in-row pair expansion —
-    but the score is emitted in EXACT integer permille for BOTH
-    directions: ``cont_ab = (1000·|A∩B|) div |A|`` (how much of A is
-    inside B) and ``cont_ba`` likewise. Pairs are kept when EITHER
-    direction reaches ``min_permille``. Integer arithmetic end-to-end:
-    no float rounding to reconcile across engines.
-
-    Scale shape: identical to ``jaccard_pairs`` — postings shuffle
-    8-byte hashed shingles, the cap bounds the in-bucket pair
-    expansion, and the score is computed from counts that rode along
-    with the pair row (no second join back to the corpus).
+    Same overlaps as ``jaccard_pairs`` (``_shingle_overlaps``), but the
+    score is emitted in EXACT integer permille for BOTH directions:
+    ``cont_ab = (1000·|A∩B|) div |A|`` (how much of A is inside B) and
+    ``cont_ba`` likewise. Pairs are kept when EITHER direction reaches
+    ``min_permille``. Integer arithmetic end-to-end: no float rounding
+    to reconcile across engines.
     """
-    docs = fan_out(df).select(
-        F.col(id_col).alias("_id"),
-        shingle_hashes_udf(k)(_token_hashes(text_col)).alias("sh"),
-    ).withColumn("n_sh", F.size("sh"))
-
-    postings = docs.select("_id", "n_sh", F.explode("sh").alias("shingle"))
-    plen = F.count(F.lit(1)).over(Window.partitionBy("shingle"))
-    inter = (
-        postings.withColumn("_plen", plen)
-        .filter(F.col("_plen") <= max_posting_len)
-        .groupBy("shingle")
-        .agg(F.collect_list(F.struct("_id", "n_sh")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-        .select(F.explode(_pairs_in_group(F.array_sort("ids"))).alias("p"))
-        .groupBy(
-            F.col("p.id_a._id").alias("id_a"),
-            F.col("p.id_b._id").alias("id_b"),
-            F.col("p.id_a.n_sh").alias("na"),
-            F.col("p.id_b.n_sh").alias("nb"),
-        )
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
+    inter = _shingle_overlaps(df, text_col, id_col, k, max_posting_len)
     out = inter.select(
         "id_a",
         "id_b",

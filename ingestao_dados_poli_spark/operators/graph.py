@@ -32,6 +32,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+class NotConvergedError(RuntimeError):
+    """An iterative operator reached its round bound before its
+    fixpoint, so the labels it holds are not the answer."""
+
+
 def _loop_partitions(df: DataFrame) -> int:
     """Partition count for pinned loop-frame placement: the session's
     shuffle-partition setting — scale-parameterized (clusters set it
@@ -107,7 +112,9 @@ def connected_components(
       the diameter cliff.
 
     All modes detect convergence with one scalar aggregate per round —
-    no driver-side data collection beyond a handful of numbers.
+    no driver-side data collection beyond a handful of numbers. A run
+    that has not converged after ``max_iter`` rounds raises
+    ``NotConvergedError`` instead of returning partial labels.
     """
     if algorithm not in ("auto", "flood", "star"):
         raise ValueError(
@@ -187,8 +194,13 @@ def _cc_flood(
             break
         prev_sum = cur_sum
 
-    if bail_if_unconverged and not converged:
-        return None
+    if not converged:
+        if bail_if_unconverged:
+            return None
+        raise NotConvergedError(
+            f"connected_components(algorithm='flood') still changing after "
+            f"max_iter={max_iter} rounds"
+        )
     return labels.select("node", F.col("label").alias("component"))
 
 
@@ -258,11 +270,16 @@ def _cc_star(sym: DataFrame, max_iter: int) -> DataFrame:
         if fp == prev_fp:
             break
         prev_fp = fp
+    else:
+        raise NotConvergedError(
+            f"connected_components(algorithm='star') still changing after "
+            f"max_iter={max_iter} rounds"
+        )
 
     # fixpoint edges are (member → root) stars; roots label themselves,
-    # as do nodes whose edges contracted away entirely. The min-agg is
-    # insurance for a max_iter cutoff mid-contraction (a node may still
-    # hold two outgoing edges there; at the true fixpoint it's a no-op).
+    # as do nodes whose edges contracted away entirely. Each member
+    # holds exactly one outgoing edge at the fixpoint, so the min-agg
+    # only reshapes edges into (node, component) rows.
     members = (
         e.groupBy(F.col("a").alias("node"))
         .agg(F.min("b").alias("component"))

@@ -339,17 +339,17 @@ def ahash_near_dup_pairs(
     hashes: DataFrame,
     *,
     bands: int = 4,
-    max_hamming: int = 6,
+    max_hamming: int = 3,
     max_bucket_size: int = 2000,
 ) -> DataFrame:
     """Banded hamming join over perceptual hashes — the image analog of
-    MinHash LSH: split each 64-bit aHash into ``bands`` contiguous
-    slices, bucket on (band index, slice value) — any pair within
-    hamming <= bands-1... <= (bands-1) per the pigeonhole principle
-    shares at least one untouched band — then verify candidates with
-    an exact in-row ``bit_count(a ^ b) <= max_hamming``. Requires
-    ``max_hamming < bands`` for guaranteed recall (pigeonhole: fewer
-    flipped bits than bands leaves one band clean).
+    MinHash LSH, and the same pigeonhole band join as SimHash
+    (`dedup.hamming_band_pairs`): split each 64-bit aHash into
+    ``bands`` contiguous slices, bucket on (band index, slice value) —
+    any pair within hamming <= bands-1 shares at least one untouched
+    band — then verify candidates with an exact in-row
+    ``bit_count(a ^ b) <= max_hamming``. Raises ``ValueError`` unless
+    ``max_hamming < bands``, the condition for guaranteed recall.
 
     Scale shape: identical to text LSH — candidate generation is
     bucketed (never all-pairs), and hot buckets (screenshot
@@ -358,33 +358,7 @@ def ahash_near_dup_pairs(
     (`dedup.salted_bucket_pairs`): no whole bucket in one aggregation
     buffer, linear pair output under the cap.
     """
-    from ingestao_dados_poli_spark.operators.dedup import (
-        salted_bucket_pairs,
-    )
+    from ingestao_dados_poli_spark.operators.dedup import hamming_band_pairs
 
-    width = 64 // bands
-    banded = hashes.select(
-        F.struct(
-            F.col("media_id").alias("doc"), F.col("ahash").alias("sig")
-        ).alias("d"),
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {bands - 1}), b -> struct("
-                f" b as band,"
-                f" shiftright(ahash, b * {width})"
-                f"   & {(1 << width) - 1} as bucket))"
-            )
-        ).alias("bb"),
-    ).select("d", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    pairs = salted_bucket_pairs(
-        banded, ["band", "bucket"], "d", max_bucket_size
-    )
-    return (
-        pairs.select(
-            F.col("p.id_a.doc").alias("id_a"),
-            F.col("p.id_b.doc").alias("id_b"),
-            F.expr("bit_count(p.id_a.sig ^ p.id_b.sig)").alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    sigs = hashes.select(F.col("media_id").alias("_id"), F.col("ahash").alias("sig"))
+    return hamming_band_pairs(sigs, bands, 64 // bands, max_hamming, max_bucket_size)

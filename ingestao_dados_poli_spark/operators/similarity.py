@@ -3,18 +3,20 @@
 Not present in the reference (SURVEY §2.7/§7 step 6) — added as the
 engine's ANN surface for training-data pipelines:
 
-- ``signed_random_projection`` + ``topk_lsh``: the scale path. Random
+- ``topk_lsh`` / ``embedding_near_dup_pairs``: the scale path. Random
   hyperplane LSH buckets corpus and queries; candidate set = bucket
   collisions (multi-probe via multiple tables); exact cosine re-rank on
-  candidates only. Hyperplane coefficients are DETERMINISTIC (hashed
-  from (table, plane, dim)) — reproducible across runs, no side data to
-  ship. With a known ``dim`` the signatures compute in one Arrow-batched
-  numpy matmul per batch (the column-expression fallback covers unknown/
-  mixed dims).
+  candidates only. Both sign through ONE kernel, ``_lsh_signatures_udf``:
+  one Arrow-batched numpy matmul per batch against ±1 hyperplanes that
+  are DETERMINISTIC (hashed from (table, plane, dim index)) —
+  reproducible across runs, no side data to ship. The vector length is
+  read from the batch; every vector must have the same length.
 - ``nearest_centroid`` / IVF-style partitioning for repeated queries.
 """
 
 from __future__ import annotations
+
+import functools
 
 import numpy as np
 import pandas as pd
@@ -42,9 +44,20 @@ def _plane_signs(table: int, plane: int, dim: int) -> list[float]:
     ]
 
 
-def _lsh_signatures_udf(num_planes: int, num_tables: int, dim: int):
+@functools.lru_cache(maxsize=None)
+def _plane_matrix(num_planes: int, num_tables: int, dim: int) -> np.ndarray:
+    """(dim, tables·planes) ±1 hyperplane matrix, built once per process
+    for each (planes, tables, dim)."""
+    return np.array(
+        [_plane_signs(t, p, dim) for t in range(num_tables) for p in range(num_planes)],
+        dtype=np.float64,
+    ).reshape(num_tables * num_planes, dim).T
+
+
+def _lsh_signatures_udf(num_planes: int, num_tables: int):
     """Arrow-batched signature kernel: all tables' signatures in ONE
-    numpy matmul per batch.
+    numpy matmul per batch, as array<long> (one packed sign word per
+    table).
 
     Spark's higher-order array functions (zip_with/aggregate) are
     interpreted per element — measured ~60 µs per plane-fold, which at
@@ -53,74 +66,31 @@ def _lsh_signatures_udf(num_planes: int, num_tables: int, dim: int):
     is the same deterministic math at memory-bandwidth speed; Arrow
     moves the vectors without pickling. This is the documented 'Python
     is unavoidable → vectorized Pandas UDF, never per-row' escape hatch.
+
+    ``dim`` is the batch's vector length (``_plane_matrix``). Vectors
+    of unequal length within one batch cannot stack and raise.
     """
     from pyspark.sql.functions import pandas_udf
 
-    # num_planes=0 is the DEGENERATE-EXACT mode: every row signs to 0,
-    # one bucket per table, LSH recall becomes 1.0 by construction —
-    # the configuration the oracle-twin queries use to value-check the
-    # whole candidate→verify machinery against brute force.
-    m = np.array(
-        [
-            _plane_signs(t, p, dim)
-            for t in range(num_tables)
-            for p in range(num_planes)
-        ],
-        dtype=np.float64,
-    ).reshape(num_tables * num_planes, dim).T  # (dim, num_tables*num_planes)
     weights = (np.ones(num_tables)[:, None] * (1 << np.arange(num_planes))[None, :]).astype(
         np.int64
     )  # bit weights per (table, plane)
 
     @pandas_udf("array<long>")
     def sigs(vs: pd.Series) -> pd.Series:
+        # num_planes=0 is the DEGENERATE-EXACT mode: every row signs to
+        # 0, one bucket per table, LSH recall becomes 1.0 by
+        # construction — the configuration the oracle-twin queries use
+        # to value-check the whole candidate→verify machinery against
+        # brute force.
         v = np.vstack(vs.to_numpy())  # (n, dim)
-        bits = (v @ m) > 0  # (n, tables*planes)
+        bits = (v @ _plane_matrix(num_planes, num_tables, v.shape[1])) > 0
         packed = (
             bits.reshape(len(v), num_tables, num_planes) * weights[None, :, :]
         ).sum(axis=2)  # (n, tables)
         return pd.Series(list(packed))
 
     return sigs
-
-
-def signed_random_projection(
-    vec: Column | str, num_planes: int = 16, table: int = 0, dim: int | None = None
-) -> Column:
-    """Random-hyperplane LSH signature (one bigint) for a vector column.
-    sign bit p = (Σ_i ±v_i) > 0.
-
-    With ``dim`` given (the fast path), the ±1 coefficients are baked
-    into the plan as literal arrays — the projection is a pure
-    multiply-add fold, zero per-row hashing. Without ``dim`` the
-    coefficients are derived per-element with xxhash64 (works for
-    mixed-length vectors, ~2 hash calls per element per plane).
-    """
-    v = F.col(vec) if isinstance(vec, str) else vec
-    if num_planes == 0:  # degenerate-exact mode: everything in bucket 0
-        return F.lit(0).cast("long")
-
-    def proj_for(p: int) -> Column:
-        if dim is not None:
-            signs = F.array(*[F.lit(s) for s in _plane_signs(table, p, dim)])
-            terms = F.zip_with(v, signs, lambda x, s: x * s)
-        else:
-            terms = F.zip_with(
-                v,
-                F.sequence(F.lit(0), F.size(v) - 1),
-                lambda x, i: F.when(
-                    F.pmod(F.xxhash64(F.lit(table), F.lit(p), i), F.lit(2)) == 0, x
-                ).otherwise(-x),
-            )
-        return F.aggregate(terms, F.lit(0.0), lambda acc, x: acc + x)
-
-    out: Column | None = None
-    for p in range(num_planes):
-        bit = F.when(proj_for(p) > 0, F.shiftleft(F.lit(1).cast("long"), p)).otherwise(
-            F.lit(0).cast("long")
-        )
-        out = bit if out is None else out + bit
-    return out
 
 
 def topk_lsh(
@@ -133,7 +103,6 @@ def topk_lsh(
     corpus_vec: str = "embedding",
     query_id: str = "query_id",
     query_vec: str = "query_vec",
-    dim: int | None = None,
     max_bucket_size: int = 1000,
     score_round: int | None = None,
 ) -> DataFrame:
@@ -164,30 +133,12 @@ def topk_lsh(
     rounds the cosine BEFORE ranking so float noise can't flip ranks
     across engines.
     """
-    sig_fn = _lsh_signatures_udf(num_planes, num_tables, dim) if dim else None
+    sig_fn = _lsh_signatures_udf(num_planes, num_tables)
 
     def with_sigs(df, id_col, vec_col):
-        if sig_fn is not None:
-            return df.select(
-                id_col, vec_col, F.posexplode(sig_fn(vec_col)).alias("tbl", "sig")
-            )
         return df.select(
-            id_col,
-            vec_col,
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(t).alias("tbl"),
-                            signed_random_projection(
-                                vec_col, num_planes, t, dim=dim
-                            ).alias("sig"),
-                        )
-                        for t in range(num_tables)
-                    ]
-                )
-            ).alias("ts"),
-        ).select(id_col, vec_col, "ts.tbl", "ts.sig")
+            id_col, vec_col, F.posexplode(sig_fn(vec_col)).alias("tbl", "sig")
+        )
 
     c = with_sigs(fan_out(corpus), corpus_id, corpus_vec)
     q = F.broadcast(with_sigs(queries, query_id, query_vec))
@@ -271,7 +222,6 @@ def embedding_near_dup_pairs(
     threshold: float = 0.95,
     num_planes: int | str = 12,
     num_tables: int = 4,
-    dim: int | None = None,
     max_bucket_size: int = 500,
     score_round: int | None = None,
 ) -> DataFrame:
@@ -323,38 +273,6 @@ def embedding_near_dup_pairs(
         target = 32  # auto_num_planes' target_bucket_size default
         num_planes = auto_num_planes(n_rows, target_bucket_size=target)
         rebucket = max(1, int(round(n_rows / target)))
-    if num_planes == 0:
-        # Degenerate-exact mode: every signature is trivially the
-        # constant 0 (no planes → no bits), so every table is ONE
-        # bucket holding the whole (pre-bounded) corpus — skip the
-        # signature computation entirely and go straight to the
-        # id-only pair expansion below.
-        sigs = None
-    elif dim:
-        sig_fn = _lsh_signatures_udf(num_planes, num_tables, dim)
-        sigs = fan_out(df).select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).alias("_v"),
-            F.posexplode(sig_fn(vec_col)).alias("tbl", "sig"),
-        )
-    else:
-        sigs = fan_out(df).select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).alias("_v"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(t).alias("tbl"),
-                            signed_random_projection(
-                                vec_col, num_planes, t, dim=dim
-                            ).alias("sig"),
-                        )
-                        for t in range(num_tables)
-                    ]
-                )
-            ).alias("ts"),
-        ).select("_id", "_v", "ts.tbl", "ts.sig")
     # The cosine verify runs IN-ROW on the expanded pair, BEFORE the
     # cross-table dropDuplicates — its exchange then carries
     # (id_a, id_b, score) at ~28 B/pair instead of two riding vectors
@@ -365,12 +283,13 @@ def embedding_near_dup_pairs(
     # from different tables carry identical scores, so dedup after
     # scoring returns the same rows.
     if num_planes == 0:
-        # Degenerate-exact mode: the whole (pre-bounded) corpus is ONE
-        # bucket per table. Three costs the production path pays are
-        # pure overhead or actively harmful here: the signature UDF
-        # (constant output); the salted count window; the in-row score
-        # (a Generate runs inside its input row's task, so the whole
-        # quadratic verify pins to ONE core); and — the dominant one,
+        # Degenerate-exact mode: every signature is trivially the
+        # constant 0 (no planes → no bits), so the whole (pre-bounded)
+        # corpus is ONE bucket per table. Three costs the production
+        # path pays are pure overhead or actively harmful here: the
+        # signature UDF (constant output); the salted count window; the
+        # in-row score (a Generate runs inside its input row's task, so
+        # the whole quadratic verify pins to ONE core); and — the dominant one,
         # measured — expanding pairs that CARRY the vectors (125k
         # nested-struct pairs × 2×64 doubles built serially in the
         # bucket's task). So: expand ID-ONLY pairs in-row (cheap slim
@@ -436,6 +355,13 @@ def embedding_near_dup_pairs(
     # Production (probabilistic) mode: score IN-ROW before the
     # cross-table dedup — see the shuffle-bytes note above; the many
     # salted groups provide the parallelism the degenerate mode lacks.
+    sigs = fan_out(df).select(
+        F.col(id_col).alias("_id"),
+        F.col(vec_col).alias("_v"),
+        F.posexplode(_lsh_signatures_udf(num_planes, num_tables)(vec_col)).alias(
+            "tbl", "sig"
+        ),
+    )
     if rebucket is not None:
         # auto mode: pin the expected bucket size at the target exactly
         # (see docstring) — pmod keeps the key non-negative.

@@ -300,7 +300,6 @@ def q39_embedding_sim_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=0.3,
         num_planes=0,
         num_tables=1,
-        dim=64,
         max_bucket_size=600,
         score_round=6,
     )
@@ -346,7 +345,6 @@ def q30_embedding_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=5,
         num_planes=0,
         num_tables=1,
-        dim=64,
         max_bucket_size=1_000_000,
         score_round=6,
     )

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ingestao_dados_poli_spark.operators import graph as G
@@ -66,6 +67,17 @@ def test_star_handles_path_graph_within_log_rounds(spark):
     star = G.connected_components(edges, algorithm="star", max_iter=8).collect()
     assert {r.component for r in star} == {0}
     assert len(star) == n
+
+
+@pytest.mark.parametrize("algorithm, max_iter", [("star", 2), ("flood", 3)])
+def test_max_iter_cutoff_raises(spark, algorithm, max_iter):
+    """A 64-node path needs more rounds than ``max_iter`` gives either
+    algorithm; the cutoff must raise rather than return the partial
+    labels (60 and 61 components for these budgets)."""
+    n = 64
+    edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], ["src", "dst"])
+    with pytest.raises(G.NotConvergedError, match=f"max_iter={max_iter}"):
+        G.connected_components(edges, algorithm=algorithm, max_iter=max_iter)
 
 
 def test_star_singletons_and_isolated_nodes(spark):

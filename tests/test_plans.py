@@ -152,10 +152,12 @@ def test_plan_audit_artifact_clean():
     allowed = {
         "q108_funnel",
         "q126_dormant_rich_customers",
+        "q131_pagerank",  # broadcast 1-row keyless pool-sum crossJoin per round
         "q132_versioned_publish",  # 1-row agg x 1-row agg crossJoin
         "q142_quantized_topk",  # same broadcast-query-set shape as q26
         "q172_equidepth_histogram",  # broadcast 1-row quantile bounds
         "q189_resurrected_users",  # three 1-row count aggs crossJoined
+        "q198_basket_lift",  # broadcast 1-row keyless order-count crossJoin
         "q199_chi_square_cells",  # broadcast 1-row grand-total crossJoin
         "q207_join_cardinality_estimate",  # 1-row exact x 1-row estimate
         "q223_kmeans_lloyd",  # broadcast k-row centroid crossJoin per Lloyd round

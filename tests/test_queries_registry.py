@@ -158,6 +158,41 @@ def test_every_library_def_has_a_caller():
     assert orphans == KEPT_WITHOUT_CALLER, sorted(orphans ^ KEPT_WITHOUT_CALLER)
 
 
+def test_resolve_queries_by_number_or_name():
+    from bench import resolve_queries
+
+    assert resolve_queries(["q30"]) == ["q30_embedding_lsh_topk"]
+    assert resolve_queries(["q30_embedding_lsh_topk", "q03"]) == [
+        n for n in Q.QUERIES if n.startswith(("q03_", "q30_"))
+    ]
+    with pytest.raises(SystemExit, match=r"\['q999', 'q30_x'\]"):
+        resolve_queries(["q999", "q30", "q30_x"])
+
+
+def test_check_oracle_rejects_unknown_name_before_spark(monkeypatch, sf_dir):
+    """An unknown query name is a usage error that exits non-zero
+    before any session starts, not a run of zero queries that reports
+    0 failures."""
+    import importlib.util
+    import sys
+    from pathlib import Path
+
+    from ingestao_dados_poli_spark import session
+
+    def no_spark(*a, **k):
+        raise AssertionError("check_oracle started Spark for an unknown name")
+
+    spec = importlib.util.spec_from_file_location(
+        "check_oracle", Path(__file__).parent.parent / "tools" / "check_oracle.py"
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    monkeypatch.setattr(sys, "argv", ["check_oracle.py", sf_dir, "q999"])
+    with pytest.raises(SystemExit, match="q999"):
+        mod.main()
+
+
 def test_readme_counts_match_registry():
     # README's driver-contract block states the registry size; keep it
     # from drifting (round-1 verdict found it stale).

@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from ingestao_dados_poli_spark.functions import vectors as V
@@ -98,6 +100,48 @@ def test_topk_lsh_degenerate_bucket_capped(spark):
         corpus, queries, k=n, num_planes=4, num_tables=2, max_bucket_size=5
     ).collect()
     assert 0 < len(out) <= 5
+
+
+@pytest.mark.parametrize("dim", [8, 64])
+def test_lsh_signatures_match_numpy_reference(spark, dim):
+    """The one LSH kernel reads the vector length from the data and
+    signs against the ``_plane_signs`` hyperplanes: signature bit p of
+    table t is (v · planes[t][p] > 0)."""
+    planes, tables = 6, 3
+    rng = np.random.default_rng(dim)
+    vecs = rng.standard_normal((40, dim))
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>",
+    )
+    sig = SIM._lsh_signatures_udf(planes, tables)("embedding")
+    got = {r.vec_id: list(r.s) for r in df.select("vec_id", sig.alias("s")).collect()}
+    for i, v in enumerate(vecs):
+        want = [
+            sum(
+                1 << p
+                for p in range(planes)
+                if v @ np.array(SIM._plane_signs(t, p, dim)) > 0
+            )
+            for t in range(tables)
+        ]
+        assert got[i] == want
+
+
+@pytest.mark.parametrize("op", ["topk_lsh", "embedding_near_dup_pairs"])
+def test_lsh_ragged_vectors_raise(spark, op):
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0]), (1, [1.0, 0.0])], "vec_id long, embedding array<double>"
+    )
+    if op == "topk_lsh":
+        queries = df.select(
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+        )
+        out = SIM.topk_lsh(df.coalesce(1), queries.coalesce(1), num_planes=4, num_tables=2)
+    else:
+        out = SIM.embedding_near_dup_pairs(df.coalesce(1), num_planes=4, num_tables=2)
+    with pytest.raises(Exception, match="dimensions"):
+        out.collect()
 
 
 def test_nearest_centroid(spark):

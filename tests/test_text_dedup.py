@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
 from ingestao_dados_poli_spark.functions import text as TX
@@ -191,6 +194,47 @@ def test_simhash_hot_bucket_degrades(spark):
     ).collect()
     assert 0 < len(pairs) < n * (n - 1) // 2
     assert all(r.hamming == 0 for r in pairs)
+
+
+def test_hamming_band_pairs_equals_brute_force(spark):
+    """The shared SimHash/aHash band join finds exactly the all-pairs
+    set within the hamming bound when no bucket hits the cap: 200
+    random 64-bit signatures plus 30 planted copies at hamming 1-3."""
+    rng = random.Random(11)
+    sigs = [rng.getrandbits(64) for _ in range(200)]
+    for i in range(30):
+        s = sigs[i]
+        for bit in rng.sample(range(64), 1 + i % 3):
+            s ^= 1 << bit
+        sigs.append(s)
+    df = spark.createDataFrame(
+        [(i, s - (1 << 64) if s >= 1 << 63 else s) for i, s in enumerate(sigs)],
+        "_id long, sig long",
+    )
+    got = {
+        (r.id_a, r.id_b, r.hamming)
+        for r in DD.hamming_band_pairs(df, 4, 16, 3, 1000).collect()
+    }
+    want = {
+        (a, b, bin(sigs[a] ^ sigs[b]).count("1"))
+        for a in range(len(sigs))
+        for b in range(a + 1, len(sigs))
+        if bin(sigs[a] ^ sigs[b]).count("1") <= 3
+    }
+    assert len(want) >= 30
+    assert got == want
+
+
+@pytest.mark.parametrize("op", ["simhash", "ahash"])
+def test_band_join_needs_more_bands_than_max_hamming(spark, op):
+    from ingestao_dados_poli_spark.operators import multimodal as MM
+
+    with pytest.raises(ValueError, match="max_hamming=3"):
+        if op == "simhash":
+            DD.simhash_pairs(_docs(spark), "text", "doc_id", max_hamming=3, num_chunks=3)
+        else:
+            hashes = spark.createDataFrame([(1, 0), (2, 1)], "media_id long, ahash long")
+            MM.ahash_near_dup_pairs(hashes, bands=2, max_hamming=3)
 
 
 def test_fp_store_lifecycle_multi_batch(spark, tmp_path):

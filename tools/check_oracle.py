@@ -6,6 +6,8 @@ names, and order-insensitive values (exact equality after stringify,
 like a value hash would). Usage:
 
     python tools/check_oracle.py [sf_dir] [query ...]
+        (each query a full registry name or its number, e.g. q30; an
+        unknown one exits non-zero before Spark starts)
     python tools/check_oracle.py --json [sf_dir]   # also write
         CORRECTNESS_local.json (full-registry per-query status) —
         the committed, in-repo replacement for the driver's pinned
@@ -14,10 +16,11 @@ like a value hash would). Usage:
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -43,6 +46,7 @@ def main() -> int:
     import duckdb
 
     import __spark_entry__ as entrymod
+    from bench import resolve_queries
     from ingestao_dados_poli_spark.session import get_spark
 
     args = sys.argv[1:]
@@ -50,12 +54,12 @@ def main() -> int:
     if write_json:
         args.remove("--json")
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    only = set(args[1:])
-    if write_json and only:
+    if write_json and args[1:]:
         # never clobber the committed full-registry artifact with a
         # filtered partial report
         print("refusing --json with a query filter: artifact must cover the full registry")
         return 2
+    only = set(resolve_queries(args[1:])) if args[1:] else set()
 
     # no console progress bars: they interleave with the per-query ok/FAIL
     # lines and garble the log (the --json artifact was never affected)
@@ -129,7 +133,6 @@ def main() -> int:
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     if write_json:
         import json
-        import os
 
         out = os.path.join(
             os.path.dirname(os.path.dirname(os.path.abspath(__file__))),

@@ -8,6 +8,8 @@ Runs one query with the noop sink in a fresh session, prints:
 
 Usage:
     python tools/drill_query.py q131_pagerank [--plan-out plans/r07/q131_before.txt]
+
+The query is a full registry name or its number (``q131``).
 """
 
 from __future__ import annotations
@@ -29,7 +31,7 @@ def _get(url: str):
 
 
 def main() -> None:
-    from bench import warmup
+    from bench import resolve_queries, warmup
     from ingestao_dados_poli_spark import queries as q
     from ingestao_dados_poli_spark.session import get_spark
 
@@ -37,12 +39,7 @@ def main() -> None:
     plan_out = None
     if "--plan-out" in sys.argv:
         plan_out = sys.argv[sys.argv.index("--plan-out") + 1]
-    name = args[0]
-    if name not in q.QUERIES:
-        cands = [n for n in q.QUERIES if n.startswith(name)]
-        if len(cands) != 1:
-            raise SystemExit(f"unknown query {name} (candidates: {cands})")
-        name = cands[0]
+    (name,) = resolve_queries(args[:1])
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(

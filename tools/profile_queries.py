@@ -12,7 +12,10 @@ Output: /tmp/profile_r07.json — a per-query dict
   {wall_s, n_jobs, n_stages, n_tasks, exec_run_ms, shuffle_read_b,
    shuffle_write_b, input_b, output_b}
 
-Usage: python tools/profile_queries.py [query-prefix ...]
+Usage: python tools/profile_queries.py [query ...]
+
+Each query is a full registry name or its number (``q30``); see
+``bench.resolve_queries``. No query means the whole registry.
 """
 
 from __future__ import annotations
@@ -32,16 +35,11 @@ def _get(url: str):
 
 
 def main() -> None:
-    from bench import warmup
+    from bench import resolve_queries, warmup
     from ingestao_dados_poli_spark import queries as q
     from ingestao_dados_poli_spark.session import get_spark
 
-    prefixes = sys.argv[1:]
-    names = [
-        n
-        for n in q.QUERIES
-        if not prefixes or any(n == p or n.startswith(p) for p in prefixes)
-    ]
+    names = resolve_queries(sys.argv[1:]) if sys.argv[1:] else list(q.QUERIES)
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(

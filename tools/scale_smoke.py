@@ -241,7 +241,7 @@ def main() -> None:
     warm_vecs = synth_vecs(spark, 500).cache()
     warm_vecs.count()
     time_op(
-        lambda: SIM.embedding_near_dup_pairs(warm_vecs, dim=32, threshold=0.9)
+        lambda: SIM.embedding_near_dup_pairs(warm_vecs, threshold=0.9)
     )
     warm_vecs.unpersist()
     warm_g = synth_edges(spark, 500).cache()
@@ -334,7 +334,7 @@ def main() -> None:
         vecs = synth_vecs(spark, n).cache()
         vecs.count()
         run(res, "embed_neardup", lambda: SIM.embedding_near_dup_pairs(
-            vecs, dim=32, threshold=0.9, num_planes="auto"))
+            vecs, threshold=0.9, num_planes="auto"))
         # Gram matrix: per-batch int64 partial X^T X, d(d+1)/2-cell
         # reduce — time linear in n, shuffle bytes ~CONSTANT (cells
         # per task, never vectors)
@@ -346,7 +346,7 @@ def main() -> None:
         # plane count, so auto-planes must not cost planted recall —
         # only the bucket-cap degradation path could, and this audits it.
         pairs = SIM.embedding_near_dup_pairs(
-            vecs, dim=32, threshold=0.9, num_planes="auto"
+            vecs, threshold=0.9, num_planes="auto"
         ).select(
             F.least("id_a", "id_b").alias("id_a"),
             F.greatest("id_a", "id_b").alias("id_b"),
