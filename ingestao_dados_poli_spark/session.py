@@ -14,6 +14,13 @@ Design notes for 100 TB:
 - Arrow enabled so any Pandas-UDF path (multimodal/vector ops) is
   batch-vectorized instead of row-pickled.
 - Parquet filter pushdown + vectorized reader left at defaults (on).
+
+Two Spark 4 defaults are off for their cold-start cost (see the comments
+in ``DEFAULT_CONF``): ICU case mapping (``upper``/``lower`` use the JVM's,
+as on Spark 3; the two differ on 67 code points each, all case pairs
+added after Unicode 13) and PySpark's per-Column call-site capture.
+``get_spark(extra_conf=...)`` with either key set to ``"true"`` restores
+Spark 4's behaviour.
 """
 
 from __future__ import annotations
@@ -64,7 +71,33 @@ DEFAULT_CONF: dict[str, str] = {
     # timestamp reader path). `_t` reads natively and retries under a
     # scoped flag only when the footer actually carries
     # TIMESTAMP(NANOS).
+
+    # JVM case mapping for upper/lower, as on Spark 3 (the reference's
+    # runtime). Spark 4's default ICU mapping builds a title-case table
+    # over all 1.1M code points on its first use, ~1.8 s once per JVM: a
+    # fresh session's first upper() job took 2.2-2.5 s with ICU and
+    # 0.43-0.49 s without on a 4-core host, and the medallion pays it in
+    # its `employees` zone (`employer_name`, as the reference). The two
+    # mappings differ on 67 code points for each of upper and lower, all
+    # case pairs added after Unicode 13 (e.g. U+2C2F/U+2C5F); initcap
+    # differs on 617 (ß -> "Ss" under ICU), but the package calls no initcap.
+    "spark.sql.icu.caseMappings.enabled": "false",
+    # No PySpark call-site capture. With it on, every Column op costs 4
+    # more py4j round trips (building all 300 registry queries at sf0.001:
+    # 207,754 round trips with it, 114,919 without) and the first captured op
+    # imports IPython (~0.4 s of driver CPU). PySpark reads this once per
+    # process, from the session active at the first Column op. Analysis
+    # errors still name the failing column; they lose only the Python
+    # call-site line.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
+
+# The directory holding this package, put first on the Python workers'
+# path: UDF kernels pickle module-level functions by import path, so a
+# driver that found the package through its own sys.path (not PYTHONPATH
+# or the working directory) would otherwise fail in the worker with
+# "No module named 'ingestao_dados_poli_spark'".
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 # -- Class-data sharing for the driver JVM --------------------------------
@@ -284,6 +317,8 @@ def get_spark(
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_conf:
         conf.update(extra_conf)
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        filter(None, [_PACKAGE_PARENT, conf.get("spark.executorEnv.PYTHONPATH")]))
     conf_dir = _with_class_data_sharing(conf)
     for k, v in conf.items():
         builder = builder.config(k, v)

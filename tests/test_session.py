@@ -4,12 +4,14 @@ plan assumption in the operator docstrings."""
 
 from __future__ import annotations
 
+import json
 import os
 import subprocess
 import sys
 from pathlib import Path
 
 import pytest
+from pyspark.sql import functions as F
 
 from ingestao_dados_poli_spark import session as S
 
@@ -243,3 +245,154 @@ def test_second_session_maps_archive_recorded_by_first(tmp_path):
     with open(archives[0], "r+b") as fh:
         fh.write(b"\0" * 4096)
     assert "shared objects file (top)" not in session("stale")
+
+
+# -- Spark 4 defaults switched off for their cold-start cost -----------------
+
+_ICU = "spark.sql.icu.caseMappings.enabled"
+_CAPTURE = "spark.python.sql.dataFrameDebugging.enabled"
+
+_CONF_SCRIPT = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.errors.utils import is_debugging_enabled
+from ingestao_dados_poli_spark import medallion
+from ingestao_dados_poli_spark.session import get_spark
+
+spark = get_spark("conf-test", extra_conf={"spark.ui.enabled": "false", **json.loads(sys.argv[2])})
+bronze = spark.createDataFrame(
+    [("Banco A", "itaú unibanco"), ("Banco B", "straße"), ("Banco C", None)],
+    ["Nome", "Employer Name"])
+rows = medallion.build_employees_silver(bronze).collect()
+print(json.dumps({
+    "conf": [spark.conf.get(k) for k in sys.argv[3:]],
+    "capture": is_debugging_enabled(),
+    "ipython": "IPython" in sys.modules,
+    "employers": [r.employer_name for r in rows],
+}))
+"""
+
+
+def _fresh_session_env(tmp_path: Path) -> dict[str, str]:
+    """A small driver for a subprocess session; it maps the archive the
+    suite's own session uses."""
+    return {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "2g", "SPARK_GRAFT_CPUS": "2",
+            "SPARK_GRAFT_WAREHOUSE": str(tmp_path / "warehouse")}
+
+
+def test_icu_case_mapping_and_call_site_capture_off(spark):
+    assert spark.conf.get(_ICU) == "false"
+    assert spark.conf.get(_CAPTURE) == "false"
+
+
+@pytest.mark.parametrize("extra,on", [({}, False), ({_ICU: "true", _CAPTURE: "true"}, True)],
+                         ids=["defaults", "spark4-defaults"])
+def test_fresh_session_capture_and_ipython(tmp_path, extra, on):
+    """The medallion's employees zone in a fresh process: by default no
+    call-site capture and so no IPython import (which capture pays on the
+    first Column op); ``extra_conf`` brings both Spark 4 defaults back."""
+    root = str(Path(__file__).resolve().parent.parent)
+    res = subprocess.run(
+        [sys.executable, "-c", _CONF_SCRIPT, root, json.dumps(extra), _ICU, _CAPTURE],
+        env=_fresh_session_env(tmp_path), capture_output=True, text=True, timeout=600)
+    assert res.returncode == 0, res.stderr[-2000:]
+    out = json.loads(res.stdout.strip().splitlines()[-1])
+    assert out["conf"] == [str(on).lower()] * 2
+    assert out["capture"] is on
+    assert out["ipython"] is on
+    assert out["employers"] == ["ITAÚ UNIBANCO", "STRASSE", None]
+
+
+# The code points where ICU case mapping and the JVM's (JDK 17, Unicode
+# 13) differ: the case pairs added in Unicode 14-16, which the JVM leaves
+# unchanged. Lower-case letters that only ICU upper-cases (Vithkuqi
+# U+10597-105BC, Garay U+10D70-10D85, Latin, Cyrillic and Glagolitic
+# additions) ...
+_ICU_ONLY_UPPER = frozenset({
+    0x19B, 0x264, 0x1C8A, 0x2C5F, 0xA7C1, 0xA7CD, 0xA7D1, 0xA7D7, 0xA7D9, 0xA7DB,
+    *range(0x10597, 0x105A2), *range(0x105A3, 0x105B2), *range(0x105B3, 0x105BA),
+    0x105BB, 0x105BC, *range(0x10D70, 0x10D86),
+})
+# ... and their upper-case pairs, which only ICU lower-cases.
+_ICU_ONLY_LOWER = frozenset({
+    0x1C89, 0x2C2F, 0xA7C0, 0xA7CB, 0xA7CC, 0xA7D0, 0xA7D6, 0xA7D8, 0xA7DA, 0xA7DC,
+    *range(0x10570, 0x1057B), *range(0x1057C, 0x1058B), *range(0x1058C, 0x10593),
+    0x10594, 0x10595, *range(0x10D50, 0x10D66),
+})
+
+
+def test_jvm_case_mapping_matches_icu_but_for_new_case_pairs(spark):
+    """``upper``/``lower`` over every code point but the surrogates, in one
+    frame, under both settings: they differ exactly on the pinned case
+    pairs, and on multi-character names not at all."""
+    assert len(_ICU_ONLY_UPPER) == len(_ICU_ONLY_LOWER) == 67
+    hex8 = "lpad(hex(id), 8, '0')"
+    cps = (spark.range(0x110000).where(~F.col("id").between(0xD800, 0xDFFF))
+           # the leading byte-order mark keeps U+FEFF from being read as one
+           .select(F.col("id").alias("cp"),
+                   F.expr(f"decode(unhex(concat('0000FEFF', {hex8})), 'UTF-32')").alias("c")))
+    # every row holds its one code point
+    assert cps.where(f"length(c) <> 1 OR hex(encode(c, 'UTF-32')) <> {hex8}").count() == 0
+
+    def mapped(df, icu: str):
+        with S.scoped_conf(spark, _ICU, icu):
+            return df.select("*", F.upper("c").alias("u"), F.lower("c").alias("l")).localCheckpoint()
+
+    both = mapped(cps, "true").alias("i").join(mapped(cps, "false").alias("j"), "cp")
+    for f, want in (("u", _ICU_ONLY_UPPER), ("l", _ICU_ONLY_LOWER)):
+        diff = both.where(f"i.{f} <> j.{f}").select("cp", "j.c", f"j.{f}").collect()
+        assert {r.cp for r in diff} == want
+        assert all(r[1] == r[2] for r in diff)  # the JVM leaves them unchanged
+
+    names = spark.createDataFrame([(s,) for s in (
+        "BANCO BRADESCO S.A.", "Itaú Unibanco", "caixa econômica federal",
+        "SOCIAL BANK BANCO MÚLTIPLO", "SOCIEDADE DE CRÉDITO, FINANCIAMENTO E INVESTIMENTO",
+        "straße", "ΟΔΟΣ", "İstanbul", "ǆemal",
+    )], ["c"])
+    icu, jvm = (sorted(map(tuple, mapped(names, v).collect())) for v in ("true", "false"))
+    assert icu == jvm
+    assert ("straße", "STRASSE", "straße") in jvm
+
+
+def test_analysis_error_names_column_without_capture(spark):
+    from pyspark.errors import AnalysisException
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert is_debugging_enabled() is False
+    with pytest.raises(AnalysisException, match="nope"):
+        spark.range(3).select("nope")
+
+
+_WORKER_PATH_SCRIPT = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import functions as F
+from ingestao_dados_poli_spark.operators import similarity
+from ingestao_dados_poli_spark.session import get_spark
+
+spark = get_spark("worker-path-test", extra_conf={
+    "spark.ui.enabled": "false", "spark.executorEnv.PYTHONPATH": sys.argv[2]})
+df = spark.createDataFrame(
+    [(0, [1.0, 0.0, 0.0]), (1, [1.0, 0.0, 0.001]), (2, [0.0, 1.0, 0.0])], ["vec_id", "embedding"])
+pairs = similarity.embedding_near_dup_pairs(df, threshold=0.99, num_planes=4, num_tables=8)
+tag = F.udf(lambda x: __import__("caller_helper").tag(x))
+print(sorted((r.id_a, r.id_b) for r in pairs.collect()), spark.range(1).select(tag("id")).first()[0])
+"""
+
+
+def test_workers_import_package_from_any_working_directory(tmp_path):
+    """A driver that found the package through its own sys.path, run from
+    another directory with PYTHONPATH unset: the UDF kernels, pickled by
+    import path, still import in the Python workers, and a caller's own
+    ``spark.executorEnv.PYTHONPATH`` entry stays on the workers' path."""
+    root = str(Path(__file__).resolve().parent.parent)
+    elsewhere, libs = tmp_path / "elsewhere", tmp_path / "libs"
+    elsewhere.mkdir()
+    libs.mkdir()
+    (libs / "caller_helper.py").write_text("def tag(x):\n    return f'helper-{x}'\n")
+    env = _fresh_session_env(tmp_path)
+    env.pop("PYTHONPATH", None)
+    res = subprocess.run([sys.executable, "-c", _WORKER_PATH_SCRIPT, root, str(libs)],
+                         cwd=elsewhere, env=env, capture_output=True, text=True, timeout=600)
+    assert res.returncode == 0, res.stderr[-2000:]
+    assert res.stdout.strip().splitlines()[-1] == "[(0, 1)] helper-0"
