@@ -8,28 +8,33 @@ distributed, so a 100 TB dedup run can pick one canonical document per
 cluster (the min-id member) instead of greedily dropping pair-by-pair
 (which over- or under-deletes depending on pair order).
 
-Two algorithms, AUTO-SELECTED per graph shape (``algorithm="auto"``
-default on ``connected_components``): min-label flooding (rounds =
-diameter, one join+groupBy per round, right for the quasi-clique
-graphs similarity thresholds produce) and the alternating
-large-star/small-star contraction of Kiveris et al., "Connected
-Components in MapReduce and Beyond" (rounds = O(log n) on any shape,
-two join+groupBy passes per round — the hedge for chain-structured
-graphs where diameter explodes). Auto mode probes with a few flood
-rounds and falls back to star when convergence stalls. Both cut
-lineage per round with ``localCheckpoint`` and detect convergence
-with scalar aggregates only; both are property-tested equivalent on
-random graphs.
+``connected_components`` picks its algorithm from the graph itself. It
+probes with a few rounds of min-label flooding (rounds = diameter, one
+join+groupBy per round, right for the quasi-clique graphs similarity
+thresholds produce); if the labels still change after the probe, it
+switches to the alternating large-star/small-star contraction of
+Kiveris et al., "Connected Components in MapReduce and Beyond" (rounds
+= O(log n) on any shape, two join+groupBy passes per round — the hedge
+for chain-structured graphs where diameter explodes). The two are
+property-tested equivalent on random graphs.
 
-Convergence is detected with a single scalar aggregate per round
-(sum of labels strictly decreases until fixpoint) — no driver-side
-data collection beyond one number.
+Every round loop here (both CC algorithms, PageRank, reachability,
+label propagation, shortest path) runs through ``_iterate``: one
+``localCheckpoint`` lineage cut and one driver action per round, and
+convergence read from a scalar fingerprint — no driver-side data
+collection beyond a handful of numbers.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+# flood rounds before connected_components switches to the star
+# contraction: a dedup-shaped graph (diameter 2-4) converges inside them
+_PROBE_ROUNDS = 5
 
 
 class NotConvergedError(RuntimeError):
@@ -54,18 +59,62 @@ def _loop_partitions(df: DataFrame) -> int:
     count (AQE never coalesces a user-specified repartition), keeping
     every round's map side parallel; keying it by the loop's join key
     costs nothing extra and is the co-located placement a bucketed /
-    non-AQE deployment would exploit outright.
-
-    A full AQE-off static-co-partitioning variant (exchange-free
-    per-round joins — checkpoints DO preserve hash placement without
-    AQE) was A/B-measured this round and REJECTED: the conf flip
-    invalidates session plan caches and the fixed-P tiny-task stages
-    cost more than the saved exchanges at bench scale (q194 2.3x,
-    q204 2.1x, q211 1.3x against HEAD). Numbers in
-    OPTIMIZATION_r07.md."""
+    non-AQE deployment would exploit outright. (An AQE-off static
+    co-partitioning variant measured 1.3-2.3x slower on q194, q204 and
+    q211; OPTIMIZATION_r07.md.)"""
     from ingestao_dados_poli_spark.partitioning import shuffle_partitions
 
     return shuffle_partitions(df.sparkSession)
+
+
+def _iterate(
+    step: Callable[[DataFrame | None], DataFrame],
+    state: DataFrame | None,
+    max_rounds: int,
+    fingerprint: list[Column] | None = None,
+) -> tuple[DataFrame | None, bool]:
+    """``state = step(state)`` for at most ``max_rounds`` rounds, with
+    one ``localCheckpoint`` and one driver action per round; returns
+    ``(state, converged)``. The checkpoint truncates the round's
+    LOGICAL plan: a round reads its state twice, so an uncut plan
+    doubles per round (measured: analysis hangs at ~20 rounds).
+
+    With ``fingerprint`` (aggregates over the state) the checkpoint is
+    LAZY and the fingerprint collect, which materializes it, is the
+    action (r07: an eager checkpoint + collect cost ~2 more jobs per
+    round); the loop converges when the fingerprint repeats. Without,
+    the round count is fixed, the EAGER checkpoint is the action (a
+    lazy one lets both next-round references recompute the chain, r07:
+    6x slower), and ``converged`` is True."""
+    # an all-NULL fingerprint (sums over an empty state) already repeats:
+    # an empty state is its own fixpoint
+    prev = (None,) * len(fingerprint or ())
+    for _ in range(max_rounds):
+        state = step(state).localCheckpoint(eager=fingerprint is None)
+        if fingerprint is not None:
+            fp = tuple(state.agg(*fingerprint).collect()[0])
+            if fp == prev:
+                return state, True
+            prev = fp
+    return state, fingerprint is None
+
+
+def _symmetrized(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """(a, b) with both directions of every edge — the frame both
+    connected-components algorithms walk."""
+    sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    sym = sym.union(sym.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    # LAZY localCheckpoint, pinned to P partitions on the join key
+    # (r07, see _loop_partitions): every round re-reads sym, and the
+    # checkpoint's flat LogicalRDD both cuts lineage and gives the
+    # self-joins fresh leaf plans; the explicit repartition keeps the
+    # per-round scans of sym parallel instead of inheriting an
+    # AQE-coalesced 1-2-block layout. No eager materialization action
+    # (the first round's fingerprint materializes the blocks). A/B:
+    # q65 0.88x, q200 0.69x vs the unpinned checkpoint.
+    return sym.repartition(_loop_partitions(sym), "a").localCheckpoint(
+        eager=False
+    )
 
 
 def connected_components(
@@ -75,8 +124,6 @@ def connected_components(
     nodes: DataFrame | None = None,
     node_col: str = "node",
     max_iter: int = 25,
-    algorithm: str = "auto",
-    probe_rounds: int = 5,
 ) -> DataFrame:
     """(node, component) — component = min node id reachable from node.
 
@@ -85,63 +132,25 @@ def connected_components(
     isolated nodes appear as singleton components; defaults to the
     nodes present in ``edges``.
 
-    Three modes (flood and star are property-tested equivalent in
-    ``test_graph.py``):
-
-    - ``"flood"``: min-label flooding, one equi-join + one
-      map-side-combined groupBy per round; rounds = graph DIAMETER.
-      Right for dedup graphs (similarity thresholds produce
-      quasi-cliques, diameter 2-4).
-    - ``"star"``: alternating large-star/small-star contraction
-      (Kiveris et al. 2014, "Connected Components in MapReduce and
-      Beyond"): rounds = O(log n) in the LONGEST PATH, at the cost of
-      two join+groupBy passes per round. The hedge for adversarial
-      shapes — chain-structured link graphs, lineage chains — where
-      flooding's diameter bound explodes. Measured: a 256-node path
-      (diameter 255) converges in 8 star rounds where flooding needs
-      256; on a dense 40-node random graph (quasi-clique, the dedup
-      shape) star takes 2 rounds vs flooding's 4, but each star round
-      is ~2× the work.
-    - ``"auto"`` (default): probe with ``probe_rounds`` flooding
-      rounds — a dedup-shaped graph converges inside the probe and
-      keeps flooding's cheaper rounds; if the label sum is still
-      moving at the probe limit the graph is high-diameter and the
-      run switches to star. Worst case wastes the probe (a handful
-      of cheap rounds) before star's log-round guarantee takes over;
-      callers no longer need to know their graph's shape to avoid
-      the diameter cliff.
-
-    All modes detect convergence with one scalar aggregate per round —
-    no driver-side data collection beyond a handful of numbers. A run
-    that has not converged after ``max_iter`` rounds raises
-    ``NotConvergedError`` instead of returning partial labels.
+    The graph picks the algorithm (the two are property-tested
+    equivalent in ``test_graph.py``). ``_PROBE_ROUNDS`` rounds of
+    min-label flooding (one equi-join + one map-side-combined groupBy
+    per round, graph-DIAMETER rounds) come first: a dedup graph
+    (similarity thresholds produce quasi-cliques, diameter 2-4)
+    converges inside the probe. If the labels still change, the run
+    switches to the large-star/small-star contraction (``_cc_star``):
+    O(log n) rounds in the LONGEST PATH, two join+groupBy passes each
+    — the hedge for chain-shaped graphs. Measured: a 256-node path
+    converges in 8 star rounds where flooding needs 256; on a dense
+    40-node random graph star takes 2 rounds vs flooding's 4, each ~2×
+    the work. A star contraction still changing after ``max_iter``
+    rounds raises ``NotConvergedError`` instead of returning partial
+    labels.
     """
-    if algorithm not in ("auto", "flood", "star"):
-        raise ValueError(
-            f"algorithm must be 'auto', 'flood' or 'star', got {algorithm!r}"
-        )
-    sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    sym = sym.union(sym.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    # LAZY localCheckpoint, pinned to P partitions on the join key
-    # (r07, see _loop_partitions): every round re-reads sym, and the
-    # checkpoint's flat LogicalRDD both cuts lineage and gives the
-    # self-joins fresh leaf plans; the explicit repartition keeps the
-    # per-round scans of sym parallel instead of inheriting an
-    # AQE-coalesced 1-2-block layout. No eager materialization action
-    # (the first round's probe materializes the blocks). A/B: q65
-    # 0.88x, q200 0.69x vs the unpinned checkpoint.
-    sym = sym.repartition(_loop_partitions(sym), "a").localCheckpoint(
-        eager=False
-    )
-
-    if algorithm == "star":
+    sym = _symmetrized(edges, src, dst)
+    out = _cc_flood(sym, _PROBE_ROUNDS)
+    if out is None:
         out = _cc_star(sym, max_iter)
-    elif algorithm == "flood":
-        out = _cc_flood(sym, max_iter)
-    else:
-        out = _cc_flood(sym, probe_rounds, bail_if_unconverged=True)
-        if out is None:
-            out = _cc_star(sym, max_iter)
 
     if nodes is not None:
         all_nodes = nodes.select(F.col(node_col).alias("node")).distinct()
@@ -152,55 +161,33 @@ def connected_components(
     return out
 
 
-def _cc_flood(
-    sym: DataFrame, max_iter: int, bail_if_unconverged: bool = False
-) -> DataFrame | None:
+def _cc_flood(sym: DataFrame, max_rounds: int) -> DataFrame | None:
     """Min-label flooding over a symmetrized edge frame. Floods ONLY
     nodes that appear in some edge — in a dedup run the matched nodes
     are a small fraction of the corpus, and isolated nodes can never
     change label (they're appended as singletons by the caller).
 
-    With ``bail_if_unconverged`` (the auto-mode probe) returns None
-    when the label sum is still strictly decreasing after ``max_iter``
-    rounds — the high-diameter signal that sends the caller to the
-    star contraction instead of flooding for diameter-many rounds."""
-    labels = sym.select(F.col("a").alias("node")).distinct()
-    labels = labels.withColumn("label", F.col("node"))
+    Returns None when the label sum is still strictly decreasing after
+    ``max_rounds`` rounds — the high-diameter signal that sends the
+    caller to the star contraction instead of flooding for
+    diameter-many rounds."""
 
-    prev_sum = None
-    converged = False
-    for _ in range(max_iter):
+    def step(labels: DataFrame) -> DataFrame:
         neighbor = sym.join(
             labels, sym["a"] == labels["node"]
         ).select(F.col("b").alias("node"), "label")
-        # LAZY localCheckpoint + ONE scalar action per round (r07): the
-        # sum-collect both detects convergence AND materializes the
-        # checkpoint blocks, replacing the former eager-checkpoint +
-        # collect pair (two actions, ~2 extra jobs/round of pure driver
-        # latency). The checkpoint (not persist) is load-bearing: it
-        # truncates the round's LOGICAL plan to a flat LogicalRDD —
-        # labels appears twice per round, so an untruncated plan doubles
-        # per round and analysis goes exponential (measured: hang at
-        # ~20 rounds).
-        labels = (
+        return (
             labels.unionByName(neighbor)
             .groupBy("node")
             .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=False)
         )
-        cur_sum = labels.agg(F.sum("label")).collect()[0][0]
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
 
+    labels = sym.select(F.col("a").alias("node")).distinct()
+    labels, converged = _iterate(
+        step, labels.withColumn("label", F.col("node")), max_rounds, [F.sum("label")]
+    )
     if not converged:
-        if bail_if_unconverged:
-            return None
-        raise NotConvergedError(
-            f"connected_components(algorithm='flood') still changing after "
-            f"max_iter={max_iter} rounds"
-        )
+        return None
     return labels.select("node", F.col("label").alias("component"))
 
 
@@ -221,18 +208,15 @@ def _cc_star(sym: DataFrame, max_iter: int) -> DataFrame:
     row per round. At the fixpoint the edge set IS the answer: one
     (node → component-min) star per component."""
     # nodes that appear in any edge — re-attached at the end in case
-    # contraction leaves a root with no outgoing edge
-    # LAZY localCheckpoint (r07): the fingerprint collect of each round
-    # is the single action that materializes the round's blocks; the
-    # checkpoint's flat LogicalRDD keeps per-round plans from compounding
-    # (see _cc_flood).
+    # contraction leaves a root with no outgoing edge. LAZY
+    # localCheckpoints: the first round's fingerprint collect
+    # materializes them.
     endpoints = (
         sym.select(F.col("a").alias("node")).distinct().localCheckpoint(eager=False)
     )
     e = sym.filter(F.col("a") > F.col("b")).distinct().localCheckpoint(eager=False)
 
-    prev_fp = None
-    for _ in range(max_iter):
+    def step(e: DataFrame) -> DataFrame:
         # large-star over the undirected view of e
         und = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         mn = (
@@ -249,30 +233,26 @@ def _cc_star(sym: DataFrame, max_iter: int) -> DataFrame:
         )
         # small-star over the (already larger→smaller) ls edges
         mn2 = ls.groupBy("a").agg(F.min("b").alias("_m"))
-        ss = (
+        return (
             ls.join(mn2, "a")
             .select(F.col("b").alias("a"), F.col("_m").alias("b"))
             .unionByName(mn2.select("a", F.col("_m").alias("b")))
             .filter(F.col("a") > F.col("b"))
             .distinct()
         )
-        e = ss.localCheckpoint(eager=False)
-        fp = tuple(
-            e.agg(
-                F.count(F.lit(1)),
-                F.sum("a"),
-                F.sum("b"),
-                # decimal sum: a long sum of 64-bit hashes overflows
-                # (ANSI mode throws); decimal(38,0) cannot here
-                F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")),
-            ).collect()[0]
-        )
-        if fp == prev_fp:
-            break
-        prev_fp = fp
-    else:
+
+    # decimal hash sum: a long sum of 64-bit hashes overflows (ANSI
+    # mode throws); decimal(38,0) cannot here
+    fingerprint = [
+        F.count(F.lit(1)),
+        F.sum("a"),
+        F.sum("b"),
+        F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")),
+    ]
+    e, converged = _iterate(step, e, max_iter, fingerprint)
+    if not converged:
         raise NotConvergedError(
-            f"connected_components(algorithm='star') still changing after "
+            f"connected_components: star contraction still changing after "
             f"max_iter={max_iter} rounds"
         )
 
@@ -306,8 +286,6 @@ def pagerank_integer(
     src: str = "src",
     dst: str = "dst",
     start_mass: int = 1_000_000,
-    damping_num: int = 17,
-    damping_den: int = 20,
     no_dangling: bool = False,
 ) -> DataFrame:
     """Iterative PageRank in EXACT integer arithmetic — the mass-passing
@@ -354,20 +332,11 @@ def pagerank_integer(
     violated (a node with no out-edge silently vanishes instead of
     pooling its mass). Leave it False unless the graph is symmetric.
     """
-    # Cache the edge list ONCE — every iteration joins it, and without
-    # the cut each round would recompute the (possibly expensive) edge
-    # derivation from scratch. r07: LAZY checkpoints — flat lineage
-    # and fresh leaf plans as before, but the ONLY driver action in
-    # the whole build is the n_nodes count below (which materializes e
-    # and nodes on the way); the former 4 eager materializations + 3
-    # per-iteration checkpoints were ~10 driver-latency-bound actions
-    # that AQE turned into 48 jobs (measured: q131 spent 3.2 s of its
-    # 6.4 s in inter-job gaps alone).
-    #
-    # e is pinned to P partitions on "_s" (r07, see _loop_partitions):
-    # the per-round contribution join scans e once per iteration, and
-    # without the pin those scans inherit an AQE-coalesced 1-2-block
-    # layout. A/B: q131 0.91x vs the unpinned checkpoint.
+    # Cut the edge list ONCE — every round joins it. LAZY checkpoints
+    # (r07): the only driver action before the rounds is the n_nodes
+    # count, which materializes e and nodes on the way (with eager cuts
+    # q131 ran 48 jobs, 3.2 s of it inter-job gaps). e is pinned to P
+    # partitions on "_s" (see _loop_partitions): A/B q131 0.91x.
     e = (
         edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
         .repartition(_loop_partitions(edges), "_s")
@@ -387,7 +356,6 @@ def pagerank_integer(
         # no separate nodes pass, no dangling branch.
         nodes = out_deg.select("node")
         n_nodes = out_deg.count()
-        ranks = nodes.withColumn("mass", F.lit(start_mass).cast("long"))
     else:
         nodes = (
             e.select(F.col("_s").alias("node"))
@@ -396,73 +364,65 @@ def pagerank_integer(
             .localCheckpoint(eager=False)
         )
         n_nodes = nodes.count()  # scalar, config-cardinality driver value
-        ranks = nodes.withColumn("mass", F.lit(start_mass).cast("long"))
-    for _ in range(iterations):
+
+    def give_of(ranks: DataFrame) -> DataFrame:
         if no_dangling:
             # inner join: every rank node has a degree row; give is the
             # unconditional integer quotient
-            give = ranks.join(out_deg, "node").select(
+            return ranks.join(out_deg, "node").select(
                 F.col("node"),
                 F.col("mass"),
                 F.col("_deg"),
-                F.expr(f"(mass * {damping_num}) div ({damping_den} * _deg)")
-                .cast("long")
-                .alias("_give"),
+                F.expr("(mass * 17) div (20 * _deg)").cast("long").alias("_give"),
             )
-        else:
-            with_deg = ranks.join(out_deg, "node", "left")
-            # per-edge integer give; dangling nodes (null degree) give 0
-            give = with_deg.select(
-                F.col("node"),
-                F.col("mass"),
-                F.coalesce(F.col("_deg"), F.lit(0)).alias("_deg"),
-                F.when(
-                    F.col("_deg").isNotNull(),
-                    F.expr(
-                        f"(mass * {damping_num}) div ({damping_den} * _deg)"
-                    ),
-                )
-                .otherwise(F.lit(0))
-                .cast("long")
-                .alias("_give"),
-            )
-        # EAGER checkpoint of GIVE, not ranks (r07): give is the frame
-        # the round reads TWICE (-> contrib and -> pool); cutting HERE
-        # materializes the ranks⋈out_deg join exactly once per round,
-        # where the former ranks checkpoint left that join to recompute
-        # under both references. ranks itself then needs no checkpoint:
-        # its plan is flat over RDD leaves (nodes blocks, contrib over
-        # e+give blocks, broadcast pool), referenced once by the next
-        # round — no compounding, no double-evaluation.
-        give = give.localCheckpoint(eager=True)
+        # per-edge integer give; dangling nodes (null degree) give 0
+        return ranks.join(out_deg, "node", "left").select(
+            F.col("node"),
+            F.col("mass"),
+            F.coalesce(F.col("_deg"), F.lit(0)).alias("_deg"),
+            F.when(F.col("_deg").isNotNull(), F.expr("(mass * 17) div (20 * _deg)"))
+            .otherwise(F.lit(0))
+            .cast("long")
+            .alias("_give"),
+        )
+
+    def ranks_of(give: DataFrame | None) -> DataFrame:
+        if give is None:  # before the first round
+            return nodes.withColumn("mass", F.lit(start_mass).cast("long"))
         contrib = (
             e.join(give.select(F.col("node").alias("_s"), "_give"), "_s")
             .groupBy(F.col("_d").alias("node"))
             .agg(F.sum("_give").alias("_in"))
         )
         pool = give.agg(
-            F.sum(
-                F.col("mass") - F.col("_give") * F.col("_deg")
-            ).alias("_pool")
+            F.sum(F.col("mass") - F.col("_give") * F.col("_deg")).alias("_pool")
         )
         share = F.expr(f"_pool div {n_nodes}")
         if no_dangling:
             # contrib already covers every node (all nodes have
             # in-edges): the all-nodes LEFT re-join is an identity
-            ranks = contrib.crossJoin(F.broadcast(pool)).select(
+            return contrib.crossJoin(F.broadcast(pool)).select(
                 "node",
                 (F.col("_in") + share).cast("long").alias("mass"),
             )
-        else:
-            ranks = nodes.join(contrib, "node", "left").crossJoin(
-                F.broadcast(pool)
-            ).select(
-                "node",
-                (F.coalesce(F.col("_in"), F.lit(0)) + share)
-                .cast("long")
-                .alias("mass"),
-            )
-    return ranks
+        return nodes.join(contrib, "node", "left").crossJoin(
+            F.broadcast(pool)
+        ).select(
+            "node",
+            (F.coalesce(F.col("_in"), F.lit(0)) + share)
+            .cast("long")
+            .alias("mass"),
+        )
+
+    # The loop state is GIVE, not ranks (r07): give is the frame the
+    # round reads TWICE (-> contrib and -> pool); cutting HERE
+    # materializes the ranks⋈out_deg join exactly once per round, where
+    # a ranks cut left that join to recompute under both references.
+    # ranks itself then needs no cut: its plan is flat over RDD leaves
+    # (nodes blocks, contrib over e+give blocks, broadcast pool),
+    # referenced once by the next round.
+    give, _ = _iterate(lambda give: give_of(ranks_of(give)), None, iterations)
+    return ranks_of(give)
 
 
 def triangle_count(
@@ -518,44 +478,48 @@ def bounded_reachability(
     exponential on dense graphs; on out-degree-≤1 function graphs the
     two agree, which is what q194's oracle exploits). Per round: one
     equi-join on the frontier's dst (hash-uniform), one dropDuplicates
-    map-side-combined, one left_anti against reached; frontiers are
-    ``localCheckpoint``-ed so lineage stays flat, and the loop
-    early-exits on an empty frontier via ``isEmpty()`` (a 0/1-row
-    driver probe, not a data collect). Scale shape: cost is bounded by
+    map-side-combined, one left_anti against reached. The loop state
+    is the reached set with its frontier rows flagged; its row count
+    is the round's fingerprint, so the loop stops early once a round
+    adds no pair (an empty frontier). Scale shape: cost is bounded by
     the true k-hop neighborhood size — the anti-join keeps the
     frontier from re-walking old ground, which is what makes BFS on a
     100 TB edge list terminate instead of blowing up path-count-
     exponentially.
     """
-    # LAZY checkpoints (r07): the isEmpty probe is the one action per
-    # round and materializes blocks as it reads (see _cc_flood).
+    if max_depth < 1:
+        raise ValueError(f"max_depth must be >= 1, got {max_depth}")
+    # LAZY checkpoint: the first round's count materializes it
     e = (
         edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
         .filter(F.col("_s").isNotNull() & F.col("_d").isNotNull())
         .distinct()
         .localCheckpoint(eager=False)
     )
-    frontier = e.select(
-        F.col("_s").alias("src"), F.col("_d").alias("dst"), F.lit(1).alias("depth")
-    ).localCheckpoint(eager=False)
-    reached = frontier
-    for d in range(2, max_depth + 1):
+
+    def step(reached: DataFrame) -> DataFrame:
+        frontier = reached.filter("_new")
         nxt = (
             frontier.join(e, frontier["dst"] == e["_s"])
-            .select("src", F.col("_d").alias("dst"), F.lit(d).alias("depth"))
+            .select(
+                "src",
+                F.col("_d").alias("dst"),
+                (F.col("depth") + 1).alias("depth"),
+                F.lit(True).alias("_new"),
+            )
             .join(reached.select("src", "dst"), ["src", "dst"], "left_anti")
             .dropDuplicates(["src", "dst"])
         )
-        # EAGER checkpoint BEFORE the empty-probe: isEmpty touches only
-        # one partition, so a lazy mark would leave the rest
-        # unmaterialized for the next round's DOUBLE reference (join +
-        # reached union) to recompute concurrently (r07)
-        nxt = nxt.localCheckpoint(eager=True)
-        if nxt.isEmpty():
-            break
-        frontier = nxt
-        reached = reached.unionByName(frontier)
-    return reached
+        return reached.withColumn("_new", F.lit(False)).unionByName(nxt)
+
+    reached = e.select(
+        F.col("_s").alias("src"),
+        F.col("_d").alias("dst"),
+        F.lit(1).alias("depth"),
+        F.lit(True).alias("_new"),
+    )
+    reached, _ = _iterate(step, reached, max_depth - 1, [F.count(F.lit(1))])
+    return reached.drop("_new")
 
 
 def label_propagation(
@@ -606,8 +570,8 @@ def label_propagation(
         nodes = sym.select(F.col("_s").alias("node")).distinct()
     else:
         nodes = nodes.select(F.col(node_col).alias("node"))
-    labels = nodes.withColumn("label", F.col("node"))
-    for _ in range(rounds):
+
+    def step(labels: DataFrame) -> DataFrame:
         neigh = (
             sym.join(
                 labels.select(F.col("node").alias("_d"), "label"), "_d"
@@ -636,17 +600,11 @@ def label_propagation(
             )
             .select("node", F.col("_m._l").alias("_new"))
         )
-        labels = (
-            labels.join(winner, "node", "left")
-            .select(
-                "node", F.coalesce("_new", "label").alias("label")
-            )
-            # EAGER checkpoint per round: labels feeds the next round
-            # twice (neighbor join + label join-back); a lazy mark lets
-            # both references recompute the chain concurrently —
-            # measured 6x slower (r07, see pagerank_integer).
-            .localCheckpoint(eager=True)
+        return labels.join(winner, "node", "left").select(
+            "node", F.coalesce("_new", "label").alias("label")
         )
+
+    labels, _ = _iterate(step, nodes.withColumn("label", F.col("node")), rounds)
     return labels
 
 
@@ -672,6 +630,8 @@ def bounded_shortest_path(
     semiring), so dense graphs cannot blow up path-exponentially —
     the property that lets this run on a 100 TB edge list. Keep
     weights integral for cross-engine exactness."""
+    if max_hops < 1:
+        raise ValueError(f"max_hops must be >= 1, got {max_hops}")
     e = (
         edges.select(
             F.col(src).alias("_s"),
@@ -688,7 +648,8 @@ def bounded_shortest_path(
         F.col("_d").alias("dst"),
         F.col("_w").alias("dist"),
     ).localCheckpoint(eager=True)
-    for _ in range(2, max_hops + 1):
+
+    def step(best: DataFrame) -> DataFrame:
         extended = (
             best.join(e, best["dst"] == e["_s"])
             .select(
@@ -697,13 +658,11 @@ def bounded_shortest_path(
                 (best["dist"] + e["_w"]).alias("dist"),
             )
         )
-        best = (
+        return (
             best.unionByName(extended)
             .groupBy("src", "dst")
             .agg(F.min("dist").alias("dist"))
-            # EAGER checkpoint per round: best feeds the next round
-            # twice (extend join + union); lazy marks recompute the
-            # chain per reference (r07, see pagerank_integer)
-            .localCheckpoint(eager=True)
         )
+
+    best, _ = _iterate(step, best, max_hops - 1)
     return best

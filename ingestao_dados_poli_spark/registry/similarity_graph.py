@@ -107,14 +107,15 @@ def q200_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     length-banded levenshtein within (brand, size) blocks — q65's edge
     set), (2) transitive closure into entity clusters
     (``graph.connected_components``), (3) SURVIVORSHIP: one canonical
-    record per cluster by highest retail price (part id tiebreak) via
-    a per-component window rank, plus merged rollup attributes
-    (member count, total price in integer cents). Clusters under 3
-    members filtered out to keep the report to real multi-record
-    entities. Scale shape: pairs are block-bounded, the closure is
-    q65's flooding (diameter-2 dedup graphs), and survivorship is one
-    window over components — no step materializes a cross product.
-    Oracle: recursive-CTE closure + the same window, value-hashed."""
+    record per cluster by highest retail price (part id tiebreak,
+    unpriced parts last), plus merged rollup attributes (member count,
+    total price in integer cents), all in one per-component hash
+    aggregate. Clusters under 3 members filtered out to keep the
+    report to real multi-record entities. Scale shape: pairs are
+    block-bounded, the closure converges inside the flood probe
+    (diameter-2 dedup graphs), and survivorship is one aggregate over
+    components — no step materializes a cross product. Oracle:
+    recursive-CTE closure + a row_number window, value-hashed."""
     part = _t(spark, sf_dir, "part")
     edges = FZ.fuzzy_pairs(
         part.withColumn(
@@ -140,18 +141,22 @@ def q200_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("p_retailprice") * 100).cast("long").alias("price_cents"),
     )
     # ONE aggregation computes survivorship AND the rollup (r08): the
-    # canonical record is argmin by (price DESC, partkey ASC), i.e.
-    # min(struct(-price_cents, p_partkey, p_name)) — struct ordering is
-    # field-by-field and p_partkey is unique, so the name field never
-    # decides and the pick is exactly the old row_number()==1 window
-    # row. Replaces: the per-component sort window, a second shuffle
-    # subtree over members, and the rolled⋈canonical join-back — the
-    # members join is now computed once and feeds one hash agg.
+    # canonical record is argmin by (price DESC NULLS LAST, partkey
+    # ASC), i.e. min(struct(price_cents IS NULL, -price_cents,
+    # p_partkey, p_name)) — struct ordering is field-by-field, and the
+    # leading null flag keeps an unpriced part from winning (Spark
+    # orders a NULL field first; the oracle's DESC puts NULLs last).
+    # p_partkey is unique, so the name field never decides and the
+    # pick is exactly the oracle's row_number()==1 window row. Replaces:
+    # the per-component sort window, a second shuffle subtree over
+    # members, and the rolled⋈canonical join-back — the members join is
+    # now computed once and feeds one hash agg.
     golden = members.groupBy("component").agg(
         F.count(F.lit(1)).cast("long").alias("n_members"),
         F.sum("price_cents").cast("long").alias("total_price_cents"),
         F.min(
             F.struct(
+                F.col("price_cents").isNull().alias("_unpriced"),
                 (-F.col("price_cents")).alias("_np"),
                 F.col("p_partkey").alias("_k"),
                 F.col("p_name").alias("_n"),

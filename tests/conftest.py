@@ -22,3 +22,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(tag, fn)`` runs ``fn()`` under job group ``tag`` and
+    returns how many Spark jobs it ran, read after the listener bus has
+    delivered every job event (an earlier read can under-count)."""
+    sc = spark.sparkContext
+
+    def jobs(tag, fn):
+        sc.setJobGroup(tag, tag)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+    return jobs

@@ -101,6 +101,20 @@ def test_corpus_graph_misc_empty(spark):
     ).count() == 0
 
 
+def test_graph_round_loops_empty_and_self_loop(spark):
+    """No edges give no rows; one self-loop is its own 1-hop neighbour,
+    its own label and its own cheapest route, with nothing further."""
+    schema = "src long, dst long, w long"
+    for rows, want in (([], set()), ([(7, 7, 5)], {(7, 7, 5)})):
+        edges = spark.createDataFrame(rows, schema)
+        reach = G.bounded_reachability(edges, max_depth=3)
+        assert {tuple(r) for r in reach.collect()} == {(s, d, 1) for s, d, _ in want}
+        lpa = G.label_propagation(edges, rounds=2)
+        assert {tuple(r) for r in lpa.collect()} == {(s, s) for s, _, _ in want}
+        best = G.bounded_shortest_path(edges, max_hops=3)
+        assert {tuple(r) for r in best.collect()} == want
+
+
 def test_round4_operators_empty(spark):
     """Round-4 operator families on empty input: correct empty-with-
     schema results, no crashes."""

@@ -36,66 +36,56 @@ def test_connected_components_two_cliques(spark):
 
 def test_star_equivalent_to_flood_on_random_graphs(spark):
     """Property: the large-star/small-star contraction computes the
-    SAME (node → min-id) labeling as flooding on random graphs of
-    assorted density, including graphs with duplicate/self/reversed
-    edges. (Seeded stdlib RNG, not hypothesis: each case costs Spark
-    jobs, so a handful of seeded draws beats shrinking here.)"""
+    SAME (node → min-id) labeling as flooding run to its fixpoint on
+    random graphs of assorted density, including graphs with
+    duplicate/self/reversed edges. (Seeded stdlib RNG, not hypothesis:
+    each case costs Spark jobs, so a handful of seeded draws beats
+    shrinking here.)"""
     import random
 
     for seed, n, m in [(1, 30, 15), (2, 30, 45), (3, 60, 30), (4, 12, 66)]:
         rng = random.Random(seed)
         e = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
-        edges = spark.createDataFrame(e, ["src", "dst"])
-        flood = {
-            r.node: r.component
-            for r in G.connected_components(edges, algorithm="flood").collect()
-        }
-        star = {
-            r.node: r.component
-            for r in G.connected_components(edges, algorithm="star").collect()
-        }
-        assert star == flood, f"seed={seed}: star != flood"
+        sym = G._symmetrized(spark.createDataFrame(e, ["src", "dst"]), "src", "dst")
+        flood = G._cc_flood(sym, n)  # n rounds exceed any diameter here
+        assert flood is not None, f"seed={seed}: flood did not converge"
+        star = {r.node: r.component for r in G._cc_star(sym, 25).collect()}
+        assert star == {r.node: r.component for r in flood.collect()}, (
+            f"seed={seed}: star != flood"
+        )
 
 
 def test_star_handles_path_graph_within_log_rounds(spark):
-    """The motivating case: a 64-node path (diameter 63) converges for
-    star in O(log n) rounds — max_iter=8 suffices where flooding
-    would need 64 rounds — and still matches flooding's labeling run
-    with an uncapped budget."""
+    """The motivating case: a 64-node path (diameter 63) outlasts the
+    flood probe, and star converges in O(log n) rounds — max_iter=8
+    suffices where flooding would need 64 rounds."""
     n = 64
     edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], ["src", "dst"])
-    star = G.connected_components(edges, algorithm="star", max_iter=8).collect()
+    star = G.connected_components(edges, max_iter=8).collect()
     assert {r.component for r in star} == {0}
     assert len(star) == n
 
 
-@pytest.mark.parametrize("algorithm, max_iter", [("star", 2), ("flood", 3)])
-def test_max_iter_cutoff_raises(spark, algorithm, max_iter):
-    """A 64-node path needs more rounds than ``max_iter`` gives either
-    algorithm; the cutoff must raise rather than return the partial
-    labels (60 and 61 components for these budgets)."""
+def test_max_iter_cutoff_raises(spark):
+    """A 64-node path outlasts the flood probe and needs more star
+    rounds than ``max_iter=2``; the cutoff must raise rather than
+    return the partial labels (60 components)."""
     n = 64
     edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], ["src", "dst"])
-    with pytest.raises(G.NotConvergedError, match=f"max_iter={max_iter}"):
-        G.connected_components(edges, algorithm=algorithm, max_iter=max_iter)
+    with pytest.raises(G.NotConvergedError, match="max_iter=2"):
+        G.connected_components(edges, max_iter=2)
 
 
-def test_star_singletons_and_isolated_nodes(spark):
+def test_star_singletons_and_isolated_nodes(spark, monkeypatch):
+    # a zero-round probe never converges, so star labels this graph
+    monkeypatch.setattr(G, "_PROBE_ROUNDS", 0)
     edges = spark.createDataFrame([(5, 5), (1, 2)], ["src", "dst"])
     nodes = spark.createDataFrame([(1,), (2,), (5,), (9,)], ["node"])
     comps = {
         r.node: r.component
-        for r in G.connected_components(edges, nodes=nodes, algorithm="star").collect()
+        for r in G.connected_components(edges, nodes=nodes).collect()
     }
     assert comps == {1: 1, 2: 1, 5: 5, 9: 9}
-
-
-def test_connected_components_rejects_unknown_algorithm(spark):
-    import pytest
-
-    edges = spark.createDataFrame([(1, 2)], ["src", "dst"])
-    with pytest.raises(ValueError, match="flood"):
-        G.connected_components(edges, algorithm="bfs")
 
 
 def test_component_sizes(spark):
@@ -167,12 +157,12 @@ def test_triangle_count_known_graphs(spark):
 
 
 def test_auto_selects_flood_for_clique_and_star_for_path(spark, monkeypatch):
-    """algorithm='auto' (the default) must keep flooding on a dedup-
-    shaped quasi-clique (converges inside the probe) and switch to the
-    star contraction on a high-diameter path graph — callers should
-    never have to know their graph's shape to dodge the diameter
-    cliff. Asserted by instrumenting _cc_star, plus correctness of
-    the result either way."""
+    """connected_components must keep flooding on a dedup-shaped
+    quasi-clique (converges inside the probe) and switch to the star
+    contraction on a high-diameter path graph — callers never need to
+    know their graph's shape to dodge the diameter cliff. Asserted by
+    instrumenting _cc_star, plus correctness of the result either
+    way."""
     calls = []
     real_star = G._cc_star
 
@@ -190,7 +180,7 @@ def test_auto_selects_flood_for_clique_and_star_for_path(spark, monkeypatch):
     assert {r.component for r in comps} == {0} and len(comps) == 6
     assert calls == []
 
-    # adversarial path: diameter 63 >> probe_rounds — must pick star
+    # adversarial path: diameter 63 >> _PROBE_ROUNDS — must pick star
     n = 64
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], ["src", "dst"]
@@ -318,3 +308,90 @@ def test_label_propagation_tie_breaks_to_smallest_label(spark):
         for r in G.label_propagation(df2, rounds=1).collect()
     }
     assert labels2[9] == 7
+
+
+@pytest.mark.parametrize(
+    "op", [G.bounded_reachability, G.bounded_shortest_path], ids=lambda f: f.__name__
+)
+def test_round_bound_below_one_raises(spark, op):
+    """A bound of 1 keeps exactly the 1-hop rows; a bound below 1 has
+    no answer and raises instead of returning the 1-hop rows."""
+    edges = spark.createDataFrame([(1, 2, 7), (2, 3, 7)], "src long, dst long, w long")
+    bound = "max_depth" if op is G.bounded_reachability else "max_hops"
+    rows = sorted(tuple(r)[:2] for r in op(edges, **{bound: 1}).collect())
+    assert rows == [(1, 2), (2, 3)]
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match=f"{bound} must be >= 1"):
+            op(edges, **{bound: bad})
+
+
+# Spark jobs each round loop ran on a 64-node path (and CC on no edges)
+# under the suite's session (8 shuffle partitions) before the loops
+# shared ``_iterate``; pinned as upper bounds, so a round that gains a
+# driver action fails.
+LOOP_JOB_BOUNDS = {
+    "cc_no_edges": 5,
+    "flood_probe": 32,
+    "star": 66,
+    "pagerank": 31,
+    "reachability": 73,
+    "label_propagation": 15,
+    "shortest_path": 12,
+}
+
+
+@pytest.mark.parametrize("loop", sorted(LOOP_JOB_BOUNDS))
+def test_round_loop_job_count(spark, count_jobs, loop):
+    path = spark.createDataFrame(
+        [(i, i + 1, 1) for i in range(63)], "src long, dst long, w long"
+    )
+    sym = G._symmetrized(path, "src", "dst")
+    no_edges = spark.createDataFrame([], "src long, dst long")
+    out = []
+    run = {
+        "cc_no_edges": lambda: G.connected_components(no_edges),
+        "flood_probe": lambda: G._cc_flood(sym, G._PROBE_ROUNDS),
+        "star": lambda: G._cc_star(sym, 25),
+        "pagerank": lambda: G.pagerank_integer(path, iterations=3),
+        "reachability": lambda: G.bounded_reachability(path, max_depth=10),
+        "label_propagation": lambda: G.label_propagation(path, rounds=2),
+        "shortest_path": lambda: G.bounded_shortest_path(path, max_hops=3),
+    }[loop]
+    assert count_jobs(f"round-loop-{loop}", lambda: out.append(run())) <= (
+        LOOP_JOB_BOUNDS[loop]
+    )
+    if loop == "flood_probe":
+        assert out == [None]  # the path outlasts the probe
+
+
+def test_q200_unpriced_part_is_never_canonical(spark, tmp_path):
+    """q200's survivor is the highest-priced member with unpriced parts
+    last, as in its oracle's ``ORDER BY price_cents DESC`` on DuckDB:
+    a cluster priced (NULL, 5.00, 3.00) keeps the 5.00 part."""
+    import sys
+    from pathlib import Path
+
+    import duckdb
+
+    import __spark_entry__ as entry
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
+    from check_oracle import canon
+
+    con = duckdb.connect()
+    con.execute(
+        f"""COPY (SELECT * FROM (VALUES
+            (1::BIGINT, 'almond antique blue', 'Brand#11', 'T', 5, NULL::DOUBLE),
+            (2, 'almond antique blush', 'Brand#11', 'T', 5, 5.0),
+            (3, 'almond antique bisque', 'Brand#11', 'T', 5, 3.0),
+            (4, 'lace lemon navy', 'Brand#22', 'T', 9, 9.0))
+            AS t(p_partkey, p_name, p_brand, p_type, p_size, p_retailprice))
+        TO '{tmp_path}/part.parquet' (FORMAT parquet)"""
+    )
+    con.execute(f"CREATE VIEW part AS SELECT * FROM '{tmp_path}/part.parquet'")
+    name = "q200_golden_record"
+    got = entry.queries()[name](spark, str(tmp_path)).toPandas()
+    want = con.execute(entry.oracle_sql()[name]).fetchdf()
+    # columns sorted: canonical_name, canonical_partkey, component, ...
+    assert canon(want) == [("almond antique blush", "2", "1", "3", "800")]
+    assert canon(got) == canon(want)

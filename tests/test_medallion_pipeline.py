@@ -163,27 +163,20 @@ def _banks_pipeline(src, out, fmt="csv", transforms=(M.build_banks_silver,)):
     )
 
 
-def test_pipeline_run_adds_no_job_to_the_write(spark, tmp_path, fixture_frames):
+def test_pipeline_run_adds_no_job_to_the_write(
+    spark, count_jobs, tmp_path, fixture_frames
+):
     """The suite rides the sink write: a validated hop runs the jobs the
     bare write runs, with no cache and no separate validation job."""
     banks, _, _ = fixture_frames
     src = str(tmp_path / "bronze_banks")
     banks.write.parquet(src)
     pipe = _banks_pipeline(src, str(tmp_path / "silver_banks"), fmt="parquet")
-    sc = spark.sparkContext
-
-    def jobs(tag, fn):
-        sc.setJobGroup(tag, tag)
-        try:
-            fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return len(sc.statusTracker().getJobIdsForGroup(tag))
-
-    write_only = jobs("pipe-write", lambda: pipe.sink.save(pipe.build(spark)))
+    write_only = count_jobs(
+        "pipe-write", lambda: pipe.sink.save(pipe.build(spark))
+    )
     reports = []
-    validated = jobs("pipe-run", lambda: reports.append(pipe.run(spark)))
+    validated = count_jobs("pipe-run", lambda: reports.append(pipe.run(spark)))
     assert validated == write_only
     assert reports[0]["validation"]["row_count"] == 3
     assert reports[0]["validation"]["success"]

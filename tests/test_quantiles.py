@@ -102,22 +102,14 @@ def test_histogram_bound_raises_typed_error(spark, monkeypatch):
     assert QS.exact_percentiles(df, [], "v", [0.5], 4)[()].values == [4.5]
 
 
-def test_bound_guard_adds_no_job(spark):
+def test_bound_guard_adds_no_job(spark, count_jobs):
     """The capped collect runs the jobs a plain collect of the same
     histogram runs: the exact-value path is one pass."""
-    sc = spark.sparkContext
     df = spark.createDataFrame([(i % 3, i % 7) for i in range(50)], "k long, v long")
-
-    def jobs(tag, fn):
-        sc.setJobGroup(tag, tag)
-        try:
-            fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(tag))
-
-    plain = jobs("qs-plain", lambda: df.groupBy("k", "v").count().collect())
-    op = jobs("qs-op", lambda: QS.exact_percentiles(df, ["k"], "v", [0.5], None))
+    plain = count_jobs("qs-plain", lambda: df.groupBy("k", "v").count().collect())
+    op = count_jobs(
+        "qs-op", lambda: QS.exact_percentiles(df, ["k"], "v", [0.5], None)
+    )
     assert op == plain
 
 
