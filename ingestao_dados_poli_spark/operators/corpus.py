@@ -323,43 +323,19 @@ def boilerplate_ngrams(
     top_k: int = 20,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_key: bool = False,
 ) -> DataFrame:
     """Corpus-wide boilerplate detection: word n-grams ranked by the
     number of DISTINCT documents containing them — the pre-pass an LLM
     data pipeline runs to find repeated headers/footers/licenses worth
     stripping. Returns (ngram, doc_freq), ``top_k`` rows.
 
-    Both variants dedup per-document IN-ROW (``array_distinct`` over
-    the gram array) so the doc-frequency groupBy is the ONLY shuffle —
+    Each document's grams are deduped IN-ROW (``array_distinct`` over
+    the gram array), so the doc-frequency groupBy is the ONLY shuffle —
     a cross-row ``distinct`` before counting would be a second full
-    shuffle that the in-row dedup already guarantees is a no-op.
-
-    ``hash_key=False`` (default): single-pass string-keyed plan, exact
-    lexicographic tie-break (what the q94 oracle checks). The groupBy
-    partial-aggregates map-side, so the shuffle carries per-partition
-    distinct grams, lz4-compressed.
-
-    ``hash_key=True``: the HEAVY shuffle carries ``xxhash64(ngram)``
-    8-byte keys; the winners' strings AND their exact doc_freq are then
-    recovered by a second in-row expansion filtered through the
-    broadcast top-k hash set and recounted BY STRING — the recount
-    group-by touches only rows whose gram hashes into the ≤ top_k
-    winner set, so its shuffle is a few thousand short strings. A hash
-    collision therefore cannot inflate a reported doc_freq or merge two
-    grams into one row; its only residual effect is on candidate
-    SELECTION (a collision-inflated hash could displace the true k-th
-    hash from the phase-1 top-k) — negligible below ~2^32 distinct
-    n-grams (birthday bound), and now the worst case is a missing tail
-    row, not a wrong count. Tie-break at equal doc_freq is
-    lexicographic within the hash-selected pool, same as the default
-    plan. MEASURED trade (tools/scale_smoke.py, 50k synthetic docs):
-    the second scan costs ~1.8x wall-clock locally, and shuffle BYTES
-    drop only ~10% (120 vs 134 MB) because lz4 compresses low-entropy
-    gram text to near hash size. Choose it only when the shuffle — not
-    the scan — is the measured bottleneck: high-entropy corpora (real
-    web text compresses worse than synthetic), very long n-grams, or a
-    doc-frequency shuffle that spills.
+    shuffle that the in-row dedup already guarantees is a no-op. The
+    groupBy partial-aggregates map-side, so the shuffle carries
+    per-partition distinct grams, lz4-compressed. Ties at equal
+    doc_freq break lexicographically (what the q94 oracle checks).
     """
     # NOTE(r07): fan_out here was A/B-measured a 1.35x REGRESSION on
     # q94 (the repartition exchange costs more than the gram expansion
@@ -367,45 +343,11 @@ def boilerplate_ngrams(
     toks = df.select(
         F.col(id_col), F.split(F.col(text_col), " ").alias("_w")
     ).filter(F.size("_w") >= n)
-    grams_arr = _ngram_expr(F.col("_w"), n)
-    if not hash_key:
-        grams = toks.select(
-            id_col, F.explode(F.array_distinct(grams_arr)).alias("ngram")
-        )
-        freq = grams.groupBy("ngram").agg(F.count(F.lit(1)).alias("doc_freq"))
-        return freq.orderBy(F.col("doc_freq").desc(), F.col("ngram")).limit(top_k)
-
-    # Phase 1: doc-frequency per HASH — in-row per-doc dedup, one
-    # 8-byte-key shuffle.
-    hashed = toks.select(
-        id_col,
-        F.explode(
-            F.array_distinct(F.transform(grams_arr, lambda g: F.xxhash64(g)))
-        ).alias("h"),
+    grams = toks.select(
+        id_col, F.explode(F.array_distinct(_ngram_expr(F.col("_w"), n))).alias("ngram")
     )
-    topk = (
-        hashed.groupBy("h")
-        .agg(F.count(F.lit(1)).alias("doc_freq"))
-        .orderBy(F.col("doc_freq").desc(), F.col("h"))
-        .limit(top_k)
-    )
-    # Phase 2: recover strings AND exact counts for the k winners only —
-    # re-expand per-doc-distinct grams in-row, keep those whose hash is
-    # in the broadcast top-k set, recount doc_freq BY STRING. The
-    # recount's group-by keys are the ≤ k winners (+ any colliders), so
-    # this shuffle is tiny; a collision yields two correct rows instead
-    # of one merged wrong one.
-    exact = (
-        toks.select(F.explode(F.array_distinct(grams_arr)).alias("ngram"))
-        .join(
-            F.broadcast(topk.select("h")),
-            F.xxhash64(F.col("ngram")) == F.col("h"),
-            "left_semi",
-        )
-        .groupBy("ngram")
-        .agg(F.count(F.lit(1)).alias("doc_freq"))
-    )
-    return exact.orderBy(F.col("doc_freq").desc(), F.col("ngram")).limit(top_k)
+    freq = grams.groupBy("ngram").agg(F.count(F.lit(1)).alias("doc_freq"))
+    return freq.orderBy(F.col("doc_freq").desc(), F.col("ngram")).limit(top_k)
 
 
 def dedup_spans(

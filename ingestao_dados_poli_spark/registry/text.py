@@ -694,18 +694,13 @@ def q94_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide boilerplate detection: 5-grams ranked by the number
     of DISTINCT documents containing them — the pre-pass an LLM data
     pipeline runs to find repeated headers/footers/licenses worth
-    stripping. Routed through ``corpus.boilerplate_ngrams`` (string
-    key — the measured-better default: one scan, one map-side-combined
-    shuffle; see the operator docstring for the scale_smoke numbers
-    that demoted the hash-keyed variant to opt-in). Exact
-    lexicographic tie-break at equal doc_freq is what DuckDB computes.
-    The two variants are equivalence-tested in test_corpus.py and
-    timed + shuffle-byte-measured side-by-side in
-    tools/scale_smoke.py."""
+    stripping. Routed through ``corpus.boilerplate_ngrams`` (one scan,
+    one map-side-combined shuffle). Exact lexicographic tie-break at
+    equal doc_freq is what DuckDB computes."""
     from ingestao_dados_poli_spark.operators.corpus import boilerplate_ngrams
 
     docs = _t(spark, sf_dir, "documents")
-    return boilerplate_ngrams(docs, n=5, top_k=20, hash_key=False)
+    return boilerplate_ngrams(docs, n=5, top_k=20)
 
 
 

@@ -15,6 +15,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 
+def _with_corrupt_col(reader, schema: StructType, mode: str, corrupt_col: str):
+    """Give ``reader`` the schema, plus ``corrupt_col`` under PERMISSIVE."""
+    if mode == "PERMISSIVE" and corrupt_col not in schema.fieldNames():
+        # COPY before extending: StructType.add mutates in place, and
+        # the caller's schema is often another DataFrame's cached
+        # .schema object — mutating it would make that DataFrame
+        # claim a corrupt-record column it doesn't have.
+        schema = StructType(list(schema.fields)).add(corrupt_col, "string")
+    # Spark writes malformed rows ONLY to the column named by this
+    # option (default '_corrupt_record'); without it a custom
+    # corrupt_col would stay all-NULL and bad rows would pass as
+    # null-padded clean rows.
+    return reader.schema(schema).option("columnNameOfCorruptRecord", corrupt_col)
+
+
 def read_csv(
     spark: SparkSession,
     path: str | list[str],
@@ -38,13 +53,7 @@ def read_csv(
         .options(**options)
     )
     if schema is not None:
-        if mode == "PERMISSIVE" and corrupt_col not in schema.fieldNames():
-            schema = schema.add(corrupt_col, "string")
-        # Spark writes malformed rows ONLY to the column named by this
-        # option (default '_corrupt_record'); without it a custom
-        # corrupt_col would stay all-NULL and bad rows would pass as
-        # null-padded clean rows.
-        reader = reader.schema(schema).option("columnNameOfCorruptRecord", corrupt_col)
+        reader = _with_corrupt_col(reader, schema, mode, corrupt_col)
     return reader.csv(path)
 
 
@@ -80,13 +89,7 @@ def read_json(
     (FAILFAST)."""
     reader = spark.read.option("mode", mode).options(**options)
     if schema is not None:
-        if mode == "PERMISSIVE" and corrupt_col not in schema.fieldNames():
-            # COPY before extending: StructType.add mutates in place, and
-            # the caller's schema is often another DataFrame's cached
-            # .schema object — mutating it would make that DataFrame
-            # claim a corrupt-record column it doesn't have.
-            schema = StructType(list(schema.fields)).add(corrupt_col, "string")
-        reader = reader.schema(schema).option("columnNameOfCorruptRecord", corrupt_col)
+        reader = _with_corrupt_col(reader, schema, mode, corrupt_col)
     return reader.json(path)
 
 

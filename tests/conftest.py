@@ -7,6 +7,7 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from ingestao_dados_poli_spark.obs import harvest  # noqa: E402
 from ingestao_dados_poli_spark.session import get_spark  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -27,17 +28,12 @@ def sf_dir() -> str:
 @pytest.fixture
 def count_jobs(spark):
     """``count_jobs(tag, fn)`` runs ``fn()`` under job group ``tag`` and
-    returns how many Spark jobs it ran, read after the listener bus has
-    delivered every job event (an earlier read can under-count)."""
-    sc = spark.sparkContext
+    returns how many Spark jobs it ran (``obs.harvest``; the micro-batch
+    jobs of streams started inside count too)."""
 
     def jobs(tag, fn):
-        sc.setJobGroup(tag, tag)
-        try:
+        with harvest(spark, tag) as h:
             fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return len(sc.statusTracker().getJobIdsForGroup(tag))
+        return len(h.jobs)
 
     return jobs

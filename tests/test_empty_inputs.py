@@ -86,7 +86,6 @@ def test_relational_family_empty(spark):
 def test_corpus_graph_misc_empty(spark):
     docs = _empty_docs(spark)
     assert CO.boilerplate_ngrams(docs, n=3, top_k=5).count() == 0
-    assert CO.boilerplate_ngrams(docs, n=3, top_k=5, hash_key=True).count() == 0
     edges = spark.createDataFrame([], "src long, dst long")
     assert G.connected_components(edges).count() == 0
     assert G.pagerank_integer(edges, iterations=2).count() == 0

@@ -130,6 +130,19 @@ def test_read_json_does_not_mutate_caller_schema(spark, tmp_path):
     src.select(*src.columns).collect()  # still resolvable
 
 
+def test_read_csv_does_not_mutate_caller_schema(spark, tmp_path):
+    """read_csv extends a COPY of the schema it is given, as read_json
+    does (q156 passes ``docs.schema`` to read_csv)."""
+    src = spark.createDataFrame([(1, "a")], "id long, v string")
+    p = str(tmp_path / "c")
+    src.write.csv(p, header=True)
+    before = src.columns[:]
+    out = read_csv(spark, p, schema=src.schema)
+    assert src.columns == before  # caller schema untouched
+    assert "_corrupt_record" in out.columns
+    src.select(*src.columns).collect()  # still resolvable
+
+
 def test_events_ts_normalizes_both_vintages(spark):
     """SURVEY §8: driver testdata has shipped events.ts as BOTH
     TIMESTAMP(NANOS)-surfaced-as-long and micro TIMESTAMP_NTZ across

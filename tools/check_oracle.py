@@ -72,6 +72,7 @@ def main() -> int:
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     failures = []
+    empty = []  # Spark gave 0 rows, so a comparison checks nothing
     report: dict[str, dict] = {}
     for name, fn in qs.items():
         if only and name not in only:
@@ -85,11 +86,12 @@ def main() -> int:
             print(f"FAIL {name}: spark error {e}")
             continue
         took = round(time.time() - t0, 2)
+        if len(sdf) == 0:
+            empty.append(name)
+            print(f"WARN {name}: 0 rows")
         if name not in oracles:
             report[name] = {"status": "rows_only", "rows": len(sdf), "seconds": took}
             print(f"rows-only {name}: {len(sdf)} rows, {took:.1f}s")
-            if len(sdf) == 0:
-                print(f"  WARN {name}: 0 rows")
             continue
         try:
             odf = con.execute(oracles[name]).fetchdf()
@@ -130,7 +132,10 @@ def main() -> int:
                 "seconds": took,
             }
             print(f"ok   {name}: {len(sdf)} rows, {took:.1f}s")
-    print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
+    print(
+        f"\n{len(failures)} failures" + (f": {failures}" if failures else "")
+        + (f"; {len(empty)} with 0 rows: {empty}" if empty else "")
+    )
     if write_json:
         import json
 

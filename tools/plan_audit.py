@@ -7,8 +7,6 @@ plan and grade it against the antipatterns that kill 100 TB jobs:
   new accidental one is visible in the diff.
 - exchange count    — shuffles per query; the audit records the number
   so a refactor that silently doubles shuffles shows up in review.
-- WholeStageCodegen spans — how much of the plan stays in generated
-  JVM code vs interpreted/Python paths.
 - unpartitioned Window — must only ever sit above an Aggregate
   (bounded cardinality); counted here, proven in
   test_global_windows_are_post_aggregation.
@@ -38,7 +36,6 @@ sys.path.insert(0, ".")
 def audit_plan(plan: str) -> dict:
     return {
         "exchanges": len(re.findall(r"\bExchange\b", plan)),
-        "codegen_spans": len(set(re.findall(r"WholeStageCodegen \((\d+)\)", plan))),
         "cartesian": plan.count("CartesianProduct"),
         "bnlj": plan.count("BroadcastNestedLoopJoin"),
         "sort_merge_joins": plan.count("SortMergeJoin"),

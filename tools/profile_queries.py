@@ -1,18 +1,22 @@
-"""Per-query structural profiler (optimization round 7, guide §1).
+"""Per-query job and stage profile.
 
-Runs every registry query ONCE with the noop sink (same methodology as
-bench.py), labels it with setJobDescription, then harvests the Spark UI
-REST API for per-query job/stage structure: job count, stage count,
-task count, executor run time, shuffle read/write bytes, and Python
-eval presence. Streaming queries launch jobs from stream threads (the
-description is not inherited there), so jobs are ALSO attributed by
-submission-time window.
+Runs each registry query once with the noop sink after ``bench.warmup``
+(the same methodology as bench.py), under its own job group, and reads
+that group's jobs and stages, micro-batch jobs of the streams it starts
+included, through ``ingestao_dados_poli_spark.obs.harvest``.
 
-Output: /tmp/profile_r07.json — a per-query dict
-  {wall_s, n_jobs, n_stages, n_tasks, exec_run_ms, shuffle_read_b,
-   shuffle_write_b, input_b, output_b}
+Output: /tmp/profile_r07.json, a per-query dict
+  {wall_s, jobs, stages, job_ms, tasks, executor_run_ms,
+   shuffle_read_bytes, shuffle_write_bytes, input_bytes, output_bytes}
 
-Usage: python tools/profile_queries.py [query ...]
+Given exactly one query it also prints every job's duration, the gap
+before it and its stages (tasks / executor run ms / shuffle write), and
+the plan's ``tools/plan_audit.audit_plan`` counts; ``--plan-out FILE``
+writes the ``explain("formatted")`` plan to FILE.
+
+Usage:
+    python tools/profile_queries.py [query ...]
+    python tools/profile_queries.py q131 [--plan-out plans/q131.txt]
 
 Each query is a full registry name or its number (``q30``); see
 ``bench.resolve_queries``. No query means the whole registry.
@@ -20,132 +24,88 @@ Each query is a full registry name or its number (``q30``); see
 
 from __future__ import annotations
 
+import contextlib
+import gc
+import io
 import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _get(url: str):
-    with urllib.request.urlopen(url, timeout=30) as r:
-        return json.loads(r.read().decode())
+def print_jobs(name: str, df, h, plan_out: str | None) -> None:
+    from tools.plan_audit import audit_plan
+
+    print(f"\n=== {name}: {len(h.jobs)} jobs ===")
+    dead = 0.0
+    prev_end = None
+    for j in h.jobs:
+        dur = (j.completed_ms - j.submitted_ms) / 1000 if j.completed_ms else float("nan")
+        gap = ""
+        if prev_end is not None:
+            g = (j.submitted_ms - prev_end) / 1000
+            dead += max(g, 0)
+            gap = f" (+{g:.2f}s gap)"
+        prev_end = j.completed_ms or prev_end
+        stages = " ".join(
+            f"s{sid}:{c['tasks']}t/{c['executor_run_ms']}ms/w{c['shuffle_write_bytes'] // 1024}K"
+            for sid, c in sorted(j.stages.items())
+        )
+        print(f"  job {j.id:5d} {dur:6.2f}s{gap:16s} {stages}")
+    print(f"sum inter-job gaps (driver dead time): {dead:.2f}s")
+    print(f"plan: {audit_plan(df._jdf.queryExecution().executedPlan().toString())}")
+    if plan_out:
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
+        os.makedirs(os.path.dirname(plan_out) or ".", exist_ok=True)
+        with open(plan_out, "w") as f:
+            f.write(buf.getvalue())
+        print(f"plan -> {plan_out}")
 
 
 def main() -> None:
     from bench import resolve_queries, warmup
     from ingestao_dados_poli_spark import queries as q
+    from ingestao_dados_poli_spark.obs import harvest
     from ingestao_dados_poli_spark.session import get_spark
 
-    names = resolve_queries(sys.argv[1:]) if sys.argv[1:] else list(q.QUERIES)
+    args = sys.argv[1:]
+    plan_out = None
+    if "--plan-out" in args:
+        i = args.index("--plan-out")
+        plan_out = args[i + 1]
+        del args[i : i + 2]
+    names = resolve_queries(args) if args else list(q.QUERIES)
+    if plan_out and len(names) != 1:
+        raise SystemExit("--plan-out takes exactly one query")
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(
-        "profile",
-        extra_conf={
-            # keep every job/stage for post-hoc attribution (default 1000
-            # evicts the first ~2/3 of a 300-query run)
-            "spark.ui.retainedJobs": "100000",
-            "spark.ui.retainedStages": "100000",
-        },
-    )
+    spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
-    sc = spark.sparkContext
-
     warmup(spark, sf_dir)
 
-    import gc as _gc
-
-    windows: dict[str, tuple[float, float]] = {}
-    wall: dict[str, float] = {}
+    prof: dict[str, dict] = {}
     for i, name in enumerate(names):
-        fn = q.QUERIES[name]
         spark.catalog.clearCache()
-        _gc.collect()
+        gc.collect()
         if i % 24 == 0:
             spark._jvm.System.gc()
-        sc.setJobDescription(name)
-        t0 = time.time()
-        try:
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        except Exception as e:  # record and move on
-            print(f"ERROR {name}: {e}", file=sys.stderr)
-        t1 = time.time()
-        sc.setJobDescription(None)
-        windows[name] = (t0 * 1000, t1 * 1000)
-        wall[name] = round(t1 - t0, 3)
-        print(f"{i + 1}/{len(names)} {name} {wall[name]:.2f}s", flush=True)
-
-    ui = sc.uiWebUrl
-    app = _get(f"{ui}/api/v1/applications")[0]["id"]
-    jobs = _get(f"{ui}/api/v1/applications/{app}/jobs?status=succeeded")
-    jobs += _get(f"{ui}/api/v1/applications/{app}/jobs?status=failed")
-    stages = _get(f"{ui}/api/v1/applications/{app}/stages?status=complete")
-
-    import datetime as dt
-
-    def ms(s: str) -> float:
-        return (
-            dt.datetime.strptime(s[:23], "%Y-%m-%dT%H:%M:%S.%f")
-            .replace(tzinfo=dt.timezone.utc)
-            .timestamp()
-            * 1000
-        )
-
-    stage_by_id: dict[int, dict] = {}
-    for st in stages:
-        # keep latest attempt
-        prev = stage_by_id.get(st["stageId"])
-        if prev is None or st["attemptId"] > prev["attemptId"]:
-            stage_by_id[st["stageId"]] = st
-
-    prof = {
-        n: {
-            "wall_s": wall[n],
-            "n_jobs": 0,
-            "jobs_ms": 0,
-            "n_stages": 0,
-            "n_tasks": 0,
-            "exec_run_ms": 0,
-            "shuffle_read_b": 0,
-            "shuffle_write_b": 0,
-            "input_b": 0,
-            "output_b": 0,
-        }
-        for n in names
-    }
-
-    def find_query(desc: str | None, sub_ms: float) -> str | None:
-        if desc in prof:
-            return desc
-        for n, (a, b) in windows.items():
-            if a <= sub_ms <= b:
-                return n
-        return None
-
-    seen_stage: set[int] = set()
-    for j in jobs:
-        n = find_query(j.get("description"), ms(j["submissionTime"]))
-        if n is None:
-            continue
-        p = prof[n]
-        p["n_jobs"] += 1
-        if j.get("completionTime"):
-            p["jobs_ms"] += ms(j["completionTime"]) - ms(j["submissionTime"])
-        for sid in j["stageIds"]:
-            st = stage_by_id.get(sid)
-            if st is None or sid in seen_stage:
-                continue
-            seen_stage.add(sid)
-            p["n_stages"] += 1
-            p["n_tasks"] += st["numCompleteTasks"]
-            p["exec_run_ms"] += st["executorRunTime"]
-            p["shuffle_read_b"] += st["shuffleReadBytes"]
-            p["shuffle_write_b"] += st["shuffleWriteBytes"]
-            p["input_b"] += st["inputBytes"]
-            p["output_b"] += st["outputBytes"]
+        df = None
+        with harvest(spark, name) as h:
+            t0 = time.time()
+            try:
+                df = q.QUERIES[name](spark, sf_dir)
+                df.write.format("noop").mode("overwrite").save()
+            except Exception as e:  # record and move on
+                print(f"ERROR {name}: {e}", file=sys.stderr)
+            wall = round(time.time() - t0, 3)
+        prof[name] = {"wall_s": wall, **h.totals()}
+        print(f"{i + 1}/{len(names)} {name} {prof[name]['wall_s']:.2f}s", flush=True)
+        if len(names) == 1 and df is not None:
+            print_jobs(name, df, h, plan_out)
 
     out = "/tmp/profile_r07.json"
     with open(out, "w") as f:

@@ -11,11 +11,12 @@ quadratic tail), or they would not survive 100 TB. Usage:
 ``--huge`` adds a third tier at 100x the small size for the
 dedup/similarity family — the 100 TB design claim needs more than one
 10x data point — and the artifact gains ``time_ratio_huge`` (huge vs
-small, i.e. the 100x column). Every operator also records its SHUFFLE
-WRITE DELTA per tier: local wall-clock can't distinguish an in-process
-shuffle from a cluster network shuffle, so bytes are the honest scale
-signal (a superlinear shuffle-byte curve is a cluster bottleneck even
-when local time looks linear).
+small, i.e. the 100x column). Every operator also records the SHUFFLE
+WRITE BYTES of its own job group per tier (``obs.harvest``): local
+wall-clock can't distinguish an in-process shuffle from a cluster
+network shuffle, so bytes are the honest scale signal (a superlinear
+shuffle-byte curve is a cluster bottleneck even when local time looks
+linear).
 """
 
 from __future__ import annotations
@@ -36,6 +37,7 @@ from ingestao_dados_poli_spark.operators import graph as G
 from ingestao_dados_poli_spark.operators import relational as R
 from ingestao_dados_poli_spark.operators import similarity as SIM
 from ingestao_dados_poli_spark.functions import text as TX
+from ingestao_dados_poli_spark.obs import harvest
 from ingestao_dados_poli_spark.session import get_spark
 
 
@@ -172,26 +174,6 @@ def time_op(fn) -> float:
     return round(time.time() - t0, 2)
 
 
-def shuffle_write_bytes(spark) -> int:
-    """Cumulative shuffle-write bytes across all completed stages, via
-    the UI REST API — diff around an operator run to measure ITS
-    shuffle volume. Local wall-clock can't distinguish a narrow-pipe
-    in-process shuffle from a cluster network shuffle; bytes can."""
-    import json as _json
-    import urllib.request
-
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    try:
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app}/stages?status=complete", timeout=10
-        ) as r:
-            stages = _json.load(r)
-        return sum(s.get("shuffleWriteBytes", 0) for s in stages)
-    except Exception:  # pragma: no cover - UI disabled/port clash
-        return -1
-
-
 def main() -> None:
     args = [a for a in sys.argv[1:] if a != "--huge"]
     huge_tier = "--huge" in sys.argv[1:]
@@ -261,11 +243,9 @@ def main() -> None:
     def run(res: dict, name: str, fn) -> None:
         # time AND shuffle-write bytes per op: bytes are the honest
         # cluster-scale signal (a narrow-pipe local shuffle hides cost)
-        b0 = shuffle_write_bytes(spark)
-        res[name] = time_op(fn)
-        b1 = shuffle_write_bytes(spark)
-        if b0 >= 0 and b1 >= 0:  # -1 sentinel (UI off) poisons the delta
-            res[f"{name}_shuffle_mb"] = round((b1 - b0) / 1e6, 2)
+        with harvest(spark, name) as h:
+            res[name] = time_op(fn)
+        res[f"{name}_shuffle_mb"] = round(h.totals()["shuffle_write_bytes"] / 1e6, 2)
 
     tiers = [("small", small), ("big", big)]
     if huge_tier:
@@ -295,15 +275,7 @@ def main() -> None:
         # posting build is one scan + one map-side-combined shuffle
         # of distinct (term, doc) pairs — linear in corpus size
         run(res, "inverted_index", lambda: CO.build_inverted_index(docs))
-        # hash-keyed vs string-keyed boilerplate detection. Measured
-        # result (the reason hash_key is NOT the default): the hash
-        # plan's second scan costs ~1.8x wall locally while lz4
-        # shuffle compression erases most of the 8-byte-key
-        # advantage on low-entropy text (~10% fewer bytes).
-        run(res, "boiler_hash", lambda: CO.boilerplate_ngrams(
-            docs, n=5, top_k=20, hash_key=True))
-        run(res, "boiler_str", lambda: CO.boilerplate_ngrams(
-            docs, n=5, top_k=20, hash_key=False))
+        run(res, "boiler_str", lambda: CO.boilerplate_ngrams(docs, n=5, top_k=20))
         docs.unpersist()
         # hot-bucket degradation: one identical-text bucket of ~n/3
         # members per band. Time must stay ~linear (sampled pairs are
@@ -392,8 +364,8 @@ def main() -> None:
         # tier runs the same round count and per-edge bytes measure the
         # per-round linear cost — the claim q65/q131/q211 ride on at
         # 100 TB. The ops cut lineage with localCheckpoint internally;
-        # those materialization jobs' shuffles are inside the
-        # timed/diffed window.
+        # those materialization jobs run in the op's job group, so
+        # their shuffles count in its bytes.
         g = synth_edges(spark, n).cache()
         g.count()
         run(res, "graph_cc", lambda: G.connected_components(g))
@@ -418,7 +390,7 @@ def main() -> None:
 
     all_ops = ("exact", "span_dedup", "inverted_index", "minhash",
                "minhash_hotbucket", "simhash", "jaccard", "prefix_jaccard",
-               "boiler_hash", "boiler_str", "fuzzy", "embed_neardup",
+               "boiler_str", "fuzzy", "embed_neardup",
                "gram_matrix", "interval_join",
                "graph_cc", "graph_pagerank", "graph_lpa",
                "graph_triangles")
